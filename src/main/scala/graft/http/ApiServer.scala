@@ -7,10 +7,10 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.ExecutionContext
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.DataFrame
 
 import graft.catalog.RunCatalog
 import graft.runner.PipelineRunner
+import graft.util.Json
 
 /** REST monitoring + trigger API (SURVEY.md §2.8 endpoints, §2.10
   * C2/C4/C5), on the JDK's built-in HttpServer — zero extra deps.
@@ -48,12 +48,10 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
   private val MaxUploadBytes = 10 * 1024 * 1024
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  private[graft] val executor = java.util.concurrent.Executors.newFixedThreadPool(4)
+  server.setExecutor(executor)
 
   def boundPort: Int = server.getAddress.getPort
-
-  private def jsonRows(df: DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
 
   private def respond(x: HttpExchange, code: Int, body: String,
                       contentType: String = "application/json"): Unit = {
@@ -76,18 +74,22 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
   private def handle(path: String, method: String, x: HttpExchange): Unit = {
     val q = query(x)
     (method, path.stripSuffix("/").split("/").toList.drop(1)) match {
+      // catalog reads are driver-side rows: these GETs launch no Spark job
       case ("GET", List("runs")) =>
-        respond(x, 200, jsonRows(catalog.listRuns(q.get("pipelineName"), q.get("status"))))
+        respond(x, 200, Json.arr(catalog.listRunRows(q.get("pipelineName"), q.get("status"))
+          .map(catalog.runJson)))
       case ("GET", List("runs", id)) =>
-        val runs = jsonRows(
-          catalog.listRuns().filter(org.apache.spark.sql.functions.col("run_id") === id))
-        if (runs == "[]") respond(x, 404, """{"error":"not found"}""")
-        else respond(x, 200, s"""{"run":$runs,"steps":${jsonRows(catalog.steps(id))}}""")
+        catalog.findRun(id) match {
+          case None => respond(x, 404, """{"error":"not found"}""")
+          case Some(run) =>
+            respond(x, 200, s"""{"run":[${catalog.runJson(run)}],""" +
+              s""""steps":${Json.arr(catalog.stepRows(id).map(catalog.stepJson))}}""")
+        }
       case ("GET", List("runs", id, "logs")) =>
-        respond(x, 200, jsonRows(catalog.listLogs(runId = Some(id))))
+        respond(x, 200, Json.arr(catalog.listLogRows(runId = Some(id)).map(catalog.logJson)))
       case ("GET", List("logs")) =>
-        respond(x, 200, jsonRows(catalog.listLogs(q.get("runId"), q.get("level"),
-          q.get("limit").map(_.toInt).getOrElse(500))))
+        respond(x, 200, Json.arr(catalog.listLogRows(q.get("runId"), q.get("level"),
+          q.get("limit").map(_.toInt).getOrElse(500)).map(catalog.logJson)))
       case ("POST", List("pipeline", "upload")) =>
         val rawBody = x.getRequestBody.readNBytes(MaxUploadBytes + 1)
         if (rawBody.length > MaxUploadBytes) respond(x, 413, """{"error":"upload too large"}""")
@@ -139,31 +141,20 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
         // denominator for a progress bar (reference StepProgress
         // RowsProcessed/RowsTotal pair): the run's batch size, known
         // once Data Pull commits its count
-        val total = scala.util.Try {
-          import org.apache.spark.sql.functions.col
-          catalog.steps(id)
-            .filter(col("step_number") === 1 && col("status") === "Success")
-            .select(col("rows_affected")).collect()
-            .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
-        }.getOrElse(0L)
+        val total = catalog.stepRows(id)
+          .find(s => s.step_number == 1 && s.status == "Success").map(_.rows_affected).getOrElse(0L)
         respond(x, 200, s"""{"runId":"$id","recordsProcessed":$n,"rowsTotal":$total}""")
       // schedule CRUD (C6 — reference ApiServlet schedules endpoints)
       case ("GET", List("schedules")) =>
         // user-supplied fields (name, runAtTime, sourcePath arrive from
         // the create form) must be JSON-escaped: one quote in a name
         // would otherwise break the whole listing for every client
-        def js(v: String): String = "\"" + v.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val rows = schedules.map(_.list()).getOrElse(Seq.empty).map { sc =>
-          s"""{"scheduleId":${js(sc.scheduleId)},"name":${js(sc.name)},"scheduleType":${js(sc.scheduleType)},""" +
-            s""""runAtTime":${js(sc.runAtTime)},"enabled":${sc.enabled},""" +
-            s""""nextRunAt":${sc.nextRunAt.map(v => js(v.toString)).getOrElse("null")}}"""
+          s"""{"scheduleId":${Json.str(sc.scheduleId)},"name":${Json.str(sc.name)},"scheduleType":${Json.str(sc.scheduleType)},""" +
+            s""""runAtTime":${Json.str(sc.runAtTime)},"enabled":${sc.enabled},""" +
+            s""""nextRunAt":${sc.nextRunAt.map(v => Json.str(v.toString)).getOrElse("null")}}"""
         }
-        respond(x, 200, rows.mkString("[", ",", "]"))
+        respond(x, 200, Json.arr(rows))
       case ("POST", List("schedules")) =>
         (schedules, q.get("name"), q.get("scheduleType"), q.get("runAtTime"), q.get("sourcePath")) match {
           case (Some(sr), Some(n), Some(st), Some(at), Some(sp)) =>
@@ -201,19 +192,13 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
         // the session, carrying the engine's own last progress (batch
         // id, rows/sec, event-time watermark) verbatim — the progress
         // and status objects serialize themselves to JSON
-        def js(v: String): String = "\"" + v.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val items = streamSession.map(_.streams.active.toSeq).getOrElse(Seq.empty).map { sq =>
           s"""{"id":"${sq.id}","runId":"${sq.runId}",""" +
-            s""""name":${Option(sq.name).map(js).getOrElse("null")},""" +
+            s""""name":${Option(sq.name).map(Json.str).getOrElse("null")},""" +
             s""""isActive":${sq.isActive},"status":${sq.status.json},""" +
             s""""lastProgress":${Option(sq.lastProgress).map(_.json).getOrElse("null")}}"""
         }
-        respond(x, 200, items.mkString("[", ",", "]"))
+        respond(x, 200, Json.arr(items))
       case ("GET", List("streams", "ledger")) =>
         // streaming funnel observability: per-batch stage counts from
         // a StreamingDedupIngest disposition ledger (written when the
@@ -249,7 +234,7 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
                   .groupBy(col("batch_id"), col("stage"))
                   .agg(count(lit(1)).as("n"))
                   .orderBy(col("batch_id"), col("stage"))
-                respond(x, 200, jsonRows(rows))
+                respond(x, 200, Json.arr(rows.toJSON.collect()))
             }
         }
       case ("POST", List("admin", "sweep-timeouts")) =>
@@ -271,12 +256,16 @@ class ApiServer(catalog: RunCatalog, runner: PipelineRunner,
     try handle(x.getRequestURI.getPath, x.getRequestMethod, x)
     catch {
       case e: Throwable =>
-        try respond(x, 500, s"""{"error":${"\"" + String.valueOf(e.getMessage).replace("\"", "'") + "\""}}""")
+        try respond(x, 500, s"""{"error":${Json.str(String.valueOf(e.getMessage))}}""")
         catch { case _: Throwable => () }
     })
 
   def start(): ApiServer = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+    executor.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+  }
 }
 
 object ApiServer {

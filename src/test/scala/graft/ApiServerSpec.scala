@@ -4,6 +4,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.catalog.RunCatalog
 import graft.http.ApiServer
 import graft.runner.PipelineRunner
@@ -336,5 +340,97 @@ class ApiServerSpec extends SparkSpec {
       val list = get(s"$base/runs").body()
       assert(list.contains(idA) && list.contains(idB))
     } finally api.stop()
+  }
+
+  /** Spark jobs started while `body` ran: a listener records every job
+    * start between two fence jobs (the listener bus delivers in order). */
+  private def jobsDuring(body: => Unit): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def fence(name: String): Unit = {
+      spark.sparkContext.setJobGroup(name, name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains(name) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(groups.contains(name), s"listener never saw $name")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fence("fence-before")
+      body
+      fence("fence-after")
+      val seen = groups.asScala.toSeq
+      seen.indexOf("fence-after") - seen.indexOf("fence-before") - 1
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A catalog of `n` finished runs, one second apart, oldest first:
+    * history rolled into a segment, the newest few runs still appends. */
+  private def historicCatalog(work: String, n: Int): (RunCatalog, Seq[String]) = {
+    var nowMs = 1700000000000L
+    val catalog = new RunCatalog(spark, s"$work/catalog", clock = () => nowMs)
+    val ids = (1 to n).map { i =>
+      nowMs += 1000
+      val id = catalog.startRun("OrdersPipeline")
+      catalog.stepNames.zipWithIndex.foreach { case (name, k) =>
+        catalog.updateStep(id, k + 1, "Running")
+        catalog.log(id, "Info", k + 1, s"$name started")
+        catalog.updateStep(id, k + 1, "Success", 10L * (k + 1))
+      }
+      catalog.finishRun(id, "Success")
+      if (i == n - 3) catalog.compact()
+      id
+    }
+    (catalog, ids)
+  }
+
+  test("the catalog GET endpoints launch no Spark job") {
+    val work = Files.createTempDirectory("graft_api_nojobs").toString
+    val (written, ids) = historicCatalog(work, 12)
+    // a fresh catalog on the dir: its first read loads the segment too
+    val catalog = new RunCatalog(spark, written.dir)
+    val api = new ApiServer(catalog, new PipelineRunner(spark, catalog, work), s"$work/uploads").start()
+    val base = s"http://127.0.0.1:${api.boundPort}"
+    try {
+      val id = ids(ids.size / 2)
+      val paths = Seq("/runs", s"/runs/$id", s"/runs/$id/logs", s"/runs/$id/progress", s"/logs?runId=$id")
+      val bodies = scala.collection.mutable.Map[String, String]()
+      val jobs = jobsDuring(paths.foreach { p =>
+        val r = get(base + p)
+        assert(r.statusCode() == 200, p)
+        bodies(p) = r.body()
+      })
+      assert(jobs == 0, s"$jobs Spark jobs for ${paths.size} GETs")
+      assert(bodies(s"/runs/$id").contains("\"step_name\":\"Migrate\""))
+      assert(bodies(s"/runs/$id/progress").contains("\"rowsTotal\":10"))
+      assert(bodies(s"/logs?runId=$id").contains("Migrate started"))
+      assert(ids.forall(bodies("/runs").contains))
+    } finally api.stop()
+  }
+
+  test("GET /runs/:id finds a run outside the newest 100") {
+    val work = Files.createTempDirectory("graft_api_old").toString
+    val (catalog, ids) = historicCatalog(work, 105)
+    val api = new ApiServer(catalog, new PipelineRunner(spark, catalog, work), s"$work/uploads").start()
+    val base = s"http://127.0.0.1:${api.boundPort}"
+    try {
+      assert(!get(s"$base/runs").body().contains(ids.head))
+      val oldest = get(s"$base/runs/${ids.head}")
+      assert(oldest.statusCode() == 200, oldest.body())
+      assert("\"step_number\"".r.findAllMatchIn(oldest.body()).size == 4, oldest.body())
+    } finally api.stop()
+  }
+
+  test("stop() shuts down the server's thread pool") {
+    val work = Files.createTempDirectory("graft_api_stop").toString
+    val catalog = new RunCatalog(spark, s"$work/catalog")
+    val api = new ApiServer(catalog, new PipelineRunner(spark, catalog, work), s"$work/uploads").start()
+    assert(get(s"http://127.0.0.1:${api.boundPort}/runs").statusCode() == 200)
+    api.stop()
+    assert(api.executor.isTerminated)
   }
 }
