@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.{CacheScope, Fs, Json, ShuffleMeter}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -8,16 +12,15 @@ import org.apache.spark.sql.SparkSession
   * Timing materializes the full physical plan via
   * `queryExecution.toRdd.count()` — a plain `df.count()` would let
   * Catalyst prune away the expensive projections being measured.
+  *
+  * The headline, 10× and 100× tiers share one measurement path
+  * ([[runTier]]); README "Bench tiers" says why each query family is in
+  * its tier.
   */
 object Bench {
 
-  /** Headline set: one representative per operator family (agg, big
-    * join, window, top-n, sessionization, fuzzy dedup, ANN, simhash,
-    * distributed ranking, span masking, SQL merge, IVF multi-probe,
-    * media frame sampling), plus the two end-to-end composites — the
-    * whole curation funnel and eval-set decontamination — which are the
-    * most representative production loads.
-    */
+  /** Headline set: one representative per operator family plus the
+    * end-to-end composites. */
   val headline: Seq[String] = Seq(
     "q1_agg", "q_join_agg", "q_topn", "q_window_rownum", "q_window_running",
     "q_events_sessionize", "q_dedup_exact", "q_minhash_lsh_pairs",
@@ -27,60 +30,52 @@ object Bench {
     "q_frame_sample",
     "q_merge_delete", "q_merge_composite",
     "q_curation_pipeline", "q_decontaminate",
-    // round-14 operator families: broadcast-model scoring, the
-    // postings-heavy span rewrite, sorted-neighborhood dedup (rank
-    // machinery + successor join), and hybrid retrieval fusion
     "q_nb_classify", "q_span_rewrite",
     "q_sorted_neighborhood", "q_rrf_fusion",
-    // round-16 families: multimodal near-dup (codec decode + hamming
-    // bands) and positional contamination spans
     "q_image_neardup", "q_audio_neardup", "q_contamination_span",
-    // round-17 families: cross-modal pair dedup (two candidate
-    // generators + the policy join), iterative integer PageRank
-    // (5 checkpointed rounds), and the multi-system retrieval eval
-    // (postings + three rankings + fused metrics)
     "q_multimodal_neardup", "q_pagerank", "q_retrieval_metrics",
-    // round-18 families: interval-union span coverage (the island
-    // windows over matched positions) and the selective risk-coverage
-    // table (broadcast-grid scoring + the distributed margin ranking)
     "q_span_coverage", "q_selective_risk",
-    // round-18 wave three: iterative dual-score HITS (two edge joins
-    // per round), the native Hilbert-key bit walk + global sort, and
-    // the skew profiler's double global ranking over the key counts
     "q_hits", "q_hilbert_layout", "q_key_skew",
-    // round-18 wave four: LPA community rounds, the until-fixpoint
-    // k-core peel, the celebrity-guarded co-occurrence projection,
-    // and BPE fit+encode (5 training rounds + the map-side merge
-    // folds over the vocabulary frame)
     "q_label_prop", "q_kcore", "q_copurchase", "q_bpe_encode",
-    // round-19 families: the alternating big-star CC rounds (high-
-    // diameter components that min-label propagation cannot touch)
-    // and cluster-level semantic dedup (cells + within-cell code
-    // cosines — the SemDeDup shape)
     "q_cc_bigstar", "q_semantic_dedup",
-    // round-20 families: gaps-and-islands interval merge (running-max
-    // windows inside the user partition), basket association rules
-    // (distinct + guarded self-join + two count joins), and OHLC bars
-    // (one partial-aggregated struct-min/max groupBy)
     "q_interval_merge", "q_assoc_rules", "q_ohlc",
-    // RFM lifecycle scoring: three exact-ntile partition-offset passes
-    // over the customer-grain frame; interval×interval overlap join
-    // (bucketed equi-join + later-start dedup)
     "q_rfm", "q_interval_join",
-    // PMI collocations (three partial-agged counts off one bigram
-    // pass + TakeOrdered top-k), hour-of-day seasonal anomalies, and
-    // ceiling-filtered hard-negative mining
     "q_pmi_terms", "q_seasonal_spikes", "q_hard_negatives",
-    // parallel-prefix CUSUM drift detector (running sum + running min
-    // inside the type partition); label-noise queue (broadcast-grid
-    // NB scoring + distributed margin rank)
     "q_cusum_shift", "q_label_noise",
-    // endpoint-sweep peak concurrency over the distributed
-    // running-sum machinery (never a single-task ORDER BY window);
-    // integer-ppm Fano-factor burstiness
     "q_peak_concurrency", "q_burstiness")
 
-  /** Host-contention sentinel: `q1_agg` re-timed between every
+  /** The most expensive headline queries, re-timed on 10× data. */
+  private val scaleNames = Seq("q1_agg", "q_join_agg", "q_minhash_lsh_pairs",
+    "q_jaccard_pairs", "q_curation_pipeline", "q_merge_sql",
+    "q_merge_composite", "q_span_mask", "q_span_rewrite",
+    "q_sorted_neighborhood", "q_contamination_span",
+    "q_pagerank", "q_hits", "q_label_prop", "q_copurchase",
+    "q_interval_merge", "q_assoc_rules", "q_pmi_terms", "q_cc_bigstar",
+    "q_retrieval_metrics", "q_nb_classify", "q_selective_risk",
+    "q_label_noise", "q_kcore", "q_bpe_encode", "q_rfm", "q_merge_delete")
+
+  /** The opt-in 100× spot check (`SPARK_GRAFT_SCALE100=1`, 25-35 min at
+    * copies=100): the queries whose scale argument leans most on it. */
+  private val scale100Names =
+    Seq("q_pagerank", "q_retrieval_metrics", "q_assoc_rules")
+
+  private[graft] type Lookup = String => (SparkSession, String) => DataFrame
+
+  /** Wall seconds of one full materialization of `name` over `dir`, or
+    * None when it throws. Each execution runs inside CacheScope.loan, so
+    * the engine's internal pins do not leak into the next measurement. */
+  private def timed(spark: SparkSession, lookup: Lookup, dir: String, name: String): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      CacheScope.loan { lookup(name)(spark, dir).queryExecution.toRdd.count(): Unit }
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name on $dir: ${e.getMessage}"); None
+    }
+  }
+
+  /** Host-contention sentinel: `probe` (q1_agg) re-timed between every
     * `every`-th measurement (and once more at each window's close).
     * This VM's noisy neighbors swing identical plans 2-7×; three
     * rounds of cross-round adjudication were spent re-litigating
@@ -94,17 +89,15 @@ object Bench {
     * `q1_agg` regardless of SPARK_GRAFT_QUERIES, and its own timings
     * appear only under the "sentinel" key.
     */
-  private final class Sentinel(spark: SparkSession, sfDir: String, every: Int = 4,
-                               steadyDefault: Double = 1.0) {
+  private[graft] final class Sentinel(probe: () => Unit, every: Int = 4,
+                                      steadyDefault: Double = 1.0) {
     private val marks = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     private var pos = 0
     timeSentinel(): Unit // untimed warm: the first reading would otherwise
                          // carry plan-compile cost and bias the window median
     private def timeSentinel(): Double = {
       val t0 = System.nanoTime()
-      try graft.util.CacheScope.loan {
-        SparkEntry.queries("q1_agg")(spark, sfDir).queryExecution.toRdd.count(): Unit
-      } catch { case e: Throwable => System.err.println(s"[bench] sentinel: ${e.getMessage}") }
+      probe()
       (System.nanoTime() - t0) / 1e9
     }
     /** Call immediately before each timed measurement; returns the
@@ -151,10 +144,78 @@ object Bench {
         around.exists(s => s._2 > 1.5 * m || s._2 * 1.5 < m)
       }
     }
-    def json: String =
-      s"""{"every":$every,"times":[${marks.map(_._2).mkString(",")}],""" +
-        s""""median":$median,"steady":$steady,"tier_contaminated":$tierContaminated}"""
+    def json: String = Json.obj(Seq("every" -> every, "times" -> Json.arr(marks.map(_._2)),
+      "median" -> median, "steady" -> steady, "tier_contaminated" -> tierContaminated))
   }
+
+  /** One tier's measurements: each query's samples in pass order (None
+    * where the pass threw), the tier's sentinel, the queries whose every
+    * sample sat next to a deviant sentinel, and each query's shuffle
+    * totals from the metered pass. */
+  private[graft] final case class Tier(samples: Seq[(String, Seq[Option[Double]])], sentinel: Sentinel,
+                                       suspect: Seq[String], shuffle: Seq[(String, ShuffleMeter.Snap)]) {
+    /** Min over a query's samples, or -1 when any of them threw: a fast
+      * failure's wall time would pass off a crash as a good number. */
+    val times: Seq[(String, Double)] = samples.map { case (n, s) =>
+      n -> (if (s.forall(_.isDefined)) s.flatten.min else -1.0)
+    }
+    /** Sum over the measured queries only. */
+    def total: Double = times.map(_._2).filter(_ >= 0).sum
+    /** The JSON fields every tier emits, in order; a pass that threw is `null`. */
+    def fields: Seq[(String, Any)] = Seq(
+      "passes" -> Json.obj(samples.map { case (n, s) => n -> Json.arr(s.map(_.fold("null")(_.toString))) }),
+      "sentinel" -> sentinel.json,
+      "suspect" -> Json.arr(suspect.map(Json.str)),
+      "shuffle" -> Json.obj(shuffle.map { case (n, s) => n -> s.json }))
+  }
+
+  /** The measurement sequence every tier shares: two timed passes over
+    * `names` on `dir` (the second also meters shuffle rows and bytes),
+    * each measurement bracketed by the sentinel, then one bounded retry
+    * of the queries whose both passes were suspect. `meter` is the run's
+    * one installed [[ShuffleMeter]]; `lookup` resolves query names (a
+    * test passes a fake). */
+  private[graft] def runTier(spark: SparkSession, dir: String, names: Seq[String], meter: ShuffleMeter,
+                             steadyDefault: Double = 1.0, lookup: Lookup = SparkEntry.queries): Tier = {
+    def time(n: String) = timed(spark, lookup, dir, n)
+    val sen = new Sentinel(() => time("q1_agg"): Unit, steadyDefault = steadyDefault)
+    // two passes, min per query: this host has noisy neighbors (load
+    // swings 2-5x with identical plans), so the min is the steady-state
+    // signal, and both passes are emitted so a cross-round regression
+    // is adjudicable from the JSON alone: both slow → real, one → noise
+    val pass1 = names.map { n => val p = sen.mark(); n -> ((p, time(n))) }.toMap
+    // pass 2 also records shuffle rows/bytes: the meter's reset/snapshot
+    // quiescence polling sits OUTSIDE the timed window, and shuffle
+    // volume is a plan property — contention moves seconds, never rows —
+    // so one metered pass is the whole signal
+    val shuffle = Seq.newBuilder[(String, ShuffleMeter.Snap)]
+    val pass2 = names.map { n =>
+      val p = sen.mark()
+      meter.reset()
+      val dt = time(n)
+      shuffle += n -> meter.snapshot()
+      n -> ((p, dt))
+    }.toMap
+    sen.close()
+    // a query is suspect only if BOTH its passes sat next to a deviant
+    // sentinel — one clean pass means the min is a clean sample. Those
+    // get ONE bounded retry (a third sample minutes later usually lands
+    // in a calm moment), each with its own forced sentinel reading.
+    val flagged = names.filter(n => sen.suspect(pass1(n)._1) && sen.suspect(pass2(n)._1))
+    val retry = flagged.map { n => val p = sen.markForced(); n -> ((p, time(n))) }.toMap
+    if (flagged.nonEmpty) sen.close()
+    def samples(n: String) = Seq(pass1(n), pass2(n)) ++ retry.get(n)
+    Tier(names.map(n => n -> samples(n).map(_._2)), sen,
+      names.filter(n => samples(n).forall(s => sen.suspect(s._1))), shuffle.result())
+  }
+
+  /** The bench's JSON line: the headline tier's fields, then `sections`. */
+  private[graft] def headlineJson(t: Tier, sections: Seq[(String, Any)]): String =
+    Json.obj(Seq("metric" -> Json.str("total"), "value" -> t.total, "unit" -> Json.str("sec"),
+      "queries" -> Json.obj(t.times)) ++ t.fields ++ sections)
+
+  private[graft] def scaleJson(copies: Int, t: Tier): String =
+    Json.obj((("copies" -> copies) +: t.times) ++ t.fields)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -174,81 +235,16 @@ object Bench {
     // regression without paying for the whole suite). Unset = all.
     val onlyQ: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    val names = headline.filter(SparkEntry.queries.contains)
-      .filter(n => onlyQ.forall(_.contains(n)))
-    // Each execution runs inside CacheScope.loan: the engine's internal
-    // pins (signature/shingle/postings frames) are released on exit, so
-    // no per-query cache leaks into the next measurement — and the bench
-    // honors the cache contract the library documents instead of
-    // reaching for a session-wide clearCache that would also drop a
-    // user's own caches.
-    // JVM/codegen warmup at the smallest scale so the timed loop
-    // measures steady-state throughput, not JIT compilation.
-    names.foreach { name =>
-      try graft.util.CacheScope.loan {
-        SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count(): Unit
-      }
-      catch { case _: Throwable => () }
-    }
-    // two timed passes, min per query: this host has noisy neighbors
-    // (load swings 2-5x with identical plans); the min is the
-    // steady-state throughput signal. BOTH passes are emitted next to
-    // the min so a cross-round regression is adjudicable from the JSON
-    // alone: both passes slow → real, investigate; one outlier → noise.
-    def timeOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try graft.util.CacheScope.loan {
-        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count(): Unit
-      }
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val sen = new Sentinel(spark, sfDir)
-    def timedPass(): Map[String, (Int, Double)] = {
-      names.map { n => val p = sen.mark(); n -> ((p, timeOnce(n))) }.toMap
-    }
-    val pass1 = timedPass()
-    // pass 2 also captures per-query shuffle rows/bytes (the SURVEY §9
-    // accounting, measured): the meter's reset/snapshot quiescence
-    // polling sits OUTSIDE the timed window, and shuffle volume is a
-    // plan property — contention moves seconds, never rows — so one
-    // metered pass is the whole signal. The same queries re-run in the
-    // scale tier with the same meter, making shuffle GROWTH vs data
-    // size auditable from the JSON alone.
-    val meter = graft.util.ShuffleMeter.install(spark.sparkContext)
-    val shuffles = scala.collection.mutable.LinkedHashMap[String, graft.util.ShuffleMeter.Snap]()
-    val pass2 = names.map { n =>
-      val p = sen.mark()
-      meter.reset()
-      val dt = timeOnce(n)
-      shuffles(n) = meter.snapshot()
-      n -> ((p, dt))
-    }.toMap
-    sen.close()
-    // a query is suspect only if BOTH its passes sat next to a
-    // deviant sentinel — one clean pass means the min is a clean
-    // steady-state sample even if the other pass hit contention.
-    // Suspect-flagged queries get ONE bounded retry (r16 exported a
-    // fully-flagged scale tier; a third sample minutes later usually
-    // lands in a calm moment and rescues the minimum), each retry
-    // carrying its own forced sentinel reading.
-    val flagged = names.filter(n => sen.suspect(pass1(n)._1) && sen.suspect(pass2(n)._1))
-    val retry: Map[String, (Int, Double)] =
-      if (flagged.isEmpty) Map.empty
-      else {
-        val r = flagged.map { n => val p = sen.markForced(); n -> ((p, timeOnce(n))) }.toMap
-        sen.close()
-        r
-      }
-    def samples(n: String): Seq[(Int, Double)] =
-      Seq(pass1(n), pass2(n)) ++ retry.get(n).toSeq
-    val results = names.map(n => n -> samples(n).map(_._2).min)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val passes = names.map(n => "\"" + n + "\":[" + samples(n).map(_._2).mkString(",") + "]")
-      .mkString("{", ",", "}")
-    val suspect = names.filter(n => samples(n).forall(s => sen.suspect(s._1)))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
+    def selected(tier: Seq[String]) = tier.filter(n => onlyQ.forall(_.contains(n)))
+    val queries = SparkEntry.queries
+    val names = selected(headline.filter(queries.contains))
+    val meter = ShuffleMeter.install(spark.sparkContext)
+    // JVM/codegen warm-up on the smallest fixture beside the bench's
+    // (sf0.001), so the timed passes measure steady-state throughput,
+    // not JIT compilation
+    val warmDir = Paths.get(sfDir).resolveSibling("sf0.001").toString
+    names.foreach(n => timed(spark, queries, warmDir, n): Unit)
+    val head = runTier(spark, sfDir, names, meter, lookup = queries)
 
     // Engine-level end-to-end numbers (SURVEY §8): the 4-step pipeline
     // over the reference's two large fixtures — the 100k-row CSV
@@ -257,12 +253,12 @@ object Bench {
     // Generation is outside the timed window; the run is source →
     // extract/clean → transform → merge-load, catalog writes included.
     def pipelineSecs(n: Int): Double = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_bench_pipe_$n")
+      val dir = Files.createTempDirectory(s"graft_bench_pipe_$n")
       val csv = dir.resolve(s"orders_$n.csv")
       val amounts = Seq("15.99", "25.00", "33.50", "45.99", "59.00", "75.25", "99.50",
         "120.00", "150.00", "185.00", "210.00", "275.00", "350.00", "499.99")
       val start = java.time.LocalDate.of(2024, 1, 1)
-      val w = java.nio.file.Files.newBufferedWriter(csv)
+      val w = Files.newBufferedWriter(csv)
       try {
         w.write("OrderId,CustomerId,Amount,OrderDate\n")
         var i = 1
@@ -274,12 +270,12 @@ object Bench {
       val runner = new graft.runner.PipelineRunner(spark,
         new graft.catalog.RunCatalog(spark, s"$dir/catalog"), dir.toString)
       val t0 = System.nanoTime()
-      val res = graft.util.CacheScope.loan { runner.run(csv.toString) }
+      val res = CacheScope.loan { runner.run(csv.toString) }
       val dt = (System.nanoTime() - t0) / 1e9
       if (res.status != "Success") System.err.println(s"[bench] pipeline($n): ${res.status}")
       // repeated bench runs must not fill /tmp with generated CSVs,
       // pipeline stages, and catalogs
-      graft.util.Fs.deleteRecursively(dir)
+      Fs.deleteRecursively(dir)
       dt
     }
     // min-of-two, like the headline set: a single pass on this noisy
@@ -288,29 +284,26 @@ object Bench {
     // outside the timed window inside pipelineSecs).
     // SPARK_GRAFT_PIPE=0 skips the pipeline tier (local iteration)
     val pipeline = if (sys.env.get("SPARK_GRAFT_PIPE").contains("0")) "null" else {
-      val p100k = (pipelineSecs(100000), pipelineSecs(100000))
-      val p1m = (pipelineSecs(1000000), pipelineSecs(1000000))
-      s"""{"fixture_100k_sec":${math.min(p100k._1, p100k._2)},""" +
-        s""""file_1m_sec":${math.min(p1m._1, p1m._2)},""" +
-        s""""passes":{"fixture_100k_sec":[${p100k._1},${p100k._2}],""" +
-        s""""file_1m_sec":[${p1m._1},${p1m._2}]}}"""
+      val p100k = Seq(pipelineSecs(100000), pipelineSecs(100000))
+      val p1m = Seq(pipelineSecs(1000000), pipelineSecs(1000000))
+      Json.obj(Seq("fixture_100k_sec" -> p100k.min, "file_1m_sec" -> p1m.min,
+        "passes" -> Json.obj(Seq("fixture_100k_sec" -> Json.arr(p100k), "file_1m_sec" -> Json.arr(p1m)))))
     }
 
-    val scale = scaleSmoke(spark, sfDir, onlyQ)
-    val scale100 = scale100Smoke(spark, sfDir, onlyQ)
+    val scale = scaleSmoke(spark, sfDir, meter, !sys.env.get("SPARK_GRAFT_SCALE").contains("0"),
+      "SPARK_GRAFT_SCALE_COPIES", 10, selected(scaleNames))
+    val scale100 = scaleSmoke(spark, sfDir, meter, sys.env.get("SPARK_GRAFT_SCALE100").contains("1"),
+      "SPARK_GRAFT_SCALE100_COPIES", 100, selected(scale100Names))
     val streaming = streamingSmoke(spark, sfDir)
 
-    val shuffleJson = shuffles.map { case (k, v) => "\"" + k + "\":" + v.json }
-      .mkString("{", ",", "}")
-
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"sentinel":${sen.json},"suspect":$suspect,"shuffle":$shuffleJson,"pipeline":$pipeline,"scale":$scale,"scale100":$scale100,"streaming":$streaming,"sf":"$sfDir"}"""
+    val json = headlineJson(head, Seq("pipeline" -> pipeline, "scale" -> scale,
+      "scale100" -> scale100, "streaming" -> streaming, "sf" -> Json.str(sfDir)))
     println(json)
     // Also persist to a file the driver can read whole: the per-pass
     // records overflowed the driver's captured stdout tail in round 12,
     // truncating BENCH_r12.json mid-record.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.out.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+    Files.write(Paths.get(outFile),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     spark.stop()
   }
@@ -331,7 +324,7 @@ object Bench {
     if (sys.env.get("SPARK_GRAFT_STREAM").contains("0")) return "null"
     // (docs, admitted, seconds) for one from-scratch ingest run
     def onePass(): Option[(Long, Long, Double)] = {
-      val work = java.nio.file.Files.createTempDirectory("graft_bench_stream")
+      val work = Files.createTempDirectory("graft_bench_stream")
       try {
         import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -349,274 +342,110 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"[bench] streaming pass skipped: ${e.getMessage}")
           None
-      } finally graft.util.Fs.deleteRecursively(work)
+      } finally Fs.deleteRecursively(work)
     }
     val runs = Seq(onePass(), onePass()).flatten
     if (runs.isEmpty) "null"
     else {
       val (n, admitted, _) = runs.head
       val dt = runs.map(_._3).min
-      val passes = runs.map(_._3).mkString("[", ",", "]")
-      s"""{"docs":$n,"batches":5,"admitted":$admitted,"total_sec":$dt,"docs_per_sec":${n / dt},"passes":$passes}"""
+      Json.obj(Seq("docs" -> n, "batches" -> 5, "admitted" -> admitted, "total_sec" -> dt,
+        "docs_per_sec" -> n / dt, "passes" -> Json.arr(runs.map(_._3))))
     }
   }
 
-  /** The most expensive headline queries at `SCALE_COPIES`× the bench
-    * scale factor (default 10× — run at sf0.1 this is an sf1.0-
-    * equivalent): catches plans that only break past local-comfort
-    * sizes (skew, bucket blowup, driver materialization). The scaled
-    * dataset is generated from the bench tables with per-copy key
-    * shifts, and — for documents — per-copy token suffixes, so near-dup
+  /** One scaled tier: `names` at `copies`× the bench scale factor
+    * (`copiesVar`, else `copiesDefault`), on data generated outside the
+    * timed windows and deleted afterwards. `null` when the tier is off
+    * (`enabled` false, non-positive copies, or every query filtered
+    * out); `{"error":...}` when it throws — nothing thrown in here may
+    * escape, the earlier tiers are already measured.
+    */
+  private def scaleSmoke(spark: SparkSession, sfDir: String, meter: ShuffleMeter, enabled: Boolean,
+                         copiesVar: String, copiesDefault: Int, names: Seq[String]): String = {
+    // a malformed copies value falls back to the default
+    val copies = sys.env.get(copiesVar)
+      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(copiesDefault)
+    if (!enabled || copies < 1 || names.isEmpty) return "null"
+    val dir = Files.createTempDirectory("graft_bench_scale")
+    try scaleJson(copies, scaleTier(spark, sfDir, dir.toString, copies, names, meter))
+    catch {
+      case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[bench] scale tier at ${copies}x failed: $msg")
+        Json.obj(Seq("error" -> Json.str(msg)))
+    } finally Fs.deleteRecursively(dir)
+  }
+
+  /** Generate the `copies`× dataset under `dir`, warm it, and run the
+    * tier over it. */
+  private[graft] def scaleTier(spark: SparkSession, sfDir: String, dir: String, copies: Int,
+                               names: Seq[String], meter: ShuffleMeter,
+                               lookup: Lookup = SparkEntry.queries): Tier = {
+    writeScaled(spark, sfDir, dir, copies)
+    // untimed warm pass first: the scaled parquet was JUST written, so
+    // the first execution pays cold page-cache first-touch and
+    // scale-specific codegen — measured at 2-3x the warm time (49.8s vs
+    // 14.0s on identical code), which would waste one of two samples
+    names.foreach(n => timed(spark, lookup, dir, n): Unit)
+    // the sentinel's steady default scales with the copy factor past
+    // 10×: q1_agg over 100× lineitem takes ~5s on a CALM host, and a
+    // steady calibrated for sf0.1 would flag the whole tier on data
+    // size alone. copies ≤ 10 keeps the historical 1.0.
+    runTier(spark, dir, names, meter, steadyDefault = math.max(1.0, copies / 20.0), lookup)
+  }
+
+  /** The scaled dataset: facts copied `copies` times with per-copy key
+    * shifts and — for documents — per-copy token suffixes, so near-dup
     * pair structure replicates per copy instead of exploding
     * quadratically across copies (10 independent shards of the original
     * pair graph ≈ a faithful 10× corpus, where verbatim duplication of
     * every doc would be an adversarial worst case no real corpus has).
     * Dimensions (customer/nation) stay unscaled — dims grow slower than
-    * facts. `SPARK_GRAFT_SCALE=0` skips; generation is outside the
-    * timed windows; the dataset is cleaned up afterwards.
+    * facts. A table is written only when the fixture has it, so a
+    * missing table fails just the queries that read it.
     */
-  // read-heavy representatives plus the write/token-heavy ones:
-  // q_merge_sql exercises bucketed write amplification at 10x the
-  // update volume, q_merge_composite the tuple-hash bucketing on the
-  // same volume, q_span_mask the postings index at 10x tokens
-  private val scaleNames = Seq("q1_agg", "q_join_agg", "q_minhash_lsh_pairs",
-    "q_jaccard_pairs", "q_curation_pipeline", "q_merge_sql",
-    "q_merge_composite", "q_span_mask", "q_span_rewrite",
-    "q_sorted_neighborhood",
-    // round-16: the positional-gram span audit — token-grain like the
-    // span family, plus a broadcast-hop shape worth 10x evidence
-    // (q_jaccard_prefix was measured here and removed: on THIS
-    // corpus's near-unique shingles the plain inverted index wins —
-    // the prefix path's df-ranking window costs a full-postings pass
-    // regardless of threshold; its win condition is collision-heavy
-    // corpora, demonstrated deterministically in DedupSimSpec)
-    "q_contamination_span",
-    // round-19: the iterative graph family at 10× — q_hits and
-    // q_label_prop are top-4 headline costs whose O(iters·|E|)
-    // per-round equi-join + lineage-cut claims were argued but never
-    // measured at scale; q_pagerank and the celebrity-guarded
-    // q_copurchase projection complete the family. Per-copy l_partkey
-    // shifts (below) make the DISTINCT edge set itself grow 10× —
-    // every customer gains 10× distinct part neighbors, the
-    // adversarial densification direction for per-node aggregates —
-    // while raw pre-DISTINCT volume grows 10× on top.
-    "q_pagerank", "q_hits", "q_label_prop", "q_copurchase",
-    // round-20: interval merge at 10× users (islands per user are
-    // size-invariant; only the per-user window grows), association
-    // rules at 10× disjoint baskets (shifted orderkeys keep copies
-    // from merging, so pair work must grow linearly), and PMI
-    // collocations at 10× bigrams (per-copy token suffixes grow the
-    // vocabulary too — the adversarial direction for the count joins)
-    "q_interval_merge", "q_assoc_rules", "q_pmi_terms",
-    // round-19: the alternating-CC rounds at 10× components (the
-    // shifted documents copies replicate the planted high-diameter
-    // chains per shard — 1e7 ≡ 0 mod both segment sizes, so every
-    // copy carries the same path/bridge structure)
-    "q_cc_bigstar",
-    // round-22 (VERDICT r21 item 7): the remaining top-10 headline
-    // costs join the 10× tier — the multi-system retrieval eval
-    // (postings + 4 rankings + metrics, needs scaled embeddings), the
-    // NB classifier family (the r21 tokenize-once pin was a measured
-    // LOCAL cost traded for fewer corpus passes at scale — this tier
-    // is where that trade is adjudicated), the k-core peel, BPE
-    // fit+encode, the RFM triple-ntile pass, and the delete-heavy
-    // merge
-    "q_retrieval_metrics", "q_nb_classify", "q_selective_risk",
-    "q_label_noise", "q_kcore", "q_bpe_encode", "q_rfm", "q_merge_delete")
-
-  /** 100× spot check (VERDICT r21 item 7) for the three queries whose
-    * 100-TB argument leans most on scale evidence: the iterative
-    * integer PageRank, the multi-system retrieval eval, and the
-    * basket self-join. Same generator, warm pass and sentinel
-    * machinery as the 10× tier — only the copy count and the query
-    * list differ.
-    *
-    * OPT-IN (`SPARK_GRAFT_SCALE100=1`): measured at 25-35 minutes per
-    * bench run at copies=100 on this host — more than the entire rest
-    * of the bench — so running it by default would put the driver's
-    * whole BENCH json at timeout risk for a tier it only needs once.
-    * The round's committed spot-check export (bench_r22_scale100.json)
-    * carries the numbers; `SPARK_GRAFT_SCALE100_COPIES` overrides the
-    * factor for cheaper local spot checks.
-    */
-  private val scale100Names =
-    Seq("q_pagerank", "q_retrieval_metrics", "q_assoc_rules")
-
-  private def scale100Smoke(spark: SparkSession, sfDir: String,
-                            onlyQ: Option[Set[String]]): String = {
-    if (!sys.env.get("SPARK_GRAFT_SCALE100").contains("1")) return "null"
-    val copies = sys.env.get("SPARK_GRAFT_SCALE100_COPIES")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(100)
-    if (copies < 1) return "null"
-    val names = scale100Names.filter(n => onlyQ.forall(_.contains(n)))
-    if (names.isEmpty) return "null"
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_scale100")
-    try scaleSmokeIn(spark, sfDir, dir.toString, copies, names)
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] scale100 tier skipped: ${e.getMessage}")
-        "null"
-    } finally graft.util.Fs.deleteRecursively(dir)
-  }
-
-  private def scaleSmoke(spark: SparkSession, sfDir: String,
-                         onlyQ: Option[Set[String]]): String = {
-    if (sys.env.get("SPARK_GRAFT_SCALE").contains("0")) return "null"
-    // a malformed or non-positive copies value skips the tier rather
-    // than aborting; and NOTHING thrown in here may escape — the
-    // headline and pipeline timings are already measured, and losing
-    // the whole JSON line to a scale-tier hiccup would discard them
-    val copies = sys.env.get("SPARK_GRAFT_SCALE_COPIES")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(10)
-    if (copies < 1) return "null"
-    // an all-filtered tier skips BEFORE generating the 10x dataset —
-    // and before the emitter, whose joined times list would otherwise
-    // leave a malformed `{"copies":10,,...}` in the JSON line
-    val names = scaleNames.filter(n => onlyQ.forall(_.contains(n)))
-    if (names.isEmpty) return "null"
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_scale")
-    try scaleSmokeIn(spark, sfDir, dir.toString, copies, names)
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] scale tier skipped: ${e.getMessage}")
-        "null"
-    } finally graft.util.Fs.deleteRecursively(dir)
-  }
-
-  private def scaleSmokeIn(spark: SparkSession, sfDir: String,
-                           dir: String, copies: Int, names: Seq[String]): String = {
-      import org.apache.spark.sql.functions.{col, lit, regexp_replace}
-      def src(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
-      def dest(t: String) = s"$dir/$t.parquet"
-      for (t <- Seq("customer", "nation")) // unscaled dims
-        src(t).write.mode("overwrite").parquet(dest(t))
-      val keyShift = 1000000000L // far above any orderkey at these SFs
-      // l_partkey is ALSO shifted per copy (1e6 apart — far above any
-      // partkey at these SFs, far below the graph queries' +1e7 side
-      // offset): the customer↔part graph family builds DISTINCT edge
-      // sets, and unshifted part keys would dedup the 10 copies back
-      // to the 1× graph — the iterations would measure nothing new.
-      // Shifted parts give every customer 10× distinct neighbors: the
-      // graph itself grows 10× denser, the adversarial direction for
-      // per-node aggregates. No non-graph scale query reads l_partkey.
-      (0 until copies).map(i => src("lineitem")
-        .withColumn("l_orderkey", col("l_orderkey") + lit(i * keyShift))
-        .withColumn("l_partkey", col("l_partkey") + lit(i * 1000000L)))
-        .reduce(_ union _).write.mode("overwrite").parquet(dest("lineitem"))
-      // events for q_pagerank: per-copy user-id shifts in multiples of
-      // 7 (preserving the query's user_id % 7 sampling per copy) and
-      // +1000-year time shifts so hours NEVER collide across copies —
-      // a shared hour would co-pair users across copies and grow the
-      // co-occurrence edge set quadratically in `copies`, the
-      // adversarial worst case no real 10× corpus has. Read through
-      // Tables.t (normalizes the fixture's timestamp physical type).
-      (0 until copies).map(i => graft.Tables.t(spark, sfDir, "events")
-        .withColumn("user_id", col("user_id") + lit(i * 700000000L))
-        .withColumn("ts", org.apache.spark.sql.functions.expr(
-          s"timestampadd(YEAR, ${i * 1000}, ts)")))
-        .reduce(_ union _).write.mode("overwrite").parquet(dest("events"))
-      (0 until copies).map(i => src("orders")
-        .withColumn("o_orderkey", col("o_orderkey") + lit(i * keyShift)))
-        .reduce(_ union _).write.mode("overwrite").parquet(dest("orders"))
-      val docShift = 10000000L // leaves room for the +100k/+200k planted ids
-      (0 until copies).map(i => src("documents")
-        .withColumn("doc_id", col("doc_id") + lit(i * docShift))
-        .withColumn("text",
-          if (i == 0) col("text") else regexp_replace(col("text"), "(\\S+)", "$1_" + i)))
-        .reduce(_ union _).write.mode("overwrite").parquet(dest("documents"))
-      // embeddings follow the documents' per-copy id shift so the
-      // retrieval eval's vec_id == doc_id alignment holds per copy;
-      // vectors repeat per copy (the index grows 10×, every IVF cell
-      // 10× fatter — the adversarial direction for the probe). Max
-      // shifted id stays below the query's +1e9 probe offset at any
-      // copies ≤ 100.
-      (0 until copies).map(i => src("embeddings")
-        .withColumn("vec_id", col("vec_id") + lit(i * docShift)))
-        .reduce(_ union _).write.mode("overwrite").parquet(dest("embeddings"))
-
-      // min of two passes, like the headline set: a single pass on this
-      // noisy host has produced 7x outliers on individual queries, and
-      // these are the numbers the scale argument is judged on. A pass
-      // that THREW reports no timing at all — recording a fast
-      // failure's wall time would let min-of-two pass off a crash as a
-      // good scale number; a failed query surfaces as -1.
-      def timeOnce(n: String): Option[Double] = {
-        val t0 = System.nanoTime()
-        try {
-          graft.util.CacheScope.loan {
-            SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count(): Unit
-          }
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] scale $n: ${e.getMessage}"); None
-        }
-      }
-      // untimed warm pass first: the scaled parquet was JUST written,
-      // so the first execution pays cold page-cache first-touch and
-      // scale-specific codegen — round-13 A/B runs showed that cold
-      // pass at 2-3x the warm time (49.8s vs 14.0s on identical code),
-      // wasting one of only two samples. Warming makes BOTH timed
-      // passes steady-state. (The round-12 "curation 2.2x regression"
-      // was adjudicated this way: r11 and r12 code measure identical
-      // min-of-two in the same host window — 13.88 vs 14.05s — while
-      // the same code+data swings 4x across windows; host noise, not
-      // code.)
-      names.foreach(n => timeOnce(n): Unit)
-      // the scale tier gets its own sentinel on the SCALED dataset —
-      // these are the numbers the 100-TB argument is judged on, and
-      // exactly where past rounds' cross-round alarms turned out to be
-      // window noise (r14 measured 10× data faster than sf0.1). The
-      // steady-state default scales with the copy factor past 10×:
-      // q1_agg over 100× lineitem takes ~5s on a CALM host, and a
-      // steady calibrated for sf0.1 would flag the whole tier as
-      // contaminated on data size alone (observed in the first
-      // r22 100× spot run). copies ≤ 10 keeps the historical 1.0.
-      val sen = new Sentinel(spark, dir,
-        steadyDefault = math.max(1.0, copies / 20.0))
-      def timedPass(): Map[String, (Int, Option[Double])] =
-        names.map { n => val p = sen.mark(); n -> ((p, timeOnce(n))) }.toMap
-      val pass1 = timedPass()
-      // pass 2 is metered like the headline tier's: the same queries'
-      // shuffle rows at sf0.1 and at 10× give the growth ratio the
-      // 100-TB argument rests on, straight from the JSON
-      val meter = graft.util.ShuffleMeter.install(spark.sparkContext)
-      val shuffles = scala.collection.mutable.LinkedHashMap[String, graft.util.ShuffleMeter.Snap]()
-      val pass2 = names.map { n =>
-        val p = sen.mark()
-        meter.reset()
-        val dt = timeOnce(n)
-        shuffles(n) = meter.snapshot()
-        n -> ((p, dt))
-      }.toMap
-      sen.close()
-      // bounded suspect retry, mirroring the headline tier: the r16
-      // export carried an ENTIRE scale tier as suspect — a third
-      // sample with its own forced sentinel usually lands calm and
-      // turns the tier's minima back into trustworthy numbers
-      val flagged = names.filter(n => sen.suspect(pass1(n)._1) && sen.suspect(pass2(n)._1))
-      val retry: Map[String, (Int, Option[Double])] =
-        if (flagged.isEmpty) Map.empty
-        else {
-          val r = flagged.map { n => val p = sen.markForced(); n -> ((p, timeOnce(n))) }.toMap
-          sen.close()
-          r
-        }
-      def samples(n: String): Seq[(Int, Option[Double])] =
-        Seq(pass1(n), pass2(n)) ++ retry.get(n).toSeq
-      val times = names.map { n =>
-        val ok = samples(n).flatMap(_._2)
-        n -> (if (ok.size == samples(n).size) ok.min else -1.0)
-      }
-      // per-pass times for noise adjudication, like the headline set;
-      // a pass that threw records null, not a bogus wall time
-      def fmt(o: Option[Double]) = o.map(_.toString).getOrElse("null")
-      val passes = names.map(n => "\"" + n + "\":[" + samples(n).map(s => fmt(s._2)).mkString(",") + "]")
-        .mkString("{", ",", "}")
-      val suspect = names.filter(n => samples(n).forall(s => sen.suspect(s._1)))
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val shuffleJson = shuffles.map { case (k, v) => "\"" + k + "\":" + v.json }
-        .mkString("{", ",", "}")
-      s"""{"copies":$copies,${times.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")},"passes":$passes,"sentinel":${sen.json},"suspect":$suspect,"shuffle":$shuffleJson}"""
+  private def writeScaled(spark: SparkSession, sfDir: String, dir: String, copies: Int): Unit = {
+    import org.apache.spark.sql.functions.{col, expr, lit, regexp_replace}
+    def has(t: String) = Files.exists(Paths.get(sfDir, s"$t.parquet"))
+    // read through Tables.t, which normalizes the events fixture's
+    // timestamp physical type
+    def write(t: String, df: DataFrame): Unit = df.write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    def copied(t: String)(shift: (DataFrame, Int) => DataFrame): Unit =
+      if (has(t)) write(t, (0 until copies).map(i => shift(Tables.t(spark, sfDir, t), i)).reduce(_ union _))
+    for (t <- Seq("customer", "nation") if has(t)) write(t, Tables.t(spark, sfDir, t))
+    val keyShift = 1000000000L // far above any orderkey at these SFs
+    // l_partkey is ALSO shifted per copy (1e6 apart — far above any
+    // partkey at these SFs, far below the graph queries' +1e7 side
+    // offset): the customer↔part graph family builds DISTINCT edge
+    // sets, and unshifted part keys would dedup the 10 copies back
+    // to the 1× graph — the iterations would measure nothing new.
+    // Shifted parts give every customer 10× distinct neighbors: the
+    // graph itself grows 10× denser, the adversarial direction for
+    // per-node aggregates. No non-graph scale query reads l_partkey.
+    copied("lineitem")((df, i) => df
+      .withColumn("l_orderkey", col("l_orderkey") + lit(i * keyShift))
+      .withColumn("l_partkey", col("l_partkey") + lit(i * 1000000L)))
+    // events for q_pagerank: per-copy user-id shifts in multiples of
+    // 7 (preserving the query's user_id % 7 sampling per copy) and
+    // +1000-year time shifts so hours NEVER collide across copies —
+    // a shared hour would co-pair users across copies and grow the
+    // co-occurrence edge set quadratically in `copies`.
+    copied("events")((df, i) => df
+      .withColumn("user_id", col("user_id") + lit(i * 700000000L))
+      .withColumn("ts", expr(s"timestampadd(YEAR, ${i * 1000}, ts)")))
+    copied("orders")((df, i) => df.withColumn("o_orderkey", col("o_orderkey") + lit(i * keyShift)))
+    val docShift = 10000000L // leaves room for the +100k/+200k planted ids
+    copied("documents")((df, i) => df
+      .withColumn("doc_id", col("doc_id") + lit(i * docShift))
+      .withColumn("text",
+        if (i == 0) col("text") else regexp_replace(col("text"), "(\\S+)", "$1_" + i)))
+    // embeddings follow the documents' per-copy id shift so the
+    // retrieval eval's vec_id == doc_id alignment holds per copy;
+    // vectors repeat per copy (the index grows 10×, every IVF cell
+    // 10× fatter — the adversarial direction for the probe). Max
+    // shifted id stays below the query's +1e9 probe offset at any
+    // copies ≤ 100.
+    copied("embeddings")((df, i) => df.withColumn("vec_id", col("vec_id") + lit(i * docShift)))
   }
 }

@@ -2,6 +2,8 @@ package graft.merge
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -840,10 +842,14 @@ object MergeWriter {
 
   private def listBucketDirs(dataDir: Path): Set[Int] =
     if (!Files.exists(dataDir)) Set.empty
-    else Files.list(dataDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("_bucket=") => s.stripPrefix("_bucket=").toInt }
-      .toSet
+    else {
+      val ls = Files.list(dataDir)
+      try ls.iterator().asScala
+        .map(_.getFileName.toString)
+        .collect { case s if s.startsWith("_bucket=") => s.stripPrefix("_bucket=").toInt }
+        .toSet
+      finally ls.close()
+    }
 
   /** Rewrite every bucket into one self-contained version (releases
     * the cross-version references a long merge chain accumulates, so
@@ -900,18 +906,7 @@ object MergeWriter {
     val referenced = kept.flatMap(v => manifest(targetDir, v).values)
       .flatMap(rel => "^v(\\d+)".r.findFirstMatchIn(rel).map(_.group(1).toInt)).toSet
     val removable = all.filter(v => v <= cur - keep && !referenced.contains(v))
-    removable.foreach { v =>
-      val root = dir.resolve(s"v$v")
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-    }
+    removable.foreach(v => graft.util.Fs.deleteRecursively(dir.resolve(s"v$v")))
     removable
-  }
-
-  private implicit class IterAdapter[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.runner
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
 
 import graft.catalog.RunCatalog
+import graft.util.Fs
 
 /** Stage retention: landing/staging/transformed/rejects accumulate one
   * physical `run_id=<id>` directory per run forever — at millions of
@@ -20,14 +20,11 @@ object StageJanitor {
 
   /** Delete old runs' stage slices. Returns the run ids cleaned. */
   def cleanStages(workDir: String, catalog: RunCatalog, keep: Int = 100): Seq[String] = {
-    import org.apache.spark.sql.functions.desc
-    val rows = catalog.runs()
-      .select(col("run_id"), col("status"), col("started_at"))
-      .orderBy(desc("started_at"))
-      .collect()
+    // newest started_at first, nulls last
+    val newestFirst = Ordering.Option(Ordering.fromLessThan[Timestamp](_ before _)).reverse
+    val rows = catalog.runRows().sortBy(r => Option(r.started_at))(newestFirst)
     val keepIds: Set[String] =
-      (rows.take(keep).map(_.getString(0)) ++
-        rows.filter(r => r.getString(1) == "Running").map(_.getString(0))).toSet
+      (rows.take(keep) ++ rows.filter(_.status == "Running")).map(_.run_id).toSet
 
     val cleaned = scala.collection.mutable.LinkedHashSet[String]()
     for (stage <- stageDirs) {
@@ -42,7 +39,7 @@ object StageJanitor {
             if (name.startsWith("run_id=")) {
               val runId = name.stripPrefix("run_id=")
               if (!keepIds.contains(runId)) {
-                deleteRecursively(dir)
+                Fs.deleteRecursively(dir)
                 cleaned += runId
               }
             }
@@ -52,8 +49,4 @@ object StageJanitor {
     }
     cleaned.toSeq
   }
-
-  private def deleteRecursively(root: Path): Unit =
-    Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator().forEachRemaining(p => Files.deleteIfExists(p))
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
+import graft.util.Fs
 
 /** Persistent, incrementally-maintained IVF/SQ8 vector index — the
   * embedding twin of the text side's persistent gram/band indexes
@@ -314,7 +315,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     val all = leaves()
     val minSources = if (tombstoneIds().isDefined) 1 else 2
     foldLeaves(all, minSources, segIdStart = -1L)
-    deleteTree(Paths.get(tombsDir))
+    Fs.deleteRecursively(Paths.get(tombsDir))
   }
 
   /** Cell-occupancy skew of the live index — the drift ALARM for
@@ -369,11 +370,11 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     // sweep orphans: generation dirs the pointer does not reference
     // (crashed retrains), and — once past gen 0 — stale flat-layout
     // dirs a crashed post-swap cleanup left behind
-    listGenDirs().filter(_._1 != g).foreach { case (_, p) => deleteTree(p) }
+    listGenDirs().filter(_._1 != g).foreach { case (_, p) => Fs.deleteRecursively(p) }
     if (g > 0) Seq("centroids", "codes", "tombstones")
-      .foreach(s => deleteTree(Paths.get(dir, s)))
+      .foreach(s => Fs.deleteRecursively(Paths.get(dir, s)))
     val tmp = Paths.get(dir, ".retrain_tmp")
-    deleteTree(tmp)
+    Fs.deleteRecursively(tmp)
 
     val live = codes().select(col("id"))
     val cur = vectors.select(col(idCol), col(vecCol))
@@ -428,8 +429,8 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     // reclaim the replaced generation (readers are already on `next`;
     // a crash here only leaves unreferenced bytes for the next sweep)
     if (g == 0L) Seq("centroids", "codes", "tombstones")
-      .foreach(s => deleteTree(Paths.get(dir, s)))
-    else deleteTree(Paths.get(genRoot(g)))
+      .foreach(s => Fs.deleteRecursively(Paths.get(dir, s)))
+    else Fs.deleteRecursively(Paths.get(genRoot(g)))
     next
   }
 
@@ -448,7 +449,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
   private def foldLeaves(fold: List[(Long, Path)], minSources: Int,
                          segIdStart: Long): Unit = {
     val tmp = Paths.get(dir, ".compact_tmp_codes")
-    deleteTree(tmp) // sweep an orphan from any earlier crash
+    Fs.deleteRecursively(tmp) // sweep an orphan from any earlier crash
     if (fold.size < minSources) return
     // basePath: each leaf root is itself a partition dir (batch_id=N)
     // holding cell=C children — without the table root, partition
@@ -466,14 +467,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     val segId = Iterator.iterate(segIdStart)(_ - 1L).dropWhile(taken.contains).next()
     Files.move(tmp, Paths.get(codesDir, s"batch_id=$segId"),
       StandardCopyOption.ATOMIC_MOVE)
-    fold.foreach { case (_, p) => deleteTree(p) }
+    fold.foreach { case (_, p) => Fs.deleteRecursively(p) }
   }
 
-  private def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val s = Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
 }

@@ -117,12 +117,7 @@ object BlobLanding {
     Files.move(part, hidden, StandardCopyOption.REPLACE_EXISTING)
     Files.move(hidden, target, StandardCopyOption.ATOMIC_MOVE)
     // best-effort stage cleanup (crash here leaves only tmp garbage)
-    try {
-      val s = Files.walk(stage)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    } catch { case _: Exception => () }
+    try graft.util.Fs.deleteRecursively(stage) catch { case _: Exception => () }
     target.toString
   }
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.util.Fs
+
 /** Shared machinery of the Hamming-banded streaming MEDIA gates
   * ([[StreamingImageIngest]], [[StreamingAudioIngest]]): a subclass
   * supplies only the per-batch perceptual hasher
@@ -249,7 +251,7 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
 
   private def foldLeaves(dir: String, horizon: Long, keyCols: Seq[String]): Unit = {
     val tmp = Paths.get(workDir, s".compact_tmp_${Paths.get(dir).getFileName}")
-    deleteTree(tmp)
+    Fs.deleteRecursively(tmp)
     val fold = leavesOf(dir).filter { case (id, _) => id < horizon }
     if (fold.size < 2) return
     spark.read.option("basePath", dir).parquet(fold.map(_._2.toString): _*)
@@ -260,16 +262,9 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
     val taken = fold.map(_._1).toSet
     val segId = Iterator.iterate(-horizon)(_ - 1L).dropWhile(taken.contains).next()
     Files.move(tmp, Paths.get(dir, s"batch_id=$segId"), StandardCopyOption.ATOMIC_MOVE)
-    fold.foreach { case (_, p) => deleteTree(p) }
+    fold.foreach { case (_, p) => Fs.deleteRecursively(p) }
   }
 
-  private def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val s = Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
 }
 
 object StreamingBandGate {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
+import graft.util.Fs
 
 /** Continuous corpus ingestion with an optional quality gate and
   * near-dup filtering against ALL previously admitted documents — the
@@ -152,10 +153,10 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
       && !Files.exists(gramCoverageMarker)
       && Files.isDirectory(Paths.get(admittedDir))) {
     val tmp = Paths.get(workDir, ".gram_rebuild_tmp")
-    deleteTree(tmp)
+    Fs.deleteRecursively(tmp)
     Dedup.gramIndex(spark.read.parquet(admittedDir).dropDuplicates("doc_id"), noveltyNgram)
       .write.mode("overwrite").parquet(tmp.toString)
-    deleteTree(Paths.get(gramDir))
+    Fs.deleteRecursively(Paths.get(gramDir))
     Files.createDirectories(Paths.get(gramDir))
     Files.move(tmp, Paths.get(gramDir, "batch_id=-1"),
       StandardCopyOption.ATOMIC_MOVE)
@@ -231,13 +232,6 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
       } finally s.close()
     }
 
-  private def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val s = Files.walk(root)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    }
 
   /** Fold every leaf with id < `horizon` (batch leaves AND any previous
     * consolidated segment, whose ids are negative) into a fresh segment.
@@ -258,7 +252,7 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
     */
   private def foldLeaves(dir: String, horizon: Long, keyCols: Seq[String]): Unit = {
     val tmp = Paths.get(workDir, s".compact_tmp_${Paths.get(dir).getFileName}")
-    deleteTree(tmp) // sweep an orphan from any earlier crash, even if nothing folds
+    Fs.deleteRecursively(tmp) // sweep an orphan from any earlier crash, even if nothing folds
     val fold = leaves(dir).filter { case (id, _) => id < horizon }
     if (fold.size < 2) return
     spark.read.parquet(fold.map(_._2.toString): _*)
@@ -270,7 +264,7 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
     val taken = fold.map(_._1).toSet
     val segId = Iterator.iterate(-horizon)(_ - 1L).dropWhile(taken.contains).next()
     Files.move(tmp, Paths.get(dir, s"batch_id=$segId"), StandardCopyOption.ATOMIC_MOVE)
-    fold.foreach { case (_, p) => deleteTree(p) }
+    fold.foreach { case (_, p) => Fs.deleteRecursively(p) }
   }
 
   /** Compact both stores up to `horizon` (exclusive). `horizon` must be

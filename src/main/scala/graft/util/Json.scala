@@ -37,16 +37,20 @@ object Json {
 
   /** One row as a JSON object. */
   def row(r: Row, schema: StructType, zone: ZoneId): String =
-    schema.fields.indices.filterNot(r.isNullAt).map { i =>
-      val v = r.get(i) match {
+    obj(schema.fields.indices.filterNot(r.isNullAt).map { i =>
+      schema(i).name -> (r.get(i) match {
         case s: String => str(s)
         case t: Timestamp => str(timestampFormat.withZone(zone).format(t.toInstant))
         case n @ (_: java.lang.Integer | _: java.lang.Long) => n.toString
         case other => throw new IllegalArgumentException(
           s"${schema(i).name}: no JSON form for ${other.getClass.getName}")
-      }
-      s"${str(schema(i).name)}:$v"
-    }.mkString("{", ",", "}")
+      })
+    })
 
-  def arr(items: Iterable[String]): String = items.mkString("[", ",", "]")
+  /** A JSON array of already-rendered values (numbers render as themselves). */
+  def arr(items: Iterable[Any]): String = items.mkString("[", ",", "]")
+
+  /** A JSON object from (key, already-rendered value) pairs, in order. */
+  def obj(fields: Iterable[(String, Any)]): String =
+    fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
 }

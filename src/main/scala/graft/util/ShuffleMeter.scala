@@ -70,8 +70,8 @@ object ShuffleMeter {
     * consumed by more than one downstream stage (plan reuse). */
   final case class Snap(writeRows: Long, writeBytes: Long,
                         readRows: Long, readBytes: Long) {
-    def json: String =
-      s"""{"w_rows":$writeRows,"w_bytes":$writeBytes,"r_rows":$readRows,"r_bytes":$readBytes}"""
+    def json: String = Json.obj(Seq("w_rows" -> writeRows, "w_bytes" -> writeBytes,
+      "r_rows" -> readRows, "r_bytes" -> readBytes))
   }
 
   def install(sc: SparkContext): ShuffleMeter = {
