@@ -87,36 +87,34 @@ object Bench {
     * self-labels it instead of exporting it as a trustworthy minimum.
     * The sentinel is a meter, not a benchmark entry: it always runs
     * `q1_agg` regardless of SPARK_GRAFT_QUERIES, and its own timings
-    * appear only under the "sentinel" key.
+    * appear only under the "sentinel" key. `probe` returns a reading's
+    * wall seconds, or None when it threw: a failed reading is `null` in
+    * "times", stays out of the median and contaminates the whole tier
+    * (a meter that cannot read says nothing about the window).
     */
-  private[graft] final class Sentinel(probe: () => Unit, every: Int = 4,
+  private[graft] final class Sentinel(probe: () => Option[Double], every: Int = 4,
                                       steadyDefault: Double = 1.0) {
-    private val marks = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
+    private val marks = scala.collection.mutable.ArrayBuffer[(Int, Option[Double])]()
     private var pos = 0
-    timeSentinel(): Unit // untimed warm: the first reading would otherwise
-                         // carry plan-compile cost and bias the window median
-    private def timeSentinel(): Double = {
-      val t0 = System.nanoTime()
-      probe()
-      (System.nanoTime() - t0) / 1e9
-    }
+    probe(): Unit // untimed warm: the first reading would otherwise
+                  // carry plan-compile cost and bias the window median
     /** Call immediately before each timed measurement; returns the
       * measurement's window position for later suspect lookup. */
     def mark(): Int = {
-      if (pos % every == 0) marks += ((pos, timeSentinel()))
+      if (pos % every == 0) marks += ((pos, probe()))
       val p = pos; pos += 1; p
     }
     /** Like [[mark]], but ALWAYS takes a sentinel reading — used for
       * the bounded suspect-retry pass, where each retried measurement
       * must carry its own local meter instead of riding a stale one. */
     def markForced(): Int = {
-      marks += ((pos, timeSentinel()))
+      marks += ((pos, probe()))
       val p = pos; pos += 1; p
     }
     /** One closing sentinel so the last measurements have an "after" meter. */
-    def close(): Unit = marks += ((pos, timeSentinel()))
+    def close(): Unit = marks += ((pos, probe()))
     def median: Double = {
-      val s = marks.map(_._2).sorted
+      val s = marks.flatMap(_._2).sorted
       if (s.isEmpty) 0.0 else s(s.size / 2)
     }
     /** Recorded steady state of the q1_agg meter at the driver's sf0.1
@@ -132,7 +130,7 @@ object Bench {
       * ever fires on genuinely contended windows. */
     private val steady = sys.env.get("SPARK_GRAFT_SENTINEL_STEADY")
       .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(steadyDefault)
-    def tierContaminated: Boolean = median > 2 * steady
+    def tierContaminated: Boolean = marks.exists(_._2.isEmpty) || median > 2 * steady
     /** True when the whole window is contaminated ([[tierContaminated]])
       * or a sentinel adjacent to window position `p` deviates >1.5×
       * from the window median (either direction). */
@@ -141,10 +139,11 @@ object Bench {
       m > 0 && {
         val around = marks.filter(_._1 <= p).lastOption.toSeq ++
           marks.find(_._1 > p).toSeq
-        around.exists(s => s._2 > 1.5 * m || s._2 * 1.5 < m)
+        around.flatMap(_._2).exists(s => s > 1.5 * m || s * 1.5 < m)
       }
     }
-    def json: String = Json.obj(Seq("every" -> every, "times" -> Json.arr(marks.map(_._2)),
+    def json: String = Json.obj(Seq("every" -> every,
+      "times" -> Json.arr(marks.map(_._2.fold("null")(_.toString))),
       "median" -> median, "steady" -> steady, "tier_contaminated" -> tierContaminated))
   }
 
@@ -178,7 +177,7 @@ object Bench {
   private[graft] def runTier(spark: SparkSession, dir: String, names: Seq[String], meter: ShuffleMeter,
                              steadyDefault: Double = 1.0, lookup: Lookup = SparkEntry.queries): Tier = {
     def time(n: String) = timed(spark, lookup, dir, n)
-    val sen = new Sentinel(() => time("q1_agg"): Unit, steadyDefault = steadyDefault)
+    val sen = new Sentinel(() => time("q1_agg"), steadyDefault = steadyDefault)
     // two passes, min per query: this host has noisy neighbors (load
     // swings 2-5x with identical plans), so the min is the steady-state
     // signal, and both passes are emitted so a cross-round regression

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import graft.queries._
+
+/** The query contract — see SURVEY.md §7.
   *
   * Each entry in [[queries]] is one operator from SURVEY.md §2 (or a
   * beyond-parity training-data operator) expressed as a Catalyst-native
@@ -15,27 +17,37 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  private lazy val all: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
-    Seq(
-      (_root_.graft.queries.Relational.queries, _root_.graft.queries.Relational.oracles),
-      (_root_.graft.queries.TextOps.queries, _root_.graft.queries.TextOps.oracles),
-      (_root_.graft.queries.VectorOps.queries, _root_.graft.queries.VectorOps.oracles),
-      (_root_.graft.queries.MediaOps.queries, _root_.graft.queries.MediaOps.oracles),
-      (_root_.graft.queries.Extra.queries, _root_.graft.queries.Extra.oracles),
-      (_root_.graft.queries.Temporal.queries, _root_.graft.queries.Temporal.oracles),
-      (_root_.graft.queries.TextOps2.queries, _root_.graft.queries.TextOps2.oracles),
-      (_root_.graft.queries.TextOps3.queries, _root_.graft.queries.TextOps3.oracles),
-      (_root_.graft.queries.TextOps4.queries, _root_.graft.queries.TextOps4.oracles),
-      (_root_.graft.queries.TextOps5.queries, _root_.graft.queries.TextOps5.oracles),
-      (_root_.graft.queries.TextOps6.queries, _root_.graft.queries.TextOps6.oracles),
-      (_root_.graft.queries.TextOps7.queries, _root_.graft.queries.TextOps7.oracles),
-      (_root_.graft.queries.TextOps8.queries, _root_.graft.queries.TextOps8.oracles),
-      (_root_.graft.queries.GraphOps.queries, _root_.graft.queries.GraphOps.oracles)
-    )
+  /** Merges named modules' queries by name; a name declared twice
+    * fails, naming both modules (a plain map merge would keep one
+    * silently). */
+  def registry(modules: Seq[(String, Seq[Query])]): Map[String, Query] = {
+    val declared = for ((module, qs) <- modules; q <- qs) yield (module, q)
+    declared.groupBy(_._2.name).foreach { case (name, ds) =>
+      require(ds.size == 1, s"query '$name' declared in ${ds.map(_._1).mkString(" and ")}")
+    }
+    declared.map { case (_, q) => q.name -> q }.toMap
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(_._1).reduce(_ ++ _)
+  /** Every query module, listed once. */
+  private lazy val registered: Map[String, Query] = registry(Seq(
+    "Relational" -> Relational.all,
+    "TextOps" -> TextOps.all,
+    "VectorOps" -> VectorOps.all,
+    "MediaOps" -> MediaOps.all,
+    "Extra" -> Extra.all,
+    "Temporal" -> Temporal.all,
+    "TextOps2" -> TextOps2.all,
+    "TextOps3" -> TextOps3.all,
+    "TextOps4" -> TextOps4.all,
+    "TextOps5" -> TextOps5.all,
+    "TextOps6" -> TextOps6.all,
+    "TextOps7" -> TextOps7.all,
+    "TextOps8" -> TextOps8.all,
+    "GraphOps" -> GraphOps.all))
 
-  def oracleSql: Map[String, String] =
-    all.map(_._2).reduce(_ ++ _)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registered.map { case (name, q) => name -> q.run }
+
+  lazy val oracleSql: Map[String, String] =
+    registered.collect { case (name, Query(_, _, Some(sql))) => name -> sql }
 }

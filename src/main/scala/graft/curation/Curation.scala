@@ -1,6 +1,6 @@
 package graft.curation
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -42,15 +42,19 @@ object Curation {
       bloomDecontaminate: Boolean = false,
       bloomNumBits: Long = 1L << 23)
 
-  /** Map-only token/stopword/mean-length quality gate. */
+  /** The quality predicate over `text`: enough tokens, enough
+    * stopwords, and a bounded mean token length. */
+  def quality(cfg: Config = Config()): Column = {
+    val nTokens = TextFns.tokenCount(col("text"))
+    val meanLen = length(col("text")).cast("double") / nTokens
+    nTokens >= cfg.minTokens && TextFns.stopwordCount(col("text")) >= cfg.minStopwords &&
+      meanLen >= cfg.minMeanLen && meanLen <= cfg.maxMeanLen
+  }
+
+  /** Map-only quality gate: the rows [[quality]] keeps. */
   def qualityGate(corpus: DataFrame, cfg: Config = Config()): DataFrame =
-    corpus
-      .withColumn("n_tokens", TextFns.tokenCount(col("text")))
-      .withColumn("n_stop", TextFns.stopwordCount(col("text")))
-      .withColumn("mean_len", length(col("text")).cast("double") / col("n_tokens"))
-      .filter(col("n_tokens") >= cfg.minTokens && col("n_stop") >= cfg.minStopwords &&
-        col("mean_len") >= cfg.minMeanLen && col("mean_len") <= cfg.maxMeanLen)
-      .select(col("doc_id"), col("text"), col("n_tokens"))
+    corpus.filter(quality(cfg))
+      .select(col("doc_id"), col("text"), TextFns.tokenCount(col("text")).as("n_tokens"))
 
   /** Exact dedup, min-id-wins: ONE shuffle on the content hash —
     * `min_by` carries the whole surviving row through the aggregation,
@@ -64,15 +68,12 @@ object Curation {
       .select(cols.map(c => col(s"r.$c")).toIndexedSeq: _*)
   }
 
-  /** MinHash-LSH near-dup drop (min-id-wins over candidate pairs). */
-  def nearDupDrop(df: DataFrame, cfg: Config = Config()): DataFrame =
-    nearDupDropOn(df, TextFns.tokens(col("text")), cfg)
-
-  /** [[nearDupDrop]] over a precomputed tokens column — the funnel's
-    * single-tokenization path (identical values by construction). */
-  def nearDupDropOn(df: DataFrame, dfTokens: org.apache.spark.sql.Column,
-                    cfg: Config): DataFrame = {
-    val sig = Dedup.minhashSignaturesOfTokens(df, "doc_id", dfTokens, cfg.minhashK)
+  /** MinHash-LSH near-dup drop (min-id-wins over candidate pairs).
+    * `tokens` lets a pipeline that already carries the token array
+    * (the funnel) skip re-tokenizing; values are identical. */
+  def nearDupDrop(df: DataFrame, cfg: Config = Config(),
+                  tokens: Column = TextFns.tokens(col("text"))): DataFrame = {
+    val sig = Dedup.minhashSignatures(df, "doc_id", tokens, cfg.minhashK)
     val drops = graft.util.CacheScope.pin(
       Dedup.lshCandidatePairs(sig, "doc_id", cfg.minhashK, cfg.rowsPerBand)
         .filter(col("est_sim") >= cfg.simThreshold)
@@ -86,76 +87,60 @@ object Curation {
     df.join(broadcast(drops), Seq("doc_id"), "left_anti")
   }
 
-  /** Drop docs sharing any n-gram with the eval set (and the eval docs
-    * themselves, matched by `doc_id`). The eval set is tiny next to the
-    * corpus, so its distinct shingle hashes broadcast and the corpus
-    * scan stays map-side.
-    */
-  def decontaminate(df: DataFrame, evalDocs: DataFrame,
-                    cfg: Config = Config()): DataFrame =
-    decontaminateOn(df, TextFns.tokens(col("text")), evalDocs, cfg)
-
-  /** [[decontaminate]] with the CORPUS side's tokens precomputed —
-    * the funnel's single-tokenization path (the eval side is tiny and
-    * tokenizes inline either way). Identical values by construction. */
-  def decontaminateOn(df: DataFrame, dfTokens: org.apache.spark.sql.Column,
-                      evalDocs: DataFrame, cfg: Config): DataFrame = {
-    val n = cfg.decontaminateNgram
-    val evalH = evalDocs
+  /** Distinct shingle hashes of the eval docs' `n`-grams. */
+  private def evalGrams(evalDocs: DataFrame, n: Int): DataFrame =
+    evalDocs
       .select(explode(array_distinct(
         TextFns.shingleHashes48(TextFns.tokens(col("text")), n))).as("hv"))
       .distinct()
-    val contaminated = df
-      .select(col("doc_id"), explode(array_distinct(
-        TextFns.shingleHashes48(dfTokens, n))).as("hv"))
-      .join(broadcast(evalH), "hv")
+
+  /** Ids of the `df` docs sharing any n-gram with the eval set. The
+    * eval gram set is tiny next to the corpus, so it broadcasts and
+    * the corpus scan stays map-side. */
+  def contaminatedIds(df: DataFrame, evalDocs: DataFrame, cfg: Config = Config(),
+                      tokens: Column = TextFns.tokens(col("text"))): DataFrame = {
+    val n = cfg.decontaminateNgram
+    df.select(col("doc_id"), explode(array_distinct(
+        TextFns.shingleHashes48(tokens, n))).as("hv"))
+      .join(broadcast(evalGrams(evalDocs, n)), "hv")
       .select(col("doc_id")).distinct()
-    df.join(broadcast(evalDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-      .join(broadcast(contaminated), Seq("doc_id"), "left_anti")
   }
 
+  /** `df` without the eval docs themselves (matched by `doc_id`) and
+    * without the `contaminated` ids. */
+  private def dropContaminated(df: DataFrame, evalDocs: DataFrame,
+                               contaminated: DataFrame): DataFrame =
+    df.join(broadcast(evalDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+      .join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+
+  /** Drop docs sharing any n-gram with the eval set (and the eval docs
+    * themselves, matched by `doc_id`). `tokens` is the corpus side's
+    * token array (the eval side is tiny and tokenizes inline).
+    */
+  def decontaminate(df: DataFrame, evalDocs: DataFrame, cfg: Config = Config(),
+                    tokens: Column = TextFns.tokens(col("text"))): DataFrame =
+    dropContaminated(df, evalDocs, contaminatedIds(df, evalDocs, cfg, tokens))
+
   /** [[decontaminate]] with a bloom-sketch prefilter on the corpus
-    * side: every scan task probes a `numBits/8`-byte sketch of the
-    * eval hashes (~10× smaller than the exact hash relation at ~1%
+    * side: every scan task probes a `cfg.bloomNumBits/8`-byte sketch of
+    * the eval hashes (~10× smaller than the exact hash relation at ~1%
     * FP), and only sketch-positive grams — true contaminations plus
     * the small FP stream — reach the exact confirm join. The result
     * is EXACTLY [[decontaminate]]'s: the sketch shrinks the candidate
     * stream, the exact join decides.
-    *
-    * When the eval set is so large that even the EXACT hash relation
-    * cannot broadcast, pass `broadcastConfirm = false`: the confirm
-    * join then shuffles — cheap, because only the sketch-positive
-    * candidate stream (not the corpus) reaches it — and nothing in
-    * the path broadcasts more than the sketch bytes.
     */
-  def decontaminateBloom(df: DataFrame, evalDocs: DataFrame,
-                         cfg: Config = Config(),
-                         numBits: Long = 1L << 23,
-                         broadcastConfirm: Boolean = true): DataFrame =
-    decontaminateBloomOn(df, TextFns.tokens(col("text")), evalDocs, cfg,
-      numBits, broadcastConfirm)
-
-  /** [[decontaminateBloom]] with the corpus side's tokens precomputed
-    * (the funnel's single-tokenization path). */
-  def decontaminateBloomOn(df: DataFrame, dfTokens: org.apache.spark.sql.Column,
-                           evalDocs: DataFrame, cfg: Config,
-                           numBits: Long = 1L << 23,
-                           broadcastConfirm: Boolean = true): DataFrame = {
+  def decontaminateBloom(df: DataFrame, evalDocs: DataFrame, cfg: Config = Config(),
+                         tokens: Column = TextFns.tokens(col("text"))): DataFrame = {
     val n = cfg.decontaminateNgram
-    def grams(d: DataFrame, tk: org.apache.spark.sql.Column) =
-      d.select(col("doc_id"),
-        explode(array_distinct(TextFns.shingleHashes48(tk, n))).as("hv"))
-    val evalH = grams(evalDocs, TextFns.tokens(col("text")))
-      .select(col("hv")).distinct()
+    val evalH = evalGrams(evalDocs, n)
     val items = math.max(1L, evalH.count())
-    val bf = graft.sketch.Bloom.sketch(evalH, col("hv"), items, numBits)
-    val confirmSide = if (broadcastConfirm) broadcast(evalH) else evalH
-    val contaminated = grams(df, dfTokens)
+    val bf = graft.sketch.Bloom.sketch(evalH, col("hv"), items, cfg.bloomNumBits)
+    val contaminated = df
+      .select(col("doc_id"), explode(array_distinct(TextFns.shingleHashes48(tokens, n))).as("hv"))
       .filter(graft.sketch.Bloom.mightContain(bf, col("hv")))
-      .join(confirmSide, "hv") // exact confirm: FPs die here
+      .join(broadcast(evalH), "hv") // exact confirm: FPs die here
       .select(col("doc_id")).distinct()
-    df.join(broadcast(evalDocs.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-      .join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+    dropContaminated(df, evalDocs, contaminated)
   }
 
   /** Longest contaminated span per eval doc — the metric
@@ -346,10 +331,10 @@ object Curation {
     val afterExact = graft.util.CacheScope.pin(
       exactDedup(classed).withColumn("_tk", TextFns.tokens(col("text"))))
     val tk = col("_tk")
-    val afterNd = nearDupDropOn(afterExact, tk, cfg)
+    val afterNd = nearDupDrop(afterExact, cfg, tk)
     evalDocs.fold(afterNd)(ev =>
-      if (cfg.bloomDecontaminate) decontaminateBloomOn(afterNd, tk, ev, cfg, cfg.bloomNumBits)
-      else decontaminateOn(afterNd, tk, ev, cfg))
+      if (cfg.bloomDecontaminate) decontaminateBloom(afterNd, ev, cfg, tk)
+      else decontaminate(afterNd, ev, cfg, tk))
       .drop("_tk")
   }
 

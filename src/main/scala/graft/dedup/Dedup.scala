@@ -71,20 +71,12 @@ object Dedup {
     * shuffle. (The former explode + groupBy form shuffled every
     * (doc, shingle) pair — the largest intermediate in the engine.)
     * Docs too short to shingle yield no row, exactly like the
-    * aggregated form.
+    * aggregated form. `tokensCol` lets a pipeline that already carries
+    * the token array (the curation funnel) skip re-tokenizing.
     */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 16, shingleN: Int = 3): DataFrame =
-    minhashSignaturesOfTokens(df, idCol, TextFns.tokens(col(textCol)), k, shingleN)
-
-  /** [[minhashSignatures]] over a precomputed tokens column — the
-    * single-tokenization path for pipelines that already carry the
-    * token array (the curation funnel). Values identical to the
-    * text-column form by construction.
-    */
-  def minhashSignaturesOfTokens(df: DataFrame, idCol: String,
-                                tokensCol: org.apache.spark.sql.Column,
-                                k: Int = 16, shingleN: Int = 3): DataFrame = {
+  def minhashSignatures(df: DataFrame, idCol: String,
+                        tokensCol: org.apache.spark.sql.Column = TextFns.tokens(col("text")),
+                        k: Int = 16, shingleN: Int = 3): DataFrame = {
     // two-step select: the array is materialized in its own projection;
     // CollapseProject keeps non-cheap expressions referenced k times
     // out-of-line, so the signature is computed once per row. The

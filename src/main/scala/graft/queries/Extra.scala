@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{decSum, decSumSql, t}
@@ -11,11 +10,7 @@ import graft.Tables.{decSum, decSumSql, t}
   */
 object Extra {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // UNPIVOT (wide → long): the four lineitem measures melted into
     // (metric, value) rows, then aggregated per metric. Spark's
@@ -586,16 +581,13 @@ object Extra {
          |       WHEN r_score <= 2 THEN 'recent'
          |       WHEN f_score <= 2 THEN 'loyal_lapsing'
          |       ELSE 'hibernating' END AS segment
-         |FROM scored ORDER BY o_custkey""".stripMargin)
-  )
+         |FROM scored ORDER BY o_custkey""".stripMargin),
 
-  /** Sketch aggregates (HLL distinct + count-min-style heavy hitters).
-    * No oracle: approximation algorithms differ per engine — the driver
-    * records a rows-only check; exactness-adjacent invariants are
-    * asserted in ScalaTest instead.
-    */
-  private val sketchQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_approx_distinct" -> ((s, d) => {
+    // Sketch aggregates (HLL distinct + count-min-style heavy hitters).
+    // No oracle: approximation algorithms differ per engine, so the
+    // result gets a rows-only check; exactness-adjacent invariants are
+    // asserted in ScalaTest instead.
+    Query("q_approx_distinct", (s, d) => {
       import s.implicits._
       t(s, d, "lineitem")
         .groupBy($"l_returnflag")
@@ -604,12 +596,6 @@ object Extra {
           approx_count_distinct($"l_partkey", 0.02).as("approx_parts"),
           count(lit(1)).as("n"))
         .orderBy($"l_returnflag")
-    })
+    }, None)
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap ++ sketchQueries
-
-  val oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

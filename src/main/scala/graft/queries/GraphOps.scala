@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -26,10 +25,6 @@ import graft.operators.{Graphs, Layout}
   * engine/shuffle order.
   */
 object GraphOps {
-
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
 
   /** Unrolled-iteration CTE text for the [[Graphs.hitsMicro]] oracle:
     * per round, the authority half (sum hubs over in-edges, L1
@@ -63,7 +58,7 @@ object GraphOps {
     (1 to 11).map(i => s"WHEN deg < ${1L << i} THEN CAST(${i - 1} AS BIGINT)")
       .mkString("CASE ", " ", " ELSE CAST(11 AS BIGINT) END")
 
-  private val defs = Seq(
+  val all: Seq[Query] = Seq(
 
     // INTEGER-exact HITS over the bipartite customer→part purchase
     // graph: authorities = consensus parts (bought by many broad
@@ -582,10 +577,4 @@ object GraphOps {
         |FROM pairs p JOIN item ia ON ia.l_partkey = p.item_a
         |JOIN item ib ON ib.l_partkey = p.item_b CROSS JOIN n
         |ORDER BY item_a, item_b""".stripMargin))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  def oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -22,10 +22,6 @@ import graft.Tables.{decRevenue, decRevenueSql, decSum, decSumSql, t}
   */
 object Relational {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
   /** One cached sibling session with the MERGE INTO parser injected
     * (extensions apply only at session construction). Building a new
     * session per q_merge_sql invocation would leak a session per
@@ -43,7 +39,7 @@ object Relational {
   }
 
   // SURVEY §2.6 A1/A3 + the flagship pricing-summary aggregate (q1_agg).
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
     q("q1_agg")(
       (s, d) => {
         import s.implicits._
@@ -1223,10 +1219,4 @@ object Relational {
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
         |FROM events ORDER BY event_id""".stripMargin)
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  val oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.curation.Curation
 import graft.dedup.Dedup
 import graft.functions.TextFns
 
@@ -41,6 +42,64 @@ object TextOps {
       .select(($"doc_id" + 200000L).as("doc_id"), $"text"))
   }
 
+  /** The curation funnel's corpus: documents ∪ planted exact copies
+    * (+200000) ∪ planted near-dup mutants (+100000, first token
+    * dropped), so every funnel stage provably drops something. */
+  private def funnelCorpus(base: DataFrame): DataFrame = {
+    val planted = base.filter(col("doc_id") % 10 === 0)
+    base
+      .union(planted.select((col("doc_id") + 200000L).as("doc_id"), col("text")))
+      .union(planted.select((col("doc_id") + 100000L).as("doc_id"),
+        expr("substring(text, locate(' ', text) + 1)").as("text")))
+  }
+
+  /** The funnel's eval set: every 50th document. */
+  private def funnelEval(base: DataFrame): DataFrame = base.filter(col("doc_id") % 50 === 0)
+
+  /** DuckDB twin of [[funnelCorpus]]: CTEs `base` and `corpus`. */
+  private val funnelCorpusSql =
+    """base AS (SELECT doc_id, text FROM documents),
+      |corpus AS (
+      |  SELECT doc_id, text FROM base
+      |  UNION ALL
+      |  SELECT doc_id + 200000, text FROM base WHERE doc_id % 10 = 0
+      |  UNION ALL
+      |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
+      |  FROM base WHERE doc_id % 10 = 0)""".stripMargin
+
+  /** DuckDB twin of `Curation.quality()` as CTE `flagged`: the corpus
+    * with its `q_ok` flag. */
+  private val flaggedSql =
+    """flagged AS (SELECT doc_id, text,
+      |  (len(string_split_regex(trim(text), '\s+')) >= 20
+      |   AND len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
+      |        x -> x IN ('the','a','of','and','to','in'))) >= 1
+      |   AND CAST(length(text) AS DOUBLE) / len(string_split_regex(trim(text), '\s+')) >= 3.0
+      |   AND CAST(length(text) AS DOUBLE) / len(string_split_regex(trim(text), '\s+')) <= 12.0) AS q_ok
+      |  FROM corpus)""".stripMargin
+
+  /** DuckDB twin of [[Curation.contaminatedIds]] over [[funnelEval]]:
+    * CTE `eval_h` (the eval docs' distinct 8-gram hashes) and CTE
+    * `name` (the ids of the `src` docs sharing one); `v` names the
+    * gram column. */
+  private def contamSql(name: String, src: String, v: String = "s"): String =
+    s"""eval_h AS (SELECT DISTINCT CAST(concat('0x', substr(md5($v), 1, 12)) AS BIGINT) AS hv
+       |  FROM (SELECT unnest(list_distinct(list_transform(
+       |    generate_series(1, len(tk) - 7),
+       |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
+       |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS $v
+       |    FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
+       |          FROM base WHERE doc_id % 50 = 0) WHERE len(tk) >= 8)),
+       |$name AS (SELECT DISTINCT doc_id FROM (
+       |  SELECT doc_id, CAST(concat('0x', substr(md5($v), 1, 12)) AS BIGINT) AS hv
+       |  FROM (SELECT doc_id, unnest(list_distinct(list_transform(
+       |    generate_series(1, len(tk) - 7),
+       |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
+       |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS $v
+       |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
+       |          FROM $src) WHERE len(tk) >= 8))
+       |  WHERE hv IN (SELECT hv FROM eval_h))""".stripMargin
+
   // DuckDB twins of TextFns.shingles / TextFns.hash32 over a corpus
   // CTE; `sfx` disambiguates CTE names when two corpora are shingled
   // in one query.
@@ -76,11 +135,7 @@ object TextOps {
     .map(i => f"(CASE WHEN sa.mh$i%02d = sb.mh$i%02d THEN 1 ELSE 0 END)")
     .mkString(" + ")
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Exact dedup: hash-groupBy, one shuffle on the content hash.
     q("q_dedup_exact")(
@@ -294,7 +349,7 @@ object TextOps {
     q("q_minhash_sig")(
       (s, d) => {
         import s.implicits._
-        Dedup.minhashSignatures(t(s, d, "documents"), "doc_id", "text", K)
+        Dedup.minhashSignatures(t(s, d, "documents"), "doc_id", k = K)
           .orderBy($"doc_id")
       },
       s"""WITH ${shingleSql("documents")}
@@ -305,7 +360,7 @@ object TextOps {
     q("q_minhash_lsh_pairs")(
       (s, d) => {
         import s.implicits._
-        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
           .orderBy($"id_a", $"id_b")
@@ -399,7 +454,7 @@ object TextOps {
         val corpus = nearDupCorpus(s, d)
         val truePairs = Dedup.jaccardPairs(corpus, "doc_id", "text")
           .filter($"jaccard" >= 0.5).select($"id_a", $"id_b")
-        val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(corpus, "doc_id", k = K)
         val cand = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .select($"id_a", $"id_b")
         truePairs.agg(count(lit(1)).as("n_true"))
@@ -447,7 +502,7 @@ object TextOps {
           Dedup.jaccardPairs(corpus, "doc_id", "text")
             .filter($"jaccard" >= 0.5).select($"id_a", $"id_b"))
         val sig = graft.util.CacheScope.pin(
-          Dedup.minhashSignatures(corpus, "doc_id", "text", K))
+          Dedup.minhashSignatures(corpus, "doc_id", k = K))
         Seq(1, 2, 4, 8).map { r =>
           val cand = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = r)
             .select($"id_a", $"id_b")
@@ -497,7 +552,7 @@ object TextOps {
     q("q_sim_histogram")(
       (s, d) => {
         import s.implicits._
-        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .select(($"est_sim" * 16).cast("long").as("n_agree"), $"est_sim")
           .groupBy($"n_agree", $"est_sim").agg(count(lit(1)).as("n_pairs"))
@@ -524,7 +579,7 @@ object TextOps {
     q("q_cluster_sizes")(
       (s, d) => {
         import s.implicits._
-        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
         Dedup.connectedComponents(pairs)
@@ -559,7 +614,7 @@ object TextOps {
     q("q_dedup_decision")(
       (s, d) => {
         import s.implicits._
-        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
         pairs.select($"id_b".as("drop_id"), $"id_a".as("keep_candidate"))
@@ -592,27 +647,14 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val base = t(s, d, "documents").select($"doc_id", $"text")
-        val planted = base.filter($"doc_id" % 10 === 0)
-        val corpus = base
-          .union(planted.select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-          .union(planted.select(($"doc_id" + 100000L).as("doc_id"),
-            expr("substring(text, locate(' ', text) + 1)").as("text")))
         // the whole funnel is the library API (quality gate → exact
         // dedup → LSH near-dup drop → decontamination); this query
         // pins the API's default-config composition to the oracle
-        val evalDocs = base.filter($"doc_id" % 50 === 0)
-        graft.curation.Curation.curate(corpus, Some(evalDocs))
+        Curation.curate(funnelCorpus(base), Some(funnelEval(base)))
           .select($"doc_id", $"n_tokens")
           .orderBy($"doc_id")
       },
-      s"""WITH base AS (SELECT doc_id, text FROM documents),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text FROM base WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
-         |  FROM base WHERE doc_id % 10 = 0),
+      s"""WITH $funnelCorpusSql,
          |quality AS (
          |  SELECT doc_id, text,
          |    len(string_split_regex(trim(text), '\\s+')) AS n_tokens
@@ -639,22 +681,7 @@ object TextOps {
          |  WHERE est_sim >= 0.5),
          |after_nd AS (SELECT * FROM after_exact
          |  WHERE doc_id NOT IN (SELECT id_b FROM pairs)),
-         |eval_h AS (SELECT DISTINCT CAST(concat('0x', substr(md5(s), 1, 12)) AS BIGINT) AS hv
-         |  FROM (SELECT unnest(list_distinct(list_transform(
-         |    generate_series(1, len(tk) - 7),
-         |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
-         |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS s
-         |    FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
-         |          FROM base WHERE doc_id % 50 = 0) WHERE len(tk) >= 8)),
-         |contaminated AS (SELECT DISTINCT doc_id FROM (
-         |  SELECT doc_id, CAST(concat('0x', substr(md5(s), 1, 12)) AS BIGINT) AS hv
-         |  FROM (SELECT doc_id, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(tk) - 7),
-         |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
-         |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS s
-         |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-         |          FROM after_nd) WHERE len(tk) >= 8))
-         |  WHERE hv IN (SELECT hv FROM eval_h))
+         |${contamSql("contaminated", "after_nd")}
          |SELECT doc_id, n_tokens FROM after_nd
          |WHERE NOT (doc_id % 50 = 0 AND doc_id <= 100000)
          |  AND doc_id NOT IN (SELECT doc_id FROM contaminated)
@@ -670,7 +697,7 @@ object TextOps {
     q("q_neardup_resolution")(
       (s, d) => {
         import s.implicits._
-        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
         Dedup.resolveDropTargets(pairs).orderBy($"doc_id")
@@ -716,35 +743,18 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val base = t(s, d, "documents").select($"doc_id", $"text")
-        val planted = base.filter($"doc_id" % 10 === 0)
-        val corpus = base
-          .union(planted.select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-          .union(planted.select(($"doc_id" + 100000L).as("doc_id"),
-            expr("substring(text, locate(' ', text) + 1)").as("text")))
-        val flagged = corpus
-          .withColumn("n_tokens", TextFns.tokenCount($"text"))
-          .withColumn("n_stop", TextFns.stopwordCount($"text"))
-          .withColumn("mean_len", length($"text").cast("double") / $"n_tokens")
-          .withColumn("q_ok", $"n_tokens" >= 20 && $"n_stop" >= 1 &&
-            $"mean_len" >= 3.0 && $"mean_len" <= 12.0)
+        val flagged = funnelCorpus(base).withColumn("q_ok", Curation.quality())
         val wh = org.apache.spark.sql.expressions.Window.partitionBy(md5($"text"))
         val exact = flagged
           .withColumn("e_min", min(when($"q_ok", $"doc_id")).over(wh))
           .withColumn("e_ok", $"q_ok" && $"doc_id" === $"e_min")
         val survivors = exact.filter($"e_ok").select($"doc_id", $"text")
-        val sig = Dedup.minhashSignatures(survivors, "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(survivors, "doc_id", k = K)
         val ndBy = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
           .groupBy($"id_b".as("doc_id")).agg(min($"id_a").as("nd_by"))
-        val evalH = base.filter($"doc_id" % 50 === 0)
-          .select(explode(array_distinct(
-            TextFns.shingleHashes48(TextFns.tokens($"text"), 8))).as("hv"))
-          .distinct()
-        val contaminated = survivors
-          .select($"doc_id", explode(array_distinct(
-            TextFns.shingleHashes48(TextFns.tokens($"text"), 8))).as("hv"))
-          .join(broadcast(evalH), "hv")
-          .select($"doc_id", lit(true).as("contam")).distinct()
+        val contaminated = Curation.contaminatedIds(survivors, funnelEval(base))
+          .withColumn("contam", lit(true))
         exact
           .join(ndBy, Seq("doc_id"), "left")
           .join(contaminated, Seq("doc_id"), "left")
@@ -760,21 +770,8 @@ object TextOps {
               .otherwise(lit(null).cast("long")).as("killed_by"))
           .orderBy($"doc_id")
       },
-      s"""WITH base AS (SELECT doc_id, text FROM documents),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text FROM base WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
-         |  FROM base WHERE doc_id % 10 = 0),
-         |flagged AS (SELECT doc_id, text,
-         |  (len(string_split_regex(trim(text), '\\s+')) >= 20
-         |   AND len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |        x -> x IN ('the','a','of','and','to','in'))) >= 1
-         |   AND CAST(length(text) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+')) >= 3.0
-         |   AND CAST(length(text) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+')) <= 12.0) AS q_ok
-         |  FROM corpus),
+      s"""WITH $funnelCorpusSql,
+         |$flaggedSql,
          |exact AS (SELECT doc_id, text, q_ok,
          |  MIN(CASE WHEN q_ok THEN doc_id END) OVER (PARTITION BY md5(text)) AS e_min
          |  FROM flagged),
@@ -789,22 +786,7 @@ object TextOps {
          |  SELECT id_a, id_b, ($agreeSql) / 16.0 AS est_sim
          |  FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b)
          |  WHERE est_sim >= 0.5 GROUP BY 1),
-         |eval_h AS (SELECT DISTINCT CAST(concat('0x', substr(md5(s), 1, 12)) AS BIGINT) AS hv
-         |  FROM (SELECT unnest(list_distinct(list_transform(
-         |    generate_series(1, len(tk) - 7),
-         |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
-         |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS s
-         |    FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
-         |          FROM base WHERE doc_id % 50 = 0) WHERE len(tk) >= 8)),
-         |contaminated AS (SELECT DISTINCT doc_id FROM (
-         |  SELECT doc_id, CAST(concat('0x', substr(md5(s), 1, 12)) AS BIGINT) AS hv
-         |  FROM (SELECT doc_id, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(tk) - 7),
-         |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
-         |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS s
-         |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-         |          FROM after_exact) WHERE len(tk) >= 8))
-         |  WHERE hv IN (SELECT hv FROM eval_h))
+         |${contamSql("contaminated", "after_exact")}
          |SELECT e.doc_id,
          |  CASE WHEN NOT e.q_ok THEN 'quality'
          |       WHEN e.doc_id <> e.e_min THEN 'exact_dup'
@@ -834,19 +816,9 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val base = t(s, d, "documents").select($"doc_id", $"text")
-        val planted = base.filter($"doc_id" % 10 === 0)
-        val corpus = base
-          .union(planted.select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-          .union(planted.select(($"doc_id" + 100000L).as("doc_id"),
-            expr("substring(text, locate(' ', text) + 1)").as("text")))
-        val configs = Seq(10L, 20L, 40L)
-        val flagged0 = corpus
-          .withColumn("n_tokens", TextFns.tokenCount($"text"))
-          .withColumn("n_stop", TextFns.stopwordCount($"text"))
-          .withColumn("mean_len", length($"text").cast("double") / $"n_tokens")
-        val flagged = configs.foldLeft(flagged0) { (df, mt) =>
-          df.withColumn(s"q_ok_$mt", $"n_tokens" >= mt && $"n_stop" >= 1 &&
-            $"mean_len" >= 3.0 && $"mean_len" <= 12.0)
+        val configs = Seq(10, 20, 40)
+        val flagged = configs.foldLeft(funnelCorpus(base)) { (df, mt) =>
+          df.withColumn(s"q_ok_$mt", Curation.quality(Curation.Config(minTokens = mt)))
         }
         val wh = org.apache.spark.sql.expressions.Window.partitionBy(md5($"text"))
         val exact = configs.foldLeft(flagged) { (df, mt) =>
@@ -863,14 +835,7 @@ object TextOps {
             ") AS (min_tokens, n_corpus, n_quality, n_exact)"))
           .orderBy($"min_tokens")
       },
-      s"""WITH base AS (SELECT doc_id, text FROM documents),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text FROM base WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
-         |  FROM base WHERE doc_id % 10 = 0),
+      s"""WITH $funnelCorpusSql,
          |m AS (SELECT doc_id, text,
          |  len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
          |  len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
@@ -909,17 +874,7 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val base = t(s, d, "documents").select($"doc_id", $"text")
-        val planted = base.filter($"doc_id" % 10 === 0)
-        val corpus = base
-          .union(planted.select(($"doc_id" + 200000L).as("doc_id"), $"text"))
-          .union(planted.select(($"doc_id" + 100000L).as("doc_id"),
-            expr("substring(text, locate(' ', text) + 1)").as("text")))
-        val flagged = corpus
-          .withColumn("n_tokens", TextFns.tokenCount($"text"))
-          .withColumn("n_stop", TextFns.stopwordCount($"text"))
-          .withColumn("mean_len", length($"text").cast("double") / $"n_tokens")
-          .withColumn("q_ok", $"n_tokens" >= 20 && $"n_stop" >= 1 &&
-            $"mean_len" >= 3.0 && $"mean_len" <= 12.0)
+        val flagged = funnelCorpus(base).withColumn("q_ok", Curation.quality())
         // exact-dedup flag: min id among quality docs of the same content
         val wh = org.apache.spark.sql.expressions.Window.partitionBy(md5($"text"))
         val exact = flagged
@@ -927,19 +882,12 @@ object TextOps {
           .withColumn("e_ok", $"q_ok" && $"doc_id" === $"e_min")
         // near-dup drops among exact survivors (same LSH as the funnel)
         val survivors = exact.filter($"e_ok").select($"doc_id", $"text")
-        val sig = Dedup.minhashSignatures(survivors, "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(survivors, "doc_id", k = K)
         val drops = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5).select($"id_b".as("doc_id"), lit(true).as("dropped"))
           .distinct()
-        val evalH = base.filter($"doc_id" % 50 === 0)
-          .select(explode(array_distinct(
-            TextFns.shingleHashes48(TextFns.tokens($"text"), 8))).as("hv"))
-          .distinct()
-        val contaminated = survivors
-          .select($"doc_id", explode(array_distinct(
-            TextFns.shingleHashes48(TextFns.tokens($"text"), 8))).as("hv"))
-          .join(broadcast(evalH), "hv")
-          .select($"doc_id", lit(true).as("contam")).distinct()
+        val contaminated = Curation.contaminatedIds(survivors, funnelEval(base))
+          .withColumn("contam", lit(true))
         exact
           .join(drops, Seq("doc_id"), "left")
           .join(contaminated, Seq("doc_id"), "left")
@@ -956,21 +904,8 @@ object TextOps {
               |3, 'near_dedup', n3, 4, 'final', n4) AS (stage_id, stage, n_docs)""".stripMargin))
           .orderBy($"stage_id")
       },
-      s"""WITH base AS (SELECT doc_id, text FROM documents),
-         |corpus AS (
-         |  SELECT doc_id, text FROM base
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text FROM base WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 100000, substr(text, strpos(text, ' ') + 1)
-         |  FROM base WHERE doc_id % 10 = 0),
-         |flagged AS (SELECT doc_id, text,
-         |  (len(string_split_regex(trim(text), '\\s+')) >= 20
-         |   AND len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-         |        x -> x IN ('the','a','of','and','to','in'))) >= 1
-         |   AND CAST(length(text) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+')) >= 3.0
-         |   AND CAST(length(text) AS DOUBLE) / len(string_split_regex(trim(text), '\\s+')) <= 12.0) AS q_ok
-         |  FROM corpus),
+      s"""WITH $funnelCorpusSql,
+         |$flaggedSql,
          |exact AS (SELECT doc_id, text, q_ok,
          |  (q_ok AND doc_id = MIN(CASE WHEN q_ok THEN doc_id END)
          |     OVER (PARTITION BY md5(text))) AS e_ok
@@ -986,22 +921,7 @@ object TextOps {
          |  SELECT id_a, id_b, ($agreeSql) / 16.0 AS est_sim
          |  FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b)
          |  WHERE est_sim >= 0.5),
-         |eval_h AS (SELECT DISTINCT CAST(concat('0x', substr(md5(s8), 1, 12)) AS BIGINT) AS hv
-         |  FROM (SELECT unnest(list_distinct(list_transform(
-         |    generate_series(1, len(tk) - 7),
-         |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
-         |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS s8
-         |    FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
-         |          FROM base WHERE doc_id % 50 = 0) WHERE len(tk) >= 8)),
-         |contam AS (SELECT DISTINCT doc_id FROM (
-         |  SELECT doc_id, CAST(concat('0x', substr(md5(s8), 1, 12)) AS BIGINT) AS hv
-         |  FROM (SELECT doc_id, unnest(list_distinct(list_transform(
-         |    generate_series(1, len(tk) - 7),
-         |    i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||
-         |         tk[i+4]||' '||tk[i+5]||' '||tk[i+6]||' '||tk[i+7]))) AS s8
-         |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-         |          FROM after_exact) WHERE len(tk) >= 8))
-         |  WHERE hv IN (SELECT hv FROM eval_h)),
+         |${contamSql("contam", "after_exact", "s8")},
          |full_flags AS (SELECT e.doc_id, e.q_ok, e.e_ok,
          |  (e.e_ok AND e.doc_id NOT IN (SELECT id_b FROM pairs)) AS nd_ok,
          |  (e.e_ok AND e.doc_id NOT IN (SELECT id_b FROM pairs)
@@ -1032,8 +952,8 @@ object TextOps {
           .union(corpus.filter($"doc_id" % 10 === 0)
             .select(($"doc_id" + 100000L).as("doc_id"),
               expr("substring(text, locate(' ', text) + 1)").as("text")))
-        val cs = Dedup.minhashSignatures(corpus, "doc_id", "text", K)
-        val bs = Dedup.minhashSignatures(batch, "doc_id", "text", K)
+        val cs = Dedup.minhashSignatures(corpus, "doc_id", k = K)
+        val bs = Dedup.minhashSignatures(batch, "doc_id", k = K)
         Dedup.incrementalBandMatches(cs, bs, "doc_id", K)
           .orderBy($"batch_id")
       },
@@ -1085,7 +1005,7 @@ object TextOps {
     q("q_dedup_clusters")(
       (s, d) => {
         import s.implicits._
-        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
         val comp = Dedup.connectedComponents(pairs)
@@ -1125,7 +1045,7 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val corpus = nearDupCorpus(s, d)
-        val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(corpus, "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
         val comp = Dedup.connectedComponents(pairs)
@@ -1197,7 +1117,7 @@ object TextOps {
       (s, d) => {
         import s.implicits._
         val corpus = nearDupCorpus(s, d)
-        val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", K)
+        val sig = Dedup.minhashSignatures(corpus, "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
         val comp = Dedup.connectedComponents(pairs)
@@ -1261,10 +1181,4 @@ object TextOps {
       """SELECT doc_id, octet_length(encode(text)) AS n_bytes, sha256(text) AS digest
         |FROM documents ORDER BY doc_id""".stripMargin)
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  val oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,21 +18,7 @@ import graft.functions.TextFns
   */
 object TextOps3 {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
-  // the repo-wide round-6 cosine contract (VectorOps' template) — the
-  // dense system of q_retrieval_metrics re-derives the SQ8 probe
-  private val cosineSqlBody =
-    """list_sum(list_transform(generate_series(1, len(@B@)), i -> CAST(@A@[i] AS DOUBLE) * CAST(@B@[i] AS DOUBLE)))
-      | / (sqrt(list_sum(list_transform(@A@, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |   * sqrt(list_sum(list_transform(@B@, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
-
-  private def cosineSql(a: String, b: String): String =
-    s"round(${cosineSqlBody.replace("@A@", a).replace("@B@", b)}, 6)"
-
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Per-source document cap — domain balancing: keep the first 10
     // docs of each source (the sf0.01 corpus has 25/source, so the
@@ -449,7 +434,8 @@ object TextOps3 {
         val queries = base.filter($"doc_id" % 40 === 0)
           .select($"doc_id".as("query_id"), slice(F.tokens($"text"), 2, 3).as("terms"))
           .filter(size($"terms") === 3)
-        val scored = graft.retrieval.Retrieval.bm25ScoreMulti(base, queries)
+        val scored = graft.retrieval.Retrieval.bm25ScoreMulti(
+          graft.retrieval.Retrieval.postingsOf(base), queries)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"query_id").orderBy($"score".desc, $"doc_id")
         val top = graft.util.CacheScope.pin(
@@ -543,7 +529,7 @@ object TextOps3 {
         val postings = graft.util.CacheScope.pin(R.postingsOf(base))
         val wQ = Window.partitionBy($"query_id").orderBy($"score".desc, $"doc_id")
         val bmTop = graft.util.CacheScope.pin(
-          R.bm25ScoreMultiOn(postings, queries)
+          R.bm25ScoreMulti(postings, queries)
             .withColumn("rank", row_number().over(wQ)).filter($"rank" <= 10)
             .select($"query_id", $"doc_id", $"rank"))
         val qt = queries.select($"query_id", explode($"terms").as("t0"))
@@ -751,27 +737,19 @@ object TextOps3 {
         |freq AS (SELECT hv, COUNT(*) AS n_occ FROM ch GROUP BY 1)
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
         |  CAST(SUM(CASE WHEN n_occ >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks
-        |FROM ch JOIN freq USING (hv) GROUP BY 1 ORDER BY doc_id""".stripMargin)
-  )
+        |FROM ch JOIN freq USING (hv) GROUP BY 1 ORDER BY doc_id""".stripMargin),
 
-  /** zlib-ratio repetitiveness signal — no portable cross-engine
-    * definition (deflate output is implementation-defined), so the
-    * driver records a rows-only check; values are pinned in
-    * `DedupSimSpec` instead.
-    */
-  private val noOracle: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_compress_ratio" -> ((s, d) => {
+    // zlib-ratio repetitiveness signal — no portable cross-engine
+    // definition (deflate output is implementation-defined), so the
+    // result gets a rows-only check; values are pinned in
+    // `DedupSimSpec` instead.
+    Query("q_compress_ratio", (s, d) => {
       import s.implicits._
       t(s, d, "documents")
         .select($"doc_id",
           round(TextFns.deflateRatio($"text"), 4).as("deflate_ratio"),
           TextFns.tokenCount($"text").as("n_tokens"))
         .orderBy($"doc_id")
-    }))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap ++ noOracle
-
-  val oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
+    }, None)
+  )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,11 +16,7 @@ import graft.functions.TextFns
   */
 object TextOps4 {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Benchmark decontamination: flag training docs sharing any 8-gram
     // with the eval set (doc_id % 50 = 0). Eval docs are a fixed tiny
@@ -384,10 +379,4 @@ object TextOps4 {
         |  CAST((rn - 1) // 8 + 1 AS BIGINT) AS pos
         |FROM ranked ORDER BY doc_id""".stripMargin)
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  val oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -21,17 +20,13 @@ import graft.functions.TextFns
   */
 object TextOps5 {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
   /** Shared oracle CTE: one row per token occurrence. */
   private val occSql =
     """occ AS (SELECT doc_id, lang, source,
       |  unnest(string_split_regex(trim(text), '\s+')) AS tok
       |  FROM documents WHERE trim(text) <> '')""".stripMargin
 
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Multinomial NB language classifier (Laplace +1), trained and
     // scored on the corpus — the closed-form stand-in for the
@@ -353,10 +348,4 @@ object TextOps5 {
         |WHERE c.doc_id % 50 <> 0
         |  AND c.doc_id NOT IN (SELECT doc_id FROM cont)
         |ORDER BY c.doc_id""".stripMargin))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  def oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -21,10 +21,6 @@ import graft.retrieval.Retrieval
   * and distances stay integer end-to-end.
   */
 object TextOps6 {
-
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
 
   /** Oracle fragment: 48-bit md5-derived hash of a string expr. */
   private def h48(e: String): String =
@@ -94,7 +90,7 @@ object TextOps6 {
        |$stepCtes""".stripMargin
   }
 
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Sorted-neighborhood near-dup detection (the windowed-scan
     // alternative to LSH banding: O(n·w) candidates, a HARD per-doc
@@ -602,10 +598,4 @@ object TextOps6 {
         |SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
         |FROM normed GROUP BY 1 HAVING COUNT(*) >= 2
         |ORDER BY text_hash""".stripMargin))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  def oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -21,19 +20,7 @@ import graft.curation.Sampling
   */
 object TextOps7 {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
-  private val cosineSqlBody =
-    """list_sum(list_transform(generate_series(1, len(@B@)), i -> CAST(@A@[i] AS DOUBLE) * CAST(@B@[i] AS DOUBLE)))
-      | / (sqrt(list_sum(list_transform(@A@, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |   * sqrt(list_sum(list_transform(@B@, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
-
-  private def cosineSql(a: String, b: String): String =
-    s"round(${cosineSqlBody.replace("@A@", a).replace("@B@", b)}, 6)"
-
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Multi-signal quality gate: entropy + repetition + language +
     // reference-LM bigram likelihood combine into one weighted keep
@@ -750,10 +737,4 @@ object TextOps7 {
         |  (wt.n_tokens * 2 < qs.q1 * 2 - (qs.q3 - qs.q1) * 3
         |   OR wt.n_tokens * 2 > qs.q3 * 2 + (qs.q3 - qs.q1) * 3) AS is_outlier
         |FROM wt JOIN qs USING (source) ORDER BY doc_id""".stripMargin))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  def oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -22,10 +22,6 @@ import graft.curation.Curation
   */
 object TextOps8 {
 
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
   /** The q_contamination_span planted fixture, shared: every 7th
     * non-eval doc gets one eval doc's 8-token prefix appended, so eval
     * docs carry real matched spans to measure. */
@@ -69,7 +65,7 @@ object TextOps8 {
       |m AS MATERIALIZED (SELECT doc_id, pos FROM ev
       |  WHERE hv IN (SELECT hv FROM tr))""".stripMargin
 
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Interval-union coverage of contaminated spans per eval doc —
     // [[Curation.spanUnionCoverage]]: union cardinality of all matched
@@ -533,10 +529,4 @@ object TextOps8 {
         |FROM cab JOIN c1 ON c1.w1 = cab.w1 JOIN c2 ON c2.w2 = cab.w2
         |CROSS JOIN n
         |ORDER BY pmi_ppm DESC, cab.w1, cab.w2 LIMIT 50""".stripMargin))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap
-
-  def oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
@@ -13,19 +12,7 @@ import graft.sim.Similarity
   */
 object VectorOps {
 
-  private val cosineSqlBody =
-    """list_sum(list_transform(generate_series(1, len(@B@)), i -> CAST(@A@[i] AS DOUBLE) * CAST(@B@[i] AS DOUBLE)))
-      | / (sqrt(list_sum(list_transform(@A@, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |   * sqrt(list_sum(list_transform(@B@, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
-
-  private def cosineSql(a: String, b: String): String =
-    s"round(${cosineSqlBody.replace("@A@", a).replace("@B@", b)}, 6)"
-
-  private def q(name: String)(fn: (SparkSession, String) => DataFrame,
-                              sql: String): (String, ((SparkSession, String) => DataFrame, String)) =
-    name -> ((fn, sql))
-
-  private val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
+  val all: Seq[Query] = Seq(
 
     // Brute-force cosine top-5 for each of 5 query vectors — the ANN
     // baseline (broadcast queries, map-only corpus scan).
@@ -904,7 +891,18 @@ object VectorOps {
           .select($"q_id", $"mmr_rank", $"id", $"score")
           .orderBy($"q_id", $"mmr_rank")
       },
-      mmrOracleSql(k = 4, c = 8))
+      mmrOracleSql(k = 4, c = 8)),
+
+    // k-means training is iterative float averaging — summation order
+    // makes exact cross-engine values unreasonable, so the result
+    // gets a rows-only check; semantics are pinned in `DedupSimSpec`
+    // (planted clusters recovered, sizes exact).
+    Query("q_kmeans", (s, d) => {
+      import s.implicits._
+      Similarity.kmeansFit(t(s, d, "embeddings"), "vec_id", "embedding", k = 8, iters = 3)
+        .select($"centroid_id", $"n_members")
+        .orderBy($"centroid_id")
+    }, None)
   )
 
   /** Unrolled-greedy MMR oracle: sel1 = plain argmax; each later step
@@ -950,23 +948,4 @@ object VectorOps {
        |SELECT q_id, mmr_rank, id, score FROM u$k
        |ORDER BY q_id, mmr_rank""".stripMargin
   }
-
-  /** k-means training is iterative float averaging — summation order
-    * makes exact cross-engine values unreasonable, so the driver
-    * records a rows-only check; semantics are pinned in `DedupSimSpec`
-    * (planted clusters recovered, sizes exact).
-    */
-  private val noOracle: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kmeans" -> ((s, d) => {
-      import s.implicits._
-      Similarity.kmeansFit(t(s, d, "embeddings"), "vec_id", "embedding", k = 8, iters = 3)
-        .select($"centroid_id", $"n_members")
-        .orderBy($"centroid_id")
-    }))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, (fn, _)) => n -> fn }.toMap ++ noOracle
-
-  val oracles: Map[String, String] =
-    defs.map { case (n, (_, sql)) => n -> sql }.toMap
 }

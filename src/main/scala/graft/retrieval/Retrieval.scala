@@ -69,7 +69,8 @@ object Retrieval {
     * is one (query_id, doc_id, score) row per query × candidate doc
     * pair sharing at least one term (docs matching no term of a query
     * are absent, not scored 0 — at corpus scale the zero rows are the
-    * whole corpus per query).
+    * whole corpus per query). The corpus arrives as its [[postingsOf]]
+    * frame, so a caller scoring several systems tokenizes it once.
     *
     * Same rational-idf variant as [[bm25Score]] (no log — every op
     * IEEE-exact); repeated query terms weight by their multiplicity
@@ -85,13 +86,15 @@ object Retrieval {
     * term-keyed; corpus stats are a 1-row broadcast. Work ∝ postings
     * of matched terms, never |queries| × |corpus|.
     */
-  def bm25ScoreMulti(docs: DataFrame, queries: DataFrame,
+  def bm25ScoreMulti(postingsIn: DataFrame, queries: DataFrame,
                      k1: Double = 1.2, b: Double = 0.75,
-                     textCol: String = "text", idCol: String = "doc_id",
+                     idCol: String = "doc_id",
                      queryIdCol: String = "query_id",
-                     termsCol: String = "terms"): DataFrame =
-    bm25ScoreMultiOn(postingsOf(docs, textCol, idCol), queries,
-      k1, b, idCol, queryIdCol, termsCol)
+                     termsCol: String = "terms"): DataFrame = {
+    val postings = graft.util.CacheScope.pin(postingsIn)
+    bm25OnQueryTerms(postings,
+      queryTermsOf(queries, queryIdCol, termsCol), k1, b, idCol, queryIdCol)
+  }
 
   /** The (idCol, term, len_d, tf) postings frame [[bm25ScoreMulti]]
     * scores over — exposed so a multi-system retrieval stack
@@ -101,7 +104,7 @@ object Retrieval {
     *
     * NULL-text docs produce no postings rows and are therefore
     * excluded from the corpus entirely — they appear in no ranking AND
-    * are absent from the n_docs/avgdl stats [[bm25ScoreMultiOn]]
+    * are absent from the n_docs/avgdl stats [[bm25ScoreMulti]]
     * re-derives from this frame (a corpus with NULL texts scores
     * slightly differently than one where those docs were counted as
     * empty; index NULL-free corpora, or coalesce NULLs to '' upstream
@@ -130,17 +133,6 @@ object Retrieval {
       .agg(count(lit(1)).cast("double").as("tf"))
   }
 
-  /** [[bm25ScoreMulti]] over a precomputed [[postingsOf]] frame. */
-  def bm25ScoreMultiOn(postingsIn: DataFrame, queries: DataFrame,
-                       k1: Double = 1.2, b: Double = 0.75,
-                       idCol: String = "doc_id",
-                       queryIdCol: String = "query_id",
-                       termsCol: String = "terms"): DataFrame = {
-    val postings = graft.util.CacheScope.pin(postingsIn)
-    bm25OnQueryTerms(postings,
-      queryTermsOf(queries, queryIdCol, termsCol), k1, b, idCol, queryIdCol)
-  }
-
   /** The (queryIdCol, term, qtf) multiset of a query frame — lowercased
     * terms with their in-query counts, the grain [[bm25OnQueryTerms]]
     * scores against. */
@@ -153,7 +145,7 @@ object Retrieval {
       .agg(count(lit(1)).cast("double").as("qtf"))
 
   /** BM25 scoring of a pre-exploded (queryIdCol, term, qtf) frame over
-    * pinned postings — the shared tail of [[bm25ScoreMultiOn]] and the
+    * pinned postings — the shared tail of [[bm25ScoreMulti]] and the
     * feedback pass of [[prfSearch]] (which re-scores an EXPANDED term
     * multiset no array column expresses).
     */

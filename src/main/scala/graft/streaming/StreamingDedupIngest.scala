@@ -386,7 +386,7 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
         }
       }
       val docs = novelD.localCheckpoint()
-      val sig = Dedup.minhashSignatures(docs, "doc_id", "text").localCheckpoint()
+      val sig = Dedup.minhashSignatures(docs, "doc_id").localCheckpoint()
 
       val intraDrops = Dedup.lshCandidatePairs(sig, "doc_id")
         .filter(col("est_sim") >= simThreshold)

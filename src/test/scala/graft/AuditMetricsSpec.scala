@@ -73,7 +73,7 @@ class AuditMetricsSpec extends SparkSpec {
   }
 
   test("q_kappa_gates cells partition every source's docs") {
-    val out = graft.queries.TextOps8.queries("q_kappa_gates")(spark, sf())
+    val out = SparkEntry.queries("q_kappa_gates")(spark, sf())
       .collect()
     assert(out.nonEmpty)
     out.foreach { r =>

@@ -45,9 +45,27 @@ class BenchSpec extends SparkSpec {
     assert(thrown.size >= 2 && thrown.elements.asScala.forall(_.isNull))
     assert(json.get("passes").get("q1_agg").elements.asScala.forall(_.isDouble))
     assert(keys(json.get("sentinel")) == Seq("every", "times", "median", "steady", "tier_contaminated"))
+    assert(json.get("sentinel").get("times").elements.asScala.forall(_.isDouble))
     assert(json.get("suspect").isArray)
     assert(keys(json.get("shuffle")) == names)
     assert(keys(json.get("shuffle").get("q_topn")) == Seq("w_rows", "w_bytes", "r_rows", "r_bytes"))
+  }
+
+  test("a sentinel probe that throws is null in times, out of the median, and contaminates the tier") {
+    val lookup: Bench.Lookup = {
+      case "q1_agg" => (_, _) => throw new IllegalStateException("planted sentinel failure")
+      case n => SparkEntry.queries(n)
+    }
+    val tier = withMeter(Bench.runTier(spark, sf(), Seq("q_topn"), _, lookup = lookup))
+    assert(tier.times.toMap.apply("q_topn") > 0)
+    assert(tier.sentinel.median == 0.0)
+    assert(tier.sentinel.tierContaminated)
+    val sentinel = mapper.readTree(tier.sentinel.json)
+    assert(keys(sentinel) == Seq("every", "times", "median", "steady", "tier_contaminated"))
+    assert(sentinel.get("times").size > 0 && sentinel.get("times").elements.asScala.forall(_.isNull))
+    assert(sentinel.get("median").asDouble == 0.0)
+    assert(sentinel.get("tier_contaminated").asBoolean)
+    assert(tier.suspect == Seq("q_topn"))
   }
 
   test("scale tier on a fixture without embeddings fails only the queries that read it") {

@@ -354,7 +354,7 @@ class ClassifySpec extends SparkSpec {
       .select($"doc_id").orderBy($"doc_id").collect().toSeq
     // tiny sketch (256 bits for ~hundreds of grams) forces a high FP
     // rate — the confirm join must still produce the exact answer
-    val viaBloomTiny = Curation.decontaminateBloom(corpus, eval, numBits = 256L)
+    val viaBloomTiny = Curation.decontaminateBloom(corpus, eval, Curation.Config(bloomNumBits = 256L))
       .select($"doc_id").orderBy($"doc_id").collect().toSeq
     val viaBloom = Curation.decontaminateBloom(corpus, eval)
       .select($"doc_id").orderBy($"doc_id").collect().toSeq

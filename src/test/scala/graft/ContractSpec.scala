@@ -21,50 +21,21 @@ class ContractSpec extends SparkSpec {
   }
 
   test("query names are unique across modules (map merge cannot clobber)") {
-    // the SparkEntry maps merge with ++, which silently overwrites on
-    // key collision — a new query reusing an existing name would
-    // DELETE the old one from the surface (round-17 nearly shipped
-    // exactly that: a second q_source_overlap). Compare per-module
-    // key multiset sizes against the merged map.
-    val modules = Seq(
-      "Relational" -> (_root_.graft.queries.Relational.queries.keySet,
-        _root_.graft.queries.Relational.oracles.keySet),
-      "TextOps" -> (_root_.graft.queries.TextOps.queries.keySet,
-        _root_.graft.queries.TextOps.oracles.keySet),
-      "VectorOps" -> (_root_.graft.queries.VectorOps.queries.keySet,
-        _root_.graft.queries.VectorOps.oracles.keySet),
-      "MediaOps" -> (_root_.graft.queries.MediaOps.queries.keySet,
-        _root_.graft.queries.MediaOps.oracles.keySet),
-      "Extra" -> (_root_.graft.queries.Extra.queries.keySet,
-        _root_.graft.queries.Extra.oracles.keySet),
-      "Temporal" -> (_root_.graft.queries.Temporal.queries.keySet,
-        _root_.graft.queries.Temporal.oracles.keySet),
-      "TextOps2" -> (_root_.graft.queries.TextOps2.queries.keySet,
-        _root_.graft.queries.TextOps2.oracles.keySet),
-      "TextOps3" -> (_root_.graft.queries.TextOps3.queries.keySet,
-        _root_.graft.queries.TextOps3.oracles.keySet),
-      "TextOps4" -> (_root_.graft.queries.TextOps4.queries.keySet,
-        _root_.graft.queries.TextOps4.oracles.keySet),
-      "TextOps5" -> (_root_.graft.queries.TextOps5.queries.keySet,
-        _root_.graft.queries.TextOps5.oracles.keySet),
-      "TextOps6" -> (_root_.graft.queries.TextOps6.queries.keySet,
-        _root_.graft.queries.TextOps6.oracles.keySet),
-      "TextOps7" -> (_root_.graft.queries.TextOps7.queries.keySet,
-        _root_.graft.queries.TextOps7.oracles.keySet),
-      "TextOps8" -> (_root_.graft.queries.TextOps8.queries.keySet,
-        _root_.graft.queries.TextOps8.oracles.keySet),
-      "GraphOps" -> (_root_.graft.queries.GraphOps.queries.keySet,
-        _root_.graft.queries.GraphOps.oracles.keySet))
-    val seen = scala.collection.mutable.Map[String, String]()
-    for ((mod, (qs, _)) <- modules; name <- qs) {
-      val prev = seen.get(name)
-      assert(prev.isEmpty,
-        s"query '$name' defined in both ${prev.getOrElse("?")} and $mod — " +
-          "the map merge silently drops one")
-      seen(name) = mod
-    }
-    assert(seen.size == SparkEntry.queries.size)
-    assert(modules.map(_._2._2.size).sum == SparkEntry.oracleSql.size)
+    // a plain map merge silently keeps one of two same-named queries
+    // (a second q_source_overlap once nearly shipped); the registry
+    // refuses the duplicate and names both modules
+    import graft.queries.Query
+    def dummy(sql: String) = Query("q_dup", (s, _) => s.range(1).toDF(), Some(sql))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registry(Seq("ModA" -> Seq(dummy("SELECT 1")), "ModB" -> Seq(dummy("SELECT 2")))))
+    assert(e.getMessage.contains("q_dup") && e.getMessage.contains("ModA") &&
+      e.getMessage.contains("ModB"), e.getMessage)
+    assert(SparkEntry.registry(Seq("ModA" -> Seq(dummy("SELECT 1")))).keySet == Set("q_dup"))
+  }
+
+  test("exactly the three engine-specific queries have no oracle") {
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      Set("q_approx_distinct", "q_kmeans", "q_compress_ratio"))
   }
 
   test("all queries execute at sf0.001 and their schemas have no duplicate columns") {

@@ -48,7 +48,7 @@ class DedupSimSpec extends SparkSpec {
       (2L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
       (3L, "w2 w3 w4 w5 w6 w7 w8 w9 w10 w11"),
       (4L, "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10")).toDF("doc_id", "text")
-    val sig = Dedup.minhashSignatures(df, "doc_id", "text").cache()
+    val sig = Dedup.minhashSignatures(df, "doc_id").cache()
     val rows = sig.orderBy($"doc_id").collect()
     val s1 = rows(0).toSeq.drop(1); val s2 = rows(1).toSeq.drop(1)
     val s3 = rows(2).toSeq.drop(1); val s4 = rows(3).toSeq.drop(1)
@@ -114,7 +114,7 @@ class DedupSimSpec extends SparkSpec {
     // sharing only content (not a degenerate key) are unaffected.
     val clones = (1 to 6).map(i => (i.toLong, "w1 w2 w3 w4 w5 w6 w7 w8"))
     val df = clones.toDF("doc_id", "text")
-    val sig = Dedup.minhashSignatures(df, "doc_id", "text")
+    val sig = Dedup.minhashSignatures(df, "doc_id")
     assert(Dedup.lshCandidatePairs(sig, "doc_id").count() == 15)
     assert(Dedup.lshCandidatePairs(sig, "doc_id", maxBandBucket = Some(5)).count() == 0)
     assert(Dedup.lshCandidatePairs(sig, "doc_id", maxBandBucket = Some(6)).count() == 15)
@@ -130,8 +130,8 @@ class DedupSimSpec extends SparkSpec {
       (12L, "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10")  // dup of 11 — NOT in corpus
     ).toDF("doc_id", "text")
     val m = Dedup.incrementalBandMatches(
-      Dedup.minhashSignatures(corpus, "doc_id", "text"),
-      Dedup.minhashSignatures(batch, "doc_id", "text"), "doc_id")
+      Dedup.minhashSignatures(corpus, "doc_id"),
+      Dedup.minhashSignatures(batch, "doc_id"), "doc_id")
       .as[(Long, Long, Long)].collect().map { case (b, mn, _) => b -> mn }.toMap
     assert(m == Map(10L -> 1L)) // within-batch dups are the full pass's job
   }

@@ -126,22 +126,18 @@ class MergeModelSpec extends SparkSpec {
     val df = (1L to 2000L).map(k => (k, s"v$k", k, k))
       .toDF("k", "v", "w", "ord").repartition(8)
     MergeWriter.mergeByKeys(spark, dir, df, Seq("k"), "ord", buckets = 4)
-    val bucketDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .iterator()
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
     var seen = 0
-    val it = new Iterator[java.nio.file.Path] {
-      def hasNext = bucketDirs.hasNext; def next() = bucketDirs.next()
-    }
-    it.filter(p => p.getFileName.toString.startsWith("_bucket="))
-      .foreach { b =>
-        seen += 1
-        val files = java.nio.file.Files.list(b).iterator()
-        var n = 0
-        while (files.hasNext) {
-          if (files.next().getFileName.toString.endsWith(".parquet")) n += 1
+    Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))) { walk =>
+      walk.iterator().asScala.filter(p => p.getFileName.toString.startsWith("_bucket="))
+        .foreach { b =>
+          seen += 1
+          val n = Using.resource(java.nio.file.Files.list(b))(
+            _.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")))
+          assert(n == 1, s"bucket dir $b holds $n parquet files, expected 1")
         }
-        assert(n == 1, s"bucket dir $b holds $n parquet files, expected 1")
-      }
+    }
     assert(seen == 4, s"expected 4 bucket dirs, saw $seen")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }

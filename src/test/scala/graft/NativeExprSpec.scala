@@ -26,7 +26,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("minhash signature: native one-pass == explode + groupBy aggregation") {
     val df = randomDocs(60, 1000L).toDF("doc_id", "text")
-    val native = graft.dedup.Dedup.minhashSignatures(df, "doc_id", "text")
+    val native = graft.dedup.Dedup.minhashSignatures(df, "doc_id")
 
     val exploded = df
       .select($"doc_id", explode(TextFns.shingleHashes32(TextFns.tokens($"text"), 3)).as("hv"))

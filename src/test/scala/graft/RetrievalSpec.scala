@@ -65,7 +65,7 @@ class RetrievalSpec extends SparkSpec {
       (100L, Seq("spark", "engine")),
       (200L, Seq("hash")),
       (300L, Seq("zzz_absent_term"))).toDF("query_id", "terms")
-    val multi = Retrieval.bm25ScoreMulti(docs, queries)
+    val multi = Retrieval.bm25ScoreMulti(Retrieval.postingsOf(docs), queries)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id")) ->
         r.getAs[Double]("score")).toMap
     // per query, the relational scores agree with the driver-side
