@@ -4,9 +4,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.util.NioLocalFileSystem
 
 /** Step 4 (Migrate): keyed upsert into the target without a lakehouse
   * format (SURVEY.md §2.2 K2, §7.3).
@@ -29,7 +32,10 @@ import org.apache.spark.sql.expressions.Window
   * O(touched buckets), not O(|target|): a 1k-row upsert against a
   * 100 TB target rewrites ~1k/B-th of it. An atomic `_CURRENT`
   * pointer swap publishes the manifest, so a crash mid-write leaves
-  * the old version intact (last-good pointer, §7.4).
+  * the old version intact (last-good pointer, §7.4). Each version also
+  * records its full snapshot schema in `_SCHEMA` (the columns it wrote
+  * plus the previous version's, for additive evolution), so reads take
+  * their schema from one small file instead of every parquet footer.
   *
   * Scale: the join shuffles the touched buckets and the update batch
   * by the key once; Catalyst broadcasts the update side automatically
@@ -46,6 +52,7 @@ object MergeWriter {
   private def pointerFile(targetDir: String) = Paths.get(targetDir, "_CURRENT")
   private def bucketsFile(targetDir: String) = Paths.get(targetDir, "_BUCKETS")
   private def manifestFile(targetDir: String, v: Int) = Paths.get(targetDir, s"v$v", "_MANIFEST")
+  private def schemaFile(targetDir: String, v: Int) = Paths.get(targetDir, s"v$v", "_SCHEMA")
 
   /** Current snapshot version, or -1 if the target is empty. */
   def currentVersion(targetDir: String): Int = {
@@ -123,10 +130,31 @@ object MergeWriter {
     }.toMap
   }
 
-  /** Read the current target snapshot; None when no version exists.
-    * `mergeSchema` because buckets written before an additive schema
-    * change carry the old column set — union them, missing → null.
+  /** Version `v`'s recorded snapshot schema; None for a version written
+    * before schemas were recorded.
     */
+  private def recordedSchema(targetDir: String, v: Int): Option[StructType] = {
+    val f = schemaFile(targetDir, v)
+    if (Files.exists(f)) Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
+    else None
+  }
+
+  /** Files `rels` (relative to targetDir) of version `v`, read with the
+    * version's full snapshot schema — buckets written before an additive
+    * schema change read the newer columns as null. A version without a
+    * recorded schema unions its files' footers instead (`mergeSchema`,
+    * one inference job).
+    */
+  private def readVersion(spark: SparkSession, targetDir: String, v: Int,
+                          rels: Iterable[String]): DataFrame = {
+    val paths = rels.map(rel => s"$targetDir/$rel").toSeq.sorted
+    recordedSchema(targetDir, v) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
+
+  /** Read the current target snapshot; None when no version exists. */
   def readTarget(spark: SparkSession, targetDir: String): Option[DataFrame] =
     readTargetAt(spark, targetDir, currentVersion(targetDir))
 
@@ -138,10 +166,7 @@ object MergeWriter {
   def readTargetAt(spark: SparkSession, targetDir: String, version: Int): Option[DataFrame] = {
     if (version < 0 || !Files.exists(manifestFile(targetDir, version))
       && !Files.isDirectory(Paths.get(targetDir, s"v$version"))) None
-    else {
-      val paths = manifest(targetDir, version).values.map(rel => s"$targetDir/$rel").toSeq.sorted
-      Some(spark.read.option("mergeSchema", "true").parquet(paths: _*))
-    }
+    else Some(readVersion(spark, targetDir, version, manifest(targetDir, version).values))
   }
 
   /** Bucket of one ALREADY-TYPED (catalyst-internal) key tuple under
@@ -175,9 +200,6 @@ object MergeWriter {
       case _ => false
     }
 
-  private val lookupSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), org.apache.spark.sql.types.StructType]()
-
   /** Point lookup: rows of snapshot `version` (default: current) whose
     * key is in `keys`, reading ONLY the bucket directories those keys
     * hash into — I/O is O(|keys| buckets), not O(|target|), which is
@@ -187,10 +209,10 @@ object MergeWriter {
     * into the parquet scan); null keys match nothing, as in SQL.
     *
     * The pruned read is forced to the FULL snapshot schema
-    * (`schemaHint`, or a mergeSchema pass over every file when absent)
-    * so additive schema evolution cannot make the result schema vary
-    * with which buckets the keys happen to hit — files predating an
-    * added column read it as null.
+    * (`schemaHint`, else the version's `_SCHEMA`, else a mergeSchema
+    * pass over every file) so additive schema evolution cannot make the
+    * result schema vary with which buckets the keys happen to hit —
+    * files predating an added column read it as null.
     *
     * None when there is no such version, the target is legacy
     * (pre-bucket-metadata), or the key type does not survive the
@@ -224,17 +246,8 @@ object MergeWriter {
     if (cur < 0 || !Files.exists(manifestFile(targetDir, cur))) return None
     bucketMeta(targetDir).flatMap { case (nB, keyCols) =>
       val m = manifest(targetDir, cur)
-      val all = m.values.map(rel => s"$targetDir/$rel").toSeq.sorted
-      // a version's manifest (hence its file set and merged schema) is
-      // immutable once written: compute the merged schema once per
-      // (target, version) rather than footer-reading every snapshot
-      // file on every lookup. (Deleting a target directory out-of-band
-      // and recreating it at the same path could leave a stale entry —
-      // every other piece of target state breaks loudly in that case.)
-      val schema = schemaHint.getOrElse(
-        lookupSchemaCache.computeIfAbsent(
-          (Paths.get(targetDir).toAbsolutePath.normalize.toString, cur),
-          _ => spark.read.option("mergeSchema", "true").parquet(all: _*).schema))
+      val schema = schemaHint.orElse(recordedSchema(targetDir, cur))
+        .getOrElse(readVersion(spark, targetDir, cur, m.values).schema)
       // resolve the key columns case-insensitively, like the rest of the
       // engine: _BUCKETS may record the ON-clause spelling while the
       // parquet column carries the source frame's
@@ -532,8 +545,11 @@ object MergeWriter {
 
     // ONE pass over the (possibly expensive) update chain: this action
     // both materializes the cache and yields the touched bucket set.
-    val batchTouched = dedupedObs.select(col("_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // Each partition reports its own distinct buckets (at most B values
+    // per partition) — no second exchange to deduplicate them
+    val batchTouched = dedupedObs.select(col("_bucket")).as(Encoders.scalaInt)
+      .mapPartitions((it: Iterator[Int]) => it.toSet.iterator)(Encoders.scalaInt)
+      .collect().toSet
 
     val cur = currentVersion(targetDir)
     val next = cur + 1
@@ -551,10 +567,9 @@ object MergeWriter {
     // old rows the merge must look at: touched buckets only (a legacy
     // self-contained snapshot has no bucket layout — read and rewrite
     // all of it once, migrating to the bucketed form)
-    val oldPaths =
-      if (legacy) oldManifest.values.map(rel => s"$targetDir/$rel").toSeq
-      else oldManifest.filter { case (b, _) => touched.contains(b) }
-        .values.toSet.map((rel: String) => s"$targetDir/$rel").toSeq.sorted
+    val oldRels =
+      if (legacy) oldManifest.values.toSeq
+      else oldManifest.filter { case (b, _) => touched.contains(b) }.values.toSeq.distinct
 
     // the @@ROWCOUNT-style action count rides the write job: rows that
     // actually insert, update, or delete (an unmatched tombstone takes
@@ -562,7 +577,7 @@ object MergeWriter {
     val actObs = new org.apache.spark.sql.Observation()
 
     val merged =
-      if (oldPaths.isEmpty) {
+      if (oldRels.isEmpty) {
         // empty target: every surviving row is an insert (the update
         // branch and its condition only ever guard MATCHED rows; the
         // insert condition and column list apply in full). A
@@ -589,9 +604,9 @@ object MergeWriter {
         }
         inserted.drop(("_gdel" +: "_gupd" +: "_gins" +: exprCols.toSeq): _*)
       } else {
-        // mergeSchema: touched buckets written before an additive
-        // schema change may carry older column sets
-        val target0 = spark.read.option("mergeSchema", "true").parquet(oldPaths: _*)
+        // read with the snapshot schema: touched buckets written before
+        // an additive schema change read the newer columns as null
+        val target0 = readVersion(spark, targetDir, cur, oldRels)
         val oldCols = target0.columns
         val targetB = if (oldCols.contains("_bucket")) target0
           else target0.withColumn("_bucket", keyHash)
@@ -771,34 +786,13 @@ object MergeWriter {
         if (legacy) joined else joined.filter(col("_bucket").isin(touched.toSeq: _*))
       }
 
-    // REBALANCE by bucket before the writer-feeding sort: without it
-    // every task holds rows of many buckets and the partitioned writer
-    // emits (tasks × touched buckets) small files — the small-file
-    // pathology that compounds at scale (each file is a listing entry,
-    // an open, a parquet footer). The AQE rebalance clusters each
-    // bucket into one task (one FILE per bucket directory), while
-    // staying size-adaptive at both ends: tiny write sets coalesce to
-    // a handful of tasks instead of one near-empty task per bucket,
-    // and a bucket bigger than the advisory partition size splits into
-    // several advisory-sized files rather than one giant one — the
-    // guide's 128 MB–1 GB output-file target, with the bucket count as
-    // the coarse knob. Costs one exchange of the touched rows
-    // (measured +0.5–1.4 s per merge at sf0.1 — pure barrier overhead
-    // on tiny data — and −13% on the same queries at 10×, where the
-    // write and its read-back dominate; the crossover is committed in
-    // bench_r22_merge10_*.json).
-    //
-    // Then the partition-local sort by (bucket, key): the file
-    // writer's required partition-column clustering is then already
-    // satisfied (no second sort), and every bucket file comes out
-    // KEY-SORTED — parquet row-group min/max stats on the key become
-    // tight, so the pushed key filter of a point lookup skips row
-    // groups WITHIN the one bucket it reads. At 100 TB that is the
-    // difference between reading a whole multi-GB bucket and a few row
-    // groups of it.
-    merged.hint("rebalance", col("_bucket"))
-      .sortWithinPartitions((col("_bucket") +: keyCols.map(col)): _*)
-      .write.mode("overwrite").partitionBy("_bucket").parquet(s"$targetDir/v$next/data")
+    // the new version's schema also keeps the columns that only the
+    // carried (untouched) buckets hold
+    val prior = if (cur < 0) None
+      else Some(recordedSchema(targetDir, cur)
+        .getOrElse(readVersion(spark, targetDir, cur, oldManifest.values).schema))
+    val written = writeBuckets(merged, targetDir, next, keyCols,
+      if (legacy) nB else touched.size, prior)
     // resolve AFTER the write job that carried the action observation.
     // Fallback (observation machinery unavailable, e.g. inside
     // foreachBatch): the deduped batch size — an upper bound that only
@@ -812,7 +806,6 @@ object MergeWriter {
     // write (every one of its rows deleted — the parquet writer emits
     // no dir for an empty partition) must NOT carry forward: the old
     // file still holds the deleted rows. It simply leaves the manifest.
-    val written = listBucketDirs(Paths.get(targetDir, s"v$next", "data"))
     val carried =
       if (legacy) Map.empty[Int, String]
       else oldManifest.filter { case (b, _) =>
@@ -838,6 +831,44 @@ object MergeWriter {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
 
     affected
+  }
+
+  /** Write `rows` (which carry `_bucket`) as the bucket directories of
+    * version `v`, key-sorted, exactly one file per bucket, and record the
+    * version's snapshot schema: the written columns, then any column of
+    * `prior` they lack. `buckets` is how many distinct buckets the rows
+    * can hold. Returns the buckets written.
+    *
+    * The hash exchange on `_bucket` sends every bucket to exactly one
+    * task, so each bucket directory gets one file by construction —
+    * without it every task holding rows of a bucket writes its own small
+    * file there (tasks × buckets files: each a listing entry, an open, a
+    * footer). Its width, min(buckets, default parallelism), spreads the
+    * per-file cost over the cores: a write coalesced into one task would
+    * create every bucket's file serially. The files are created through
+    * [[NioLocalFileSystem]], so a `file:` target starts no `chmod`
+    * process per file, whose cost swings with the host's load.
+    * A bucket is never split, so `B` remains the knob for file size.
+    *
+    * Then the partition-local sort by (bucket, key): the file writer's
+    * required partition-column clustering is then already satisfied (no
+    * second sort), and every bucket file comes out KEY-SORTED — parquet
+    * row-group min/max stats on the key become tight, so the pushed key
+    * filter of a point lookup skips row groups WITHIN the one bucket it
+    * reads.
+    */
+  private def writeBuckets(rows: DataFrame, targetDir: String, v: Int, keyCols: Seq[String],
+                           buckets: Int, prior: Option[StructType]): Set[Int] = {
+    val width = math.max(1, math.min(buckets, rows.sparkSession.sparkContext.defaultParallelism))
+    rows.repartition(width, col("_bucket"))
+      .sortWithinPartitions((col("_bucket") +: keyCols.map(col)): _*)
+      .write.options(NioLocalFileSystem.writeOptions)
+      .mode("overwrite").partitionBy("_bucket").parquet(s"$targetDir/v$v/data")
+    val cols = rows.schema.fields.filterNot(_.name == "_bucket").map(_.copy(nullable = true))
+    val carriedOnly = prior.toSeq.flatMap(_.fields)
+      .filterNot(p => p.name == "_bucket" || cols.exists(_.name.equalsIgnoreCase(p.name)))
+    Files.writeString(schemaFile(targetDir, v), StructType(cols ++ carriedOnly).json)
+    listBucketDirs(Paths.get(targetDir, s"v$v", "data"))
   }
 
   private def listBucketDirs(dataDir: Path): Set[Int] =
@@ -870,11 +901,8 @@ object MergeWriter {
       .withColumn("_bucket", pmod(hash(keyCols.map(col): _*), lit(nB)))
     val next = cur + 1
     // same one-file-per-bucket, key-sorted layout as the merge write path
-    keyed.hint("rebalance", col("_bucket"))
-      .sortWithinPartitions((col("_bucket") +: keyCols.map(col)): _*)
-      .write.mode("overwrite")
-      .partitionBy("_bucket").parquet(s"$targetDir/v$next/data")
-    val written = listBucketDirs(Paths.get(targetDir, s"v$next", "data"))
+    // (the full snapshot is read, so its columns are already all there)
+    val written = writeBuckets(keyed, targetDir, next, keyCols, nB, None)
     Files.writeString(manifestFile(targetDir, next),
       written.toSeq.sorted.map(b => s"$b\tv$next/data/_bucket=$b").mkString("", "\n", "\n"))
     val tmp = Paths.get(targetDir, s"_CURRENT.tmp$next")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.RunCatalog
 import graft.merge.MergeWriter
+import graft.model.Schemas
 import graft.ops.{Extract, Transform}
 import graft.sources.Ingest
 
@@ -84,7 +85,7 @@ class PipelineRunner(spark: SparkSession, catalog: RunCatalog, val workDir: Stri
         "Extract" -> (() => {
           val obs = new org.apache.spark.sql.Observation()
           Ingest.writeRunSlice(Extract.clean(
-            Extract.extract(Ingest.readStage(spark, landingDir, runId))
+            Extract.extract(Ingest.readStage(spark, landingDir, runId, Schemas.landing))
               .observe(obs,
                 sum(when(col("reject_reason").isNotNull, 1L).otherwise(0L)).as("n_rej"),
                 sum(when(col("reject_reason").isNull, 1L).otherwise(0L)).as("n_clean"))),
@@ -92,7 +93,8 @@ class PipelineRunner(spark: SparkSession, catalog: RunCatalog, val workDir: Stri
           val nRej = Option(obs.get("n_rej")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
           if (nRej > 0) {
             Ingest.writeRunSlice(
-              Extract.rejects(Extract.extract(Ingest.readStage(spark, landingDir, runId))),
+              Extract.rejects(Extract.extract(
+                Ingest.readStage(spark, landingDir, runId, Schemas.landing))),
               rejectsDir, runId, subPartition = Some("rejected_in" -> "Extract"))
             catalog.log(runId, "Warning", 2, s"$nRej rows rejected", Some("see rejected_orders"))
           }
@@ -101,7 +103,7 @@ class PipelineRunner(spark: SparkSession, catalog: RunCatalog, val workDir: Stri
         "Transform" -> (() => {
           val obs = new org.apache.spark.sql.Observation()
           Ingest.writeRunSlice(Transform.clean(
-            Transform.transform(Ingest.readStage(spark, stagingDir, runId))
+            Transform.transform(Ingest.readStage(spark, stagingDir, runId, Schemas.staging))
               .observe(obs,
                 sum(when(col("reject_reason").isNotNull, 1L).otherwise(0L)).as("n_rej"),
                 sum(when(col("reject_reason").isNull, 1L).otherwise(0L)).as("n_clean"))),
@@ -109,14 +111,15 @@ class PipelineRunner(spark: SparkSession, catalog: RunCatalog, val workDir: Stri
           val nRej = Option(obs.get("n_rej")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
           if (nRej > 0) {
             Ingest.writeRunSlice(
-              Transform.rejects(Transform.transform(Ingest.readStage(spark, stagingDir, runId))),
+              Transform.rejects(Transform.transform(
+                Ingest.readStage(spark, stagingDir, runId, Schemas.staging))),
               rejectsDir, runId, subPartition = Some("rejected_in" -> "Transform"))
             catalog.log(runId, "Warning", 3, s"$nRej rows rejected (negative amount)", None)
           }
           Option(obs.get("n_clean")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
         }),
         "Migrate" -> (() => {
-          val updates = Ingest.readStage(spark, transDir, runId)
+          val updates = Ingest.readStage(spark, transDir, runId, Schemas.transformed)
             .select(col("order_id"), col("customer_id"), col("amount"), col("order_date"),
               col("amount_category"), monotonically_increasing_id().as("_src_order"))
           val n = MergeWriter.merge(spark, targetDir, updates, "order_id", "_src_order")

@@ -2,8 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
+import graft.util.NioLocalFileSystem
 
 /** Step 1 (Data Pull): CSV/JSON ingestion into the landing stage
   * (SURVEY.md §2.1 S1-S3, §2.2 K1).
@@ -85,7 +87,8 @@ object Ingest {
 
   /** One run's slice of a stage written as its own physical partition
     * directory (`<stage>/run_id=<id>/...`), the `run_id` column
-    * restored by partition discovery on read. Writing the leaf
+    * restored on read (by [[readStage]], or by partition discovery
+    * when the whole stage is read). Writing the leaf
     * directly (instead of partitionBy on the stage root) means
     * concurrent runs never share an output path — a shared root
     * write races on the job's `_temporary` staging dir, which is
@@ -99,7 +102,7 @@ object Ingest {
       case None => s"$stageDir/run_id=$runId"
     }
     df.drop("run_id" +: subPartition.map(_._1).toSeq: _*)
-      .write.mode("overwrite").parquet(leaf)
+      .write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(leaf)
   }
 
   /** Landing write (K1): per-run leaf dir so run-scoped reads (S4)
@@ -113,7 +116,17 @@ object Ingest {
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** Run-scoped stage scan (S4): partition-pruned read. */
-  def readStage(spark: SparkSession, stageDir: String, runId: String): DataFrame =
-    spark.read.parquet(stageDir).filter(col("run_id") === runId)
+  /** Run-scoped stage scan (S4): reads only this run's leaf directory
+    * with the stage's declared schema (`Schemas.landing`/`staging`/
+    * `transformed`) and restores `run_id` as a literal. Other runs'
+    * slices are never listed, and no footer is read to infer the
+    * schema, so the scan launches no Spark job of its own.
+    */
+  def readStage(spark: SparkSession, stageDir: String, runId: String,
+                schema: StructType): DataFrame = {
+    val data = schema.fields.filterNot(_.name == "run_id")
+    spark.read.schema(StructType(data)).parquet(s"$stageDir/run_id=$runId")
+      .select(schema.fields.toSeq.map(f =>
+        if (f.name == "run_id") lit(runId).as("run_id") else col(f.name)): _*)
+  }
 }

@@ -142,6 +142,71 @@ class MergeModelSpec extends SparkSpec {
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
+  test("a tiny write still spreads its bucket files over min(buckets, parallelism) tasks") {
+    val spark2 = spark; import spark2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("merge_tiny").toString
+    // one input partition, 32 buckets: the write must neither emit more
+    // than one file per bucket nor fall back to one task writing all 32
+    val df = (1L to 2000L).map(k => (k, s"v$k", k)).toDF("k", "v", "ord").coalesce(1)
+    MergeWriter.mergeByKeys(spark, dir, df, Seq("k"), "ord", buckets = 32)
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    val files = Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "v0", "data"))) {
+      _.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toList
+    }
+    assert(files.size == 32, s"expected one file per bucket, got ${files.size}")
+    // the writer names each file part-<task partition>-...
+    val tasks = files.map(_.split("-")(1)).toSet
+    assert(tasks.size == math.min(32, spark.sparkContext.defaultParallelism),
+      s"files written by ${tasks.size} tasks: ${tasks.toSeq.sorted.mkString(",")}")
+    graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+  }
+
+  test("bucket files are created through java.nio with the default write's permissions") {
+    import graft.util.NioLocalFileSystem
+    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.permission.FsPermission
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    val spark2 = spark; import spark2.implicits._
+    // the writer options route a write's file: paths to the java.nio file system
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    NioLocalFileSystem.writeOptions.foreach { case (k, v) => conf.set(k, v) }
+    val probe = Files.createTempDirectory("nio_fs")
+    assert(new org.apache.hadoop.fs.Path(probe.toUri).getFileSystem(conf).isInstanceOf[NioLocalFileSystem])
+    // the same bits chmod would set
+    val f = Files.createFile(probe.resolve("f"))
+    val raw = new NioLocalFileSystem.Raw
+    Seq("750" -> "rwxr-x---", "604" -> "rw----r--", "644" -> "rw-r--r--").foreach { case (octal, bits) =>
+      raw.setPermission(new org.apache.hadoop.fs.Path(f.toUri), new FsPermission(octal))
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f)) == bits, octal)
+    }
+    // a merge's bucket files (and their checksums) get what a default write gives
+    def perms(root: Path): Set[(Boolean, String)] = Using.resource(Files.walk(root)) {
+      _.iterator().asScala.filterNot(_ == root)
+        .map(p => Files.isDirectory(p) -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+    }
+    val df = (1L to 200L).map(k => (k, s"v$k", k)).toDF("k", "v", "ord")
+    val merged = probe.resolve("merged").toString
+    // the merge and the stage writes really go through it
+    @annotation.nowarn("cat=deprecation")
+    val viaNio = org.apache.hadoop.fs.FileSystem.getStatistics("file", classOf[NioLocalFileSystem.Raw])
+    def writesThroughNio(body: => Unit): Boolean = {
+      val before = viaNio.getBytesWritten
+      body
+      viaNio.getBytesWritten > before
+    }
+    assert(writesThroughNio(MergeWriter.mergeByKeys(spark, merged, df, Seq("k"), "ord", buckets = 4)))
+    assert(writesThroughNio(graft.sources.Ingest.writeRunSlice(df, probe.resolve("stage").toString, "r1")))
+    df.write.partitionBy("ord").parquet(probe.resolve("plain").toString)
+    val data = Paths.get(merged, "v0", "data")
+    assert(perms(data).nonEmpty && perms(data) == perms(probe.resolve("plain")),
+      s"${perms(data)} != ${perms(probe.resolve("plain"))}")
+    assert(MergeWriter.readTarget(spark, merged).get.count() == 200L)
+    graft.util.Fs.deleteRecursively(probe)
+  }
+
   test("snapshotDiff classifies inserts/deletes/updates, drops unchanged, null-safe") {
     import graft.merge.SnapshotDiff
     val spark2 = spark; import spark2.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -166,6 +166,56 @@ class OpsSpec extends SparkSpec {
       .select($"order_id", $"customer_id", $"region")
       .collect().map(r => r.getString(0) -> (r.getString(1), Option(r.getString(2)))).toMap
     assert(afterCompact == rows)
+  }
+
+  test("merge schema evolution across carried buckets: recorded schemas, legacy layout, compact") {
+    val dir = Files.createTempDirectory("graft_evo_carried").toString + "/target"
+    val nB = 16
+    // keys of the low buckets (group A) and of buckets no row reaches
+    // until the last merge (group B)
+    val byBucket = (1 to 400).map(i => s"K$i").toDF("k")
+      .select($"k", pmod(hash($"k"), lit(nB))).as[(String, Int)].collect()
+    val a = byBucket.filter(_._2 < 4).map(_._1).take(6).toSeq
+    val b = byBucket.filter(_._2 >= 12).map(_._1).take(3).toSeq
+    def upsert(df: org.apache.spark.sql.DataFrame) =
+      MergeWriter.merge(spark, dir, df, "order_id", "_src_order", buckets = nB)
+    upsert(a.map(k => (k, "A", 1)).toDF("order_id", "customer_id", "_src_order"))
+    // v1 adds a column in two of group A's buckets
+    upsert(a.take(2).map(k => (k, "A2", "EU", 1)).toDF("order_id", "customer_id", "region", "_src_order"))
+    // v2 touches only group B's (so far empty) buckets, without the new
+    // column: group A's buckets, the only ones holding it, are carried
+    upsert(b.map(k => (k, "B", 1)).toDF("order_id", "customer_id", "_src_order"))
+
+    val cols = Set("order_id", "customer_id", "region", "migrated_at")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.select($"order_id", $"customer_id", $"region")
+      .collect().map(r => r.getString(0) -> (r.getString(1), Option(r.getString(2)))).toMap
+    val expected = (a.drop(2).map(_ -> (("A", None))) ++ a.take(2).map(_ -> (("A2", Some("EU")))) ++
+      b.map(_ -> (("B", None)))).toMap
+    def check(stage: String): Unit = {
+      val t = MergeWriter.readTarget(spark, dir).get
+      assert(t.columns.toSet == cols, s"$stage: readTarget columns ${t.columns.mkString(",")}")
+      assert(rowsOf(t) == expected, stage)
+      val probe = Seq(a.head, a.last, b.head)
+      val keyed = MergeWriter.readTargetKeys(spark, dir, probe).get
+      assert(keyed.columns.toSet == cols, s"$stage: readTargetKeys columns ${keyed.columns.mkString(",")}")
+      assert(rowsOf(keyed) == expected.filter(e => probe.contains(e._1)), stage)
+      // B's key alone hits only a bucket written without the column
+      assert(MergeWriter.readTargetKeys(spark, dir, Seq(b.head)).get.columns.toSet == cols, stage)
+      assert(MergeWriter.readTargetAt(spark, dir, 0).get.columns.toSet == cols - "region", stage)
+      assert(MergeWriter.readTargetAt(spark, dir, 1).get.columns.toSet == cols, stage)
+      assert(MergeWriter.readTargetAt(spark, dir, 2).get.columns.toSet == cols, stage)
+    }
+    (0 to 2).foreach(v => assert(Files.exists(Paths.get(dir, s"v$v", "_SCHEMA"))))
+    check("recorded schemas")
+
+    // the layout written before schemas were recorded: footers decide
+    (0 to 2).foreach(v => Files.delete(Paths.get(dir, s"v$v", "_SCHEMA")))
+    check("no _SCHEMA files")
+
+    MergeWriter.compact(spark, dir)
+    assert(Files.exists(Paths.get(dir, "v3", "_SCHEMA")), "compact records the schema")
+    val compacted = MergeWriter.readTarget(spark, dir).get
+    assert(compacted.columns.toSet == cols && rowsOf(compacted) == expected)
   }
 
   test("merge vacuum never drops referenced versions; compact releases them") {

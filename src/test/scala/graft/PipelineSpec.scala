@@ -2,11 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.RunCatalog
 import graft.merge.MergeWriter
+import graft.model.Schemas
 import graft.runner.PipelineRunner
+import graft.sources.Ingest
 
 /** Golden end-to-end runs over the reference fixture shapes
   * (FIXTURES.md §1-§3): CSV/JSON, messy headers, bad data, upsert
@@ -391,5 +396,99 @@ class PipelineSpec extends SparkSpec {
     assert(out("D2") == (Some("2024-02-29"), None))
     assert(out("D3") == (Some("2024-03-15"), None))
     assert(out("D4") == (None, Some("unparseable_date")))
+  }
+
+  /** (name, type) of each column, in order: nullability aside, what a
+    * declared-schema read relies on. */
+  private def shape(s: StructType): Seq[(String, String)] =
+    s.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
+
+  test("jobs per step stay within their ceilings on a clean file") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val work = Files.createTempDirectory("graft_pipe").toString
+    val stepKey = "graft.test.step"
+    // tag each job with the step the runner thread is in: local
+    // properties travel with every job that thread submits
+    val cat = new RunCatalog(spark, s"$work/catalog") {
+      override def updateStep(runId: String, stepNumber: Int, status: String,
+                              rowsAffected: Long, error: Option[String]): Unit = {
+        spark.sparkContext.setLocalProperty(stepKey,
+          if (status == "Running") s"$runId/$stepNumber" else null)
+        super.updateStep(runId, stepNumber, status, rowsAffected, error)
+      }
+    }
+    val runner = new PipelineRunner(spark, cat, work)
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = tags.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty(stepKey))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val first = runner.run(writeFixture("jobs1.csv", sampleCsv))
+      // the steady state: two updates and one insert into a non-empty target
+      val second = runner.run(writeFixture("jobs2.csv",
+        """OrderId,CustomerId,Amount,OrderDate
+          |ORD-001,C9,10.00,2025-02-01
+          |ORD-003,C9,20.00,2025-02-02
+          |ORD-009,C9,30.00,2025-02-03
+          |""".stripMargin))
+      assert(first.status == "Success" && second.status == "Success")
+      // a fence job: the listener bus delivers in order, so once it is
+      // seen every job of both runs has been counted
+      spark.sparkContext.setLocalProperty(stepKey, "fence")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setLocalProperty(stepKey, null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!tags.contains("fence") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(tags.contains("fence"), "listener never saw the fence job")
+      for (r <- Seq(first, second)) {
+        val n = (1 to 4).map(step => tags.asScala.count(_ == s"${r.runId}/$step"))
+        val Seq(pull, extract, transform, migrate) = n
+        assert(pull == 2 && extract == 1 && transform == 1 && migrate <= 6,
+          s"jobs per step (pull, extract, transform, migrate) = ${n.mkString(", ")}")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.setLocalProperty(stepKey, null)
+    }
+  }
+
+  test("stage reads are run-scoped: other runs' slices change neither rows nor schema") {
+    val (work, _, runner) = freshDirs()
+    // earlier runs' slices in the same stage dirs: one with an extra
+    // column, one with a different column set and a clashing type
+    Seq(("X-1", "C1", "1.00", "2025-01-01", "extra")).toDF(
+        "order_id", "customer_id", "amount", "order_date", "note")
+      .withColumn("source_type", lit("CSV")).withColumn("raw_payload", lit("{}"))
+      .withColumn("loaded_at", current_timestamp())
+      .write.parquet(s"$work/landing_orders/run_id=old-1")
+    Seq(("X-2", 7)).toDF("order_id", "amount").write.parquet(s"$work/landing_orders/run_id=old-2")
+    Seq(("X-3", 7)).toDF("order_id", "amount").write.parquet(s"$work/staging_orders/run_id=old-2")
+
+    val res = runner.run(writeFixture("scoped.csv", sampleCsv))
+    assert(res.status == "Success", s"run: ${res.status}")
+    val landing = Ingest.readStage(spark, s"$work/landing_orders", res.runId, Schemas.landing)
+    assert(shape(landing.schema) == shape(Schemas.landing))
+    assert(landing.select($"order_id").as[String].collect().sorted.toSeq ==
+      Seq("ORD-001", "ORD-002", "ORD-003", "ORD-004", "ORD-005"))
+    assert(landing.select($"run_id").distinct().as[String].collect().toSeq == Seq(res.runId))
+    val target = MergeWriter.readTarget(spark, runner.targetDir).get
+    assert(target.select($"order_id").as[String].collect().sorted.toSeq ==
+      Seq("ORD-001", "ORD-002", "ORD-003", "ORD-004", "ORD-005"))
+  }
+
+  test("each step writes exactly its declared stage schema") {
+    val (work, _, runner) = freshDirs()
+    val res = runner.run(writeFixture("declared.csv", sampleCsv))
+    assert(res.status == "Success")
+    // readStage reads these slices with the declared schemas: a drift
+    // in a step's output would read back as nulls, so it fails here
+    for ((stage, declared) <- Seq("landing_orders" -> Schemas.landing,
+        "staging_orders" -> Schemas.staging, "staging_orders_transformed" -> Schemas.transformed)) {
+      val written = spark.read.parquet(s"$work/$stage/run_id=${res.runId}").schema
+      assert(shape(written) == shape(declared).filterNot(_._1 == "run_id"), s"$stage: ${written.simpleString}")
+    }
+    assert(shape(MergeWriter.readTarget(spark, runner.targetDir).get.schema) == shape(Schemas.target))
   }
 }
