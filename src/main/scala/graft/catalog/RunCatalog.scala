@@ -248,7 +248,7 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
     * that lets a streaming ingest record its funnel stages (quality,
     * dedup, …) through the SAME run/step tables the batch pipeline
     * uses, so `GET /runs/:id` shows one observability surface for
-    * both (see [[graft.streaming.StreamingDedupIngest.recordToCatalog]]).
+    * both (see [[recordFunnel]]).
     */
   def startRunWithSteps(pipelineName: String, steps: Seq[String]): String = {
     require(steps.nonEmpty, "a run needs at least one step")
@@ -285,6 +285,28 @@ class RunCatalog(private[graft] val spark: SparkSession, val dir: String,
 
   def finishRun(runId: String, status: String): Unit =
     append(runsStore, Seq(PipelineRun(runId, -1L, "", status, now(), Some(now()))))
+
+  /** Record a streaming gate's disposition ledger as one finished run
+    * whose steps are the funnel `stages` in pipeline order, with
+    * `rows_affected` = the ledger rows at that stage (drops per gate,
+    * survivors at 'admitted'), so `GET /runs/:id` serves an ingest
+    * funnel next to batch step rows with no new contract. Each call
+    * aggregates the (compaction-folded, replay-idempotent) ledger once
+    * and records one snapshot of cumulative counts — call it at a
+    * reporting cadence, not per batch. The collect is |stages| rows,
+    * never row-grain. Returns the run id.
+    */
+  def recordFunnel(pipelineName: String, stages: Seq[String], ledger: DataFrame): String = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val counts = ledger.groupBy(col("stage")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val runId = startRunWithSteps(pipelineName, stages)
+    stages.zipWithIndex.foreach { case (st, i) =>
+      updateStepNamed(runId, i + 1, st, "Success", counts.getOrElse(st, 0L))
+    }
+    finishRun(runId, "Success")
+    runId
+  }
 
   def log(runId: String, level: String, stepNumber: Int, message: String,
           details: Option[String] = None): Unit =

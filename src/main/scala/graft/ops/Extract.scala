@@ -32,8 +32,8 @@ object Extract {
     coalesce(formats.map(f => try_to_date(c, f)): _*)
 
   /** E1-E7 on a landing frame. Output = staging columns + `reject_reason`
-    * (null = clean). Callers split on it: clean rows → staging,
-    * reject rows → the rejects store.
+    * (null = clean). Callers split on it ([[Validation]]): clean rows →
+    * staging, reject rows → the rejects store.
     */
   def extract(landing: DataFrame): DataFrame = extract(landing, DefaultDateFormats)
 
@@ -52,12 +52,6 @@ object Extract {
       .withColumn("reject_reason",
         when(col("amount").isNull, "unparseable_amount")
           .when(col("order_date").isNull, "unparseable_date"))
-
-  def clean(extracted: DataFrame): DataFrame =
-    extracted.filter(col("reject_reason").isNull).drop("reject_reason")
-
-  def rejects(extracted: DataFrame): DataFrame =
-    extracted.filter(col("reject_reason").isNotNull)
 }
 
 /** Step 3 (Transform): derived amount_category (SURVEY.md §2.4).
@@ -81,10 +75,15 @@ object Transform {
     staging
       .withColumn("amount_category", amountCategory(col("amount")))
       .withColumn("reject_reason", when(col("amount") < 0, "negative_amount"))
+}
 
-  def clean(transformed: DataFrame): DataFrame =
-    transformed.filter(col("reject_reason").isNull).drop("reject_reason")
+/** The split of a validated frame ([[Extract.extract]],
+  * [[Transform.transform]]) on its `reject_reason` column. */
+object Validation {
 
-  def rejects(transformed: DataFrame): DataFrame =
-    transformed.filter(col("reject_reason").isNotNull)
+  def clean(validated: DataFrame): DataFrame =
+    validated.filter(col("reject_reason").isNull).drop("reject_reason")
+
+  def rejects(validated: DataFrame): DataFrame =
+    validated.filter(col("reject_reason").isNotNull)
 }

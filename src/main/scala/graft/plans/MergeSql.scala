@@ -415,57 +415,34 @@ case class CompactStreamsCommand(workDir: String) extends LeafRunnableCommand {
     "image_band_index" -> "image_band_index", "image_ledger" -> "image_ledger",
     "audio_band_index" -> "audio_band_index", "audio_ledger" -> "audio_ledger")
 
-  private def leafIds(dir: java.nio.file.Path): Seq[Long] =
-    if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList.flatMap { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("batch_id="))
-            scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
-          else None
-        }
-      } finally s.close()
-    }
-
   override def run(session: SparkSession): Seq[Row] = {
     def counts(): Map[String, Seq[Long]] = stores.flatMap { case (name, sub) =>
-      val ids = leafIds(java.nio.file.Paths.get(workDir, sub.split('/'): _*))
-      if (ids.isEmpty && !java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(workDir, sub.split('/'): _*))) None
-      else Some(name -> ids)
+      val store = new graft.streaming.LeafStore(session, s"$workDir/$sub")
+      if (store.exists) Some(name -> store.ids()) else None
     }.toMap
     val before = counts()
     require(before.nonEmpty,
       s"COMPACT STREAMS: no streaming stores under $workDir")
     // fold strictly BELOW the newest batch leaf (horizon = max leaf id,
-    // exclusive): the replay contracts (StreamingBandGate.readIndex /
-    // StreamingDedupIngest.readIndex / VectorIndexStore.probe
-    // excludeBatch) can only exclude a leaf literally named
-    // batch_id=<n> — if an operator ran this command after a crash
-    // where the sink committed batch N but the checkpoint did not, a
-    // consolidated segment containing leaf N would make the replay of
-    // batch N self-match every previously-admitted row (Hamming 0 /
-    // cosine 1.0) and mis-ledger them as near-dups. Leaf count stays
-    // bounded: everything below the newest still folds.
+    // exclusive): the replay contract (LeafStore.read's exclude,
+    // VectorIndexStore.probe's excludeBatch) can only exclude a leaf
+    // literally named batch_id=<n> — if an operator ran this command
+    // after a crash where the sink committed batch N but the checkpoint
+    // did not, a consolidated segment containing leaf N would make the
+    // replay of batch N self-match every previously-admitted row
+    // (Hamming 0 / cosine 1.0) and mis-ledger them as near-dups. Leaf
+    // count stays bounded: everything below the newest still folds.
     val horizon = before.valuesIterator.flatten.filter(_ >= 0)
       .foldLeft(-1L)(math.max)
     if (horizon > 0) {
+      def has(d: String) = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(workDir, d))
       new graft.streaming.StreamingDedupIngest(session, workDir).compact(horizon)
-      if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(workDir, "vector_index")))
-        new graft.sim.VectorIndexStore(session, s"$workDir/vector_index")
-          .compact(horizon)
-      if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(workDir, "image_band_index")))
-        new graft.streaming.StreamingImageIngest(session, workDir)
-          .compact(horizon)
-      if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(workDir, "audio_band_index")))
-        new graft.streaming.StreamingAudioIngest(session, workDir)
-          .compact(horizon)
+      if (has("vector_index"))
+        new graft.sim.VectorIndexStore(session, s"$workDir/vector_index").compact(horizon)
+      if (has("image_band_index"))
+        new graft.streaming.StreamingImageIngest(session, workDir).compact(horizon)
+      if (has("audio_band_index"))
+        new graft.streaming.StreamingAudioIngest(session, workDir).compact(horizon)
     }
     val after = counts()
     before.keys.toSeq.sorted.map { name =>
@@ -570,9 +547,11 @@ case class VectorStoreMaintenanceCommand(storeDir: String, vacuum: Boolean)
     val before = store.leafCount().toLong
     if (vacuum) store.vacuum()
     else {
-      // fold everything committed: horizon = max add-leaf id + 1 (the
-      // COMPACT STREAMS convention; negative consolidated segments
-      // ride along inside the fold)
+      // fold everything committed, the newest add leaf included:
+      // horizon = max add-leaf id + 1 (negative consolidated segments
+      // ride along inside the fold). Unlike COMPACT STREAMS, which
+      // folds strictly below the newest leaf to keep a stream's
+      // crash replay exact, a standalone store has no stream to replay.
       val horizon = store.leafIds().filter(_ >= 0).foldLeft(-1L)(math.max) + 1
       store.compact(horizon)
     }

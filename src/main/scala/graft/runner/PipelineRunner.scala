@@ -2,13 +2,13 @@ package graft.runner
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.RunCatalog
 import graft.merge.MergeWriter
 import graft.model.Schemas
-import graft.ops.{Extract, Transform}
+import graft.ops.{Extract, Transform, Validation}
 import graft.sources.Ingest
 
 /** Run lifecycle: the sequential 4-step DAG with fail-fast, rows-
@@ -66,6 +66,31 @@ class PipelineRunner(spark: SparkSession, catalog: RunCatalog, val workDir: Stri
     (runId, scala.concurrent.Future(runWithId(runId, sourcePath)))
   }
 
+  /** A validated step (Extract, Transform): the clean rows write in ONE
+    * pass with the counts riding on an Observation; the rejects write
+    * (a cheap filtered re-read, `validated` is evaluated again) runs
+    * only when the observed reject count is non-zero, and logs a
+    * Warning. Returns the clean row count.
+    */
+  private def validatedStep(runId: String, stepNumber: Int, stepName: String,
+                            validated: => DataFrame, outDir: String,
+                            warning: Long => String, details: Option[String]): Long = {
+    val obs = new org.apache.spark.sql.Observation()
+    Ingest.writeRunSlice(Validation.clean(validated.observe(obs,
+        sum(when(col("reject_reason").isNotNull, 1L).otherwise(0L)).as("n_rej"),
+        sum(when(col("reject_reason").isNull, 1L).otherwise(0L)).as("n_clean"))),
+      outDir, runId)
+    def observed(name: String): Long =
+      Option(obs.get(name)).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
+    val nRej = observed("n_rej")
+    if (nRej > 0) {
+      Ingest.writeRunSlice(Validation.rejects(validated), rejectsDir, runId,
+        subPartition = Some("rejected_in" -> stepName))
+      catalog.log(runId, "Warning", stepNumber, warning(nRej), details)
+    }
+    observed("n_clean")
+  }
+
   private def runWithId(runId: String, sourcePath: String): RunResult = {
     spark.sparkContext.setJobGroup(s"run-$runId", s"pipeline run $runId", interruptOnCancel = true)
     val rows = scala.collection.mutable.Map[String, Long]()
@@ -79,45 +104,12 @@ class PipelineRunner(spark: SparkSession, catalog: RunCatalog, val workDir: Stri
             else Ingest.readCsv(spark, sourcePath, runId)
           Ingest.writeLanding(df, landingDir, runId)
         }),
-        // clean rows write in ONE pass with counts riding on an
-        // Observation; the rejects write (a cheap filtered re-read)
-        // only runs when the observed reject count is non-zero.
-        "Extract" -> (() => {
-          val obs = new org.apache.spark.sql.Observation()
-          Ingest.writeRunSlice(Extract.clean(
-            Extract.extract(Ingest.readStage(spark, landingDir, runId, Schemas.landing))
-              .observe(obs,
-                sum(when(col("reject_reason").isNotNull, 1L).otherwise(0L)).as("n_rej"),
-                sum(when(col("reject_reason").isNull, 1L).otherwise(0L)).as("n_clean"))),
-            stagingDir, runId)
-          val nRej = Option(obs.get("n_rej")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
-          if (nRej > 0) {
-            Ingest.writeRunSlice(
-              Extract.rejects(Extract.extract(
-                Ingest.readStage(spark, landingDir, runId, Schemas.landing))),
-              rejectsDir, runId, subPartition = Some("rejected_in" -> "Extract"))
-            catalog.log(runId, "Warning", 2, s"$nRej rows rejected", Some("see rejected_orders"))
-          }
-          Option(obs.get("n_clean")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
-        }),
-        "Transform" -> (() => {
-          val obs = new org.apache.spark.sql.Observation()
-          Ingest.writeRunSlice(Transform.clean(
-            Transform.transform(Ingest.readStage(spark, stagingDir, runId, Schemas.staging))
-              .observe(obs,
-                sum(when(col("reject_reason").isNotNull, 1L).otherwise(0L)).as("n_rej"),
-                sum(when(col("reject_reason").isNull, 1L).otherwise(0L)).as("n_clean"))),
-            transDir, runId)
-          val nRej = Option(obs.get("n_rej")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
-          if (nRej > 0) {
-            Ingest.writeRunSlice(
-              Transform.rejects(Transform.transform(
-                Ingest.readStage(spark, stagingDir, runId, Schemas.staging))),
-              rejectsDir, runId, subPartition = Some("rejected_in" -> "Transform"))
-            catalog.log(runId, "Warning", 3, s"$nRej rows rejected (negative amount)", None)
-          }
-          Option(obs.get("n_clean")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L)
-        }),
+        "Extract" -> (() => validatedStep(runId, 2, "Extract",
+          Extract.extract(Ingest.readStage(spark, landingDir, runId, Schemas.landing)),
+          stagingDir, n => s"$n rows rejected", Some("see rejected_orders"))),
+        "Transform" -> (() => validatedStep(runId, 3, "Transform",
+          Transform.transform(Ingest.readStage(spark, stagingDir, runId, Schemas.staging)),
+          transDir, n => s"$n rows rejected (negative amount)", None)),
         "Migrate" -> (() => {
           val updates = Ingest.readStage(spark, transDir, runId, Schemas.transformed)
             .select(col("order_id"), col("customer_id"), col("amount"), col("order_date"),

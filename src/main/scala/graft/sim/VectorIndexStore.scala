@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
+import graft.streaming.LeafStore
 import graft.util.Fs
 
 /** Persistent, incrementally-maintained IVF/SQ8 vector index — the
@@ -23,12 +24,12 @@ import graft.util.Fs
   *   dir/centroids/                 (cell, vec fp32) — fixed at create
   *   dir/codes/batch_id=<n>/cell=<c>/…  (id, codes ARRAY<TINYINT>)
   *
-  * The codes store follows the streaming stores' segment contract:
-  * one leaf per add-batch (`batch_id=<n>`, n ≥ 0) so a REPLAYED batch
-  * overwrites its own leaf — idempotent under restart; [[compact]]
-  * folds old leaves into a consolidated negative segment via the
-  * crash-atomic temp-dir + ATOMIC_MOVE + delete-after sequence (every
-  * crash point leaves a complete superset; readers dedup by id).
+  * The codes store follows the streaming stores' segment contract
+  * ([[graft.streaming.LeafStore]]): one leaf per add-batch
+  * (`batch_id=<n>`, n ≥ 0) so a REPLAYED batch overwrites its own leaf
+  * — idempotent under restart; [[compact]] folds old leaves into a
+  * consolidated negative segment, crash-atomically (readers dedup by
+  * id).
   * Leaves are partitioned by `cell`, so a probe's `cell IN (…)`
   * filter prunes at the DIRECTORY level — a probe reads O(nprobe)
   * cell dirs per segment, never the index ([[probe]]'s plan is
@@ -72,6 +73,10 @@ class VectorIndexStore(spark: SparkSession, dir: String,
   private def centroidsDir = s"${genRoot(currentGen)}/centroids"
   private def codesDir = s"${genRoot(currentGen)}/codes"
   private def tombsDir = s"${genRoot(currentGen)}/tombstones"
+  // the fold's temp dir sits in the store root whatever the generation
+  private def codesStore =
+    new LeafStore(spark, codesDir, Paths.get(dir, ".compact_tmp_codes"))
+  private def tombs = new LeafStore(spark, tombsDir)
 
   /** True once [[init]]/[[create]] has published the centroid frame. */
   def exists: Boolean = Files.isDirectory(Paths.get(centroidsDir))
@@ -121,7 +126,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     encodeAssign(vectors, centroidsFrame(), idCol, vecCol)
       .coalesce(segmentFiles)
       .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$codesDir/batch_id=$batchId")
+      .parquet(codesStore.leaf(batchId))
   }
 
   /** fp32 cell assignment against `cents` (a (cell, vec) frame) +
@@ -159,21 +164,12 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     require(exists, s"no VectorIndexStore at $dir")
     ids.select(col(idCol).as("id")).distinct()
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$tombsDir/batch_id=$batchId")
+      .write.mode("overwrite").parquet(tombs.leaf(batchId))
   }
 
   /** The union of all tombstoned ids, if any delete batch exists. */
-  private def tombstoneIds(): Option[DataFrame] = {
-    val root = Paths.get(tombsDir)
-    if (!Files.isDirectory(root)) None
-    else {
-      val s = Files.list(root)
-      val any = try s.iterator().asScala.exists(
-        _.getFileName.toString.startsWith("batch_id=")) finally s.close()
-      if (!any) None
-      else Some(spark.read.parquet(tombsDir).select(col("id")).distinct())
-    }
-  }
+  private def tombstoneIds(): Option[DataFrame] =
+    tombs.read().map(_.select(col("id")).distinct())
 
   /** How many ids are currently tombstoned (0 when none). */
   def tombstoneCount(): Long = tombstoneIds().map(_.count()).getOrElse(0L)
@@ -225,14 +221,8 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     * admitted twin.
     *
     * `excludeBatch` skips ONE leaf id: a streaming gate passes its own
-    * foreachBatch id so a REPLAY of an already-committed batch (sink
-    * committed, checkpoint not) never probes its own earlier leaf —
-    * with the self-leaf visible, every previously-admitted vector
-    * matches itself at cosine 1.0 and a TORN first write would make
-    * the replayed [[add]] overwrite the leaf with only the
-    * not-yet-written rows (silent loss). A to-be-replayed leaf is
-    * never inside a consolidated segment (the gate's compact folds
-    * only ids below the current batch).
+    * foreachBatch id, the replay exclusion of
+    * [[graft.streaming.LeafStore.read]].
     */
   def probe(queries: DataFrame, idCol: String, vecCol: String,
             k: Int, nprobe: Int = 1, excludeSelf: Boolean = true,
@@ -269,39 +259,23 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     sims.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  private def leaves(): List[(Long, Path)] =
-    if (!Files.isDirectory(Paths.get(codesDir))) Nil
-    else {
-      val s = Files.list(Paths.get(codesDir))
-      try s.iterator().asScala.toList.flatMap { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("batch_id="))
-          scala.util.Try(name.stripPrefix("batch_id=").toLong).toOption.map(_ -> p)
-        else None
-      } finally s.close()
-    }
-
   /** How many leaf directories (add batches + consolidated segments)
     * the codes store currently holds — the quantity [[compact]]
     * bounds. */
-  def leafCount(): Int = leaves().size
+  def leafCount(): Int = codesStore.leaves().size
 
   /** The leaf ids on disk (add batches ≥ 0, consolidated segments
     * < 0) — what a maintenance caller derives a fold horizon from. */
-  def leafIds(): List[Long] = leaves().map(_._1)
+  def leafIds(): List[Long] = codesStore.ids()
 
   /** Fold every leaf with id < `horizon` (add leaves and previous
     * consolidated segments alike) into one fresh negative segment —
-    * the [[graft.streaming.StreamingDedupIngest]] crash-atomic fold:
-    * write the fold to a temp dir outside the store, ATOMIC_MOVE it to
-    * a fresh negative `batch_id`, delete the folded sources last.
-    * Every crash point leaves a complete superset (readers dedup by
-    * id). Non-positive horizons are a no-op — the fresh-id search
-    * starts at `-horizon` and must never collide with a real leaf.
+    * the crash-atomic [[graft.streaming.LeafStore.fold]]. Non-positive
+    * horizons are a no-op — the fresh-id search starts at `-horizon`
+    * and must never collide with a real leaf.
     */
   def compact(horizon: Long): Unit = if (horizon > 0)
-    foldLeaves(leaves().filter { case (id, _) => id < horizon },
-      minSources = 2, segIdStart = -horizon)
+    fold(horizon, minSources = 2, segStart = -horizon)
 
   /** Fold the WHOLE store into one segment with every tombstoned row
     * physically dropped, then purge the tombstones — after vacuum the
@@ -312,9 +286,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
     * leaves survived — readers are correct at every crash point.
     */
   def vacuum(): Unit = {
-    val all = leaves()
-    val minSources = if (tombstoneIds().isDefined) 1 else 2
-    foldLeaves(all, minSources, segIdStart = -1L)
+    fold(Long.MaxValue, minSources = if (tombstoneIds().isDefined) 1 else 2, segStart = -1L)
     Fs.deleteRecursively(Paths.get(tombsDir))
   }
 
@@ -446,28 +418,14 @@ class VectorIndexStore(spark: SparkSession, dir: String,
       } finally s.close()
     }
 
-  private def foldLeaves(fold: List[(Long, Path)], minSources: Int,
-                         segIdStart: Long): Unit = {
-    val tmp = Paths.get(dir, ".compact_tmp_codes")
-    Fs.deleteRecursively(tmp) // sweep an orphan from any earlier crash
-    if (fold.size < minSources) return
-    // basePath: each leaf root is itself a partition dir (batch_id=N)
-    // holding cell=C children — without the table root, partition
-    // discovery rejects the multi-root read as conflicting structures
-    val folded = newestById(spark.read.option("basePath", codesDir)
-      .parquet(fold.map(_._2.toString): _*))
-    // reclaim tombstoned rows' bytes here; the tombstones themselves
-    // stay until vacuum() (leaves outside this fold may hold the id)
-    val live = tombstoneIds().fold(folded)(tb =>
-      folded.join(tb, Seq("id"), "left_anti"))
-    live.select(col("id"), col("codes"), col("cell"))
-      .coalesce(segmentFiles)
-      .write.partitionBy("cell").mode("overwrite").parquet(tmp.toString)
-    val taken = fold.map(_._1).toSet
-    val segId = Iterator.iterate(segIdStart)(_ - 1L).dropWhile(taken.contains).next()
-    Files.move(tmp, Paths.get(codesDir, s"batch_id=$segId"),
-      StandardCopyOption.ATOMIC_MOVE)
-    fold.foreach { case (_, p) => Fs.deleteRecursively(p) }
-  }
+  /** The codes fold: newest-batch-wins per id, and tombstoned rows'
+    * bytes reclaimed here — the tombstones themselves stay until
+    * [[vacuum]] (leaves outside this fold may hold the id). */
+  private def fold(below: Long, minSources: Int, segStart: Long): Unit =
+    codesStore.fold(below, segStart, segmentFiles, minSources, Seq("cell")) { df =>
+      val folded = newestById(df)
+      tombstoneIds().fold(folded)(tb => folded.join(tb, Seq("id"), "left_anti"))
+        .select(col("id"), col("codes"), col("cell"))
+    }
 
 }

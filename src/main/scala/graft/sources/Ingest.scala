@@ -39,6 +39,12 @@ object Ingest {
     df.select(col("raw_payload") +: cols: _*)
   }
 
+  /** The landing tail every reader shares: the raw record re-serialized
+    * into `raw_payload`, then canonicalized and stamped. */
+  private def land(raw: DataFrame, runId: String, sourceType: String): DataFrame =
+    stamp(canonicalize(raw.withColumn("raw_payload",
+      to_json(struct(raw.columns.toIndexedSeq.map(col): _*)))), runId, sourceType)
+
   private def stamp(df: DataFrame, runId: String, sourceType: String): DataFrame =
     df.select(
       (lit(runId).as("run_id") +:
@@ -58,19 +64,15 @@ object Ingest {
       .option("escape", "\"")
       .option("mode", "PERMISSIVE")
       .csv(path)
-    stamp(canonicalize(raw.withColumn("raw_payload", to_json(struct(raw.columns.toIndexedSeq.map(col): _*)))),
-      runId, "CSV")
+    land(raw, runId, "CSV")
   }
 
   /** JSON scan (S3): array of flat objects; a single top-level object
     * is one record (Spark's multiLine reader accepts both shapes —
     * reference `pull.js:41` coerces object → 1-element list).
     */
-  def readJson(spark: SparkSession, path: String, runId: String): DataFrame = {
-    val raw = spark.read.option("multiLine", "true").json(path)
-    stamp(canonicalize(raw.withColumn("raw_payload", to_json(struct(raw.columns.toIndexedSeq.map(col): _*)))),
-      runId, "JSON")
-  }
+  def readJson(spark: SparkSession, path: String, runId: String): DataFrame =
+    land(spark.read.option("multiLine", "true").json(path), runId, "JSON")
 
   /** XML scan: one record per `rowTag` element (Spark 4's built-in
     * XML source — the spark-xml reader merged upstream; attributes
@@ -79,11 +81,8 @@ object Ingest {
     * XML feed drops into the identical 4-step pipeline unchanged.
     */
   def readXml(spark: SparkSession, path: String, runId: String,
-              rowTag: String = "record"): DataFrame = {
-    val raw = spark.read.format("xml").option("rowTag", rowTag).load(path)
-    stamp(canonicalize(raw.withColumn("raw_payload", to_json(struct(raw.columns.toIndexedSeq.map(col): _*)))),
-      runId, "XML")
-  }
+              rowTag: String = "record"): DataFrame =
+    land(spark.read.format("xml").option("rowTag", rowTag).load(path), runId, "XML")
 
   /** One run's slice of a stage written as its own physical partition
     * directory (`<stage>/run_id=<id>/...`), the `run_id` column

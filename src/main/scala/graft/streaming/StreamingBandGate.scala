@@ -1,14 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-
-import graft.util.Fs
 
 /** Shared machinery of the Hamming-banded streaming MEDIA gates
   * ([[StreamingImageIngest]], [[StreamingAudioIngest]]): a subclass
@@ -36,14 +30,12 @@ import graft.util.Fs
   *      the candidate — a re-sent id matches its own admitted twin's
   *      identical hash (no self-exclusion), so replays cannot slip
   *      back in. The one exclusion is this batch's OWN leaf from a
-  *      prior replayed run — see [[readIndex]];
+  *      prior replayed run ([[LeafStore.read]]);
   *   4. survivors' bands append as leaf `batch_id=<n>` — a replayed
   *      micro-batch overwrites its own leaf, idempotent under
   *      restart;
   *   5. every `compactEvery` batches, committed leaves fold into one
-  *      consolidated negative segment (crash-atomic temp-dir +
-  *      ATOMIC_MOVE + delete-after; readers dedup, so every crash
-  *      point serves a complete superset).
+  *      consolidated negative segment ([[LeafStore.fold]]).
   *
   * State is parquet, never stream state: the band index holds
   * `bands` rows of (corpus_id, hv48, band_id, band_val) per admitted
@@ -70,8 +62,8 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
     */
   protected def hashBatch(batch: DataFrame): DataFrame
 
-  private def indexDir = s"$workDir/${prefix}_band_index"
-  private def ledgerDir = s"$workDir/${prefix}_ledger"
+  private lazy val index = new LeafStore(spark, s"$workDir/${prefix}_band_index")
+  private lazy val ledgerStore = new LeafStore(spark, s"$workDir/${prefix}_ledger")
   private val bits = 48 / bands
   private val mask = (1L << bits) - 1
 
@@ -82,30 +74,13 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
             shiftright(col("phash"), b * bits).bitwiseAND(lit(mask)).as("band_val"))): _*)).as("bd"))
       .select(col("media_id"), col("hv48"), col("bd.band_id"), col("bd.band_val"))
 
-  /** The admitted band index; `exclude` names ONE leaf id to skip —
-    * [[processBatch]] passes its own batch id so a foreachBatch REPLAY
-    * of an already-committed batch (sink committed, checkpoint not)
-    * does not probe against its own earlier leaf: with the self-leaf
-    * visible, every previously-admitted row would match its own entry
-    * at Hamming 0 and the rewritten ledger would record it
-    * near_dup_index while it sits admitted in the index. Excluding the
-    * leaf makes the replay's decision set, ledger, and leaf overwrite
-    * byte-identical to the original run (and heals a torn first
-    * write). A to-be-replayed leaf is never inside a consolidated
-    * segment: the in-stream [[compact]] folds only ids below the
-    * CURRENT batch, and a later batch existing implies this batch's
-    * checkpoint committed.
-    */
-  private def readIndex(exclude: Long = Long.MinValue): Option[DataFrame] = {
-    val ls = leaves().filter(_._1 != exclude)
-    if (ls.isEmpty) None
-    else Some(spark.read.option("basePath", indexDir)
-      .parquet(ls.map(_._2.toString): _*)
+  /** The admitted band index minus leaf `exclude` ([[LeafStore.read]]),
+    * deduped per (row, band) for the crash-superset window. */
+  private def readIndex(exclude: Long = Long.MinValue): Option[DataFrame] =
+    index.read(exclude).map(_
       .select(col("corpus_id"), col("hv48").as("idx_hv48"),
         col("band_id"), col("band_val"))
-      // crash-mid-compaction superset window: dedup per (row, band)
       .dropDuplicates("corpus_id", "band_id"))
-  }
 
   /** Admitted (media_id, phash) so far; None before any admission. */
   def admitted(): Option[DataFrame] =
@@ -114,14 +89,13 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
 
   /** Per-row dispositions across all batches; None before any batch. */
   def ledgerFrame(): Option[DataFrame] =
-    if (!Files.isDirectory(Paths.get(ledgerDir)) || ledgerLeaves().isEmpty) None
-    else Some(spark.read.parquet(ledgerDir)
+    ledgerStore.read().map(_
       .select(col("media_id"), col("stage"), col("admitted"), col("ledger_batch_id"))
       .dropDuplicates("media_id", "ledger_batch_id"))
 
   /** Gate one micro-batch of (media_id BIGINT, payload BINARY) rows. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact(batchId)
+    if (LeafStore.due(batchId, compactEvery)) compact(batchId)
     if (batch.isEmpty) return
     graft.util.CacheScope.loan {
       val input = batch.select(col("media_id"), col("payload")).localCheckpoint()
@@ -137,8 +111,8 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
       // vs the persistent index: NO self-exclusion — a re-sent id
       // collides with its own admitted twin at Hamming 0 and drops.
       // (The one exclusion is this batch's OWN leaf from a prior
-      // replayed run — see readIndex; a re-sent id's twin sits in an
-      // EARLIER batch's leaf and still matches.)
+      // replayed run; a re-sent id's twin sits in an EARLIER batch's
+      // leaf and still matches.)
       val vsIndex = readIndex(exclude = batchId) match {
         case Some(idx) => bb.join(idx, Seq("band_id", "band_val"))
           .filter(bit_count(col("hv48").bitwiseXOR(col("idx_hv48"))) <= maxHamming)
@@ -162,14 +136,14 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
           .unionByName(at(admittedNow, "admitted"))
           .withColumn("admitted", col("stage") === "admitted")
           .withColumn("ledger_batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$ledgerDir/batch_id=$batchId")
+          .write.mode("overwrite").parquet(ledgerStore.leaf(batchId))
       }
 
       if (admittedNow.isEmpty) return
       banded(admittedNow)
         .withColumnRenamed("media_id", "corpus_id")
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
+        .write.mode("overwrite").parquet(index.leaf(batchId))
     }
   }
 
@@ -200,71 +174,22 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** Roll the per-row disposition ledger up into the run catalog —
-    * the [[StreamingDedupIngest.recordToCatalog]] contract for the
-    * media gates: one catalog run whose steps are the gate stages in
-    * pipeline order with `rows_affected` = rows disposed at that
-    * stage, so `GET /runs/:id` serves a media-ingest funnel next to
-    * batch step rows and the text gate's with no new contract. Call
-    * at a reporting cadence (each call records one cumulative
-    * snapshot); the collect is ≤ 4 stage rows, never row-grain. None
-    * when no ledger exists yet.
-    */
+  /** Roll the per-row disposition ledger up into the run catalog
+    * ([[graft.catalog.RunCatalog.recordFunnel]] over the gate stages);
+    * None when no ledger exists yet. */
   def recordToCatalog(catalog: graft.catalog.RunCatalog,
                       pipelineName: String): Option[String] =
-    ledgerFrame().map { led =>
-      val counts = led.groupBy(col("stage")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val runId = catalog.startRunWithSteps(pipelineName, StreamingBandGate.FunnelStages)
-      StreamingBandGate.FunnelStages.zipWithIndex.foreach { case (st, i) =>
-        catalog.updateStepNamed(runId, i + 1, st, "Success", counts.getOrElse(st, 0L))
-      }
-      catalog.finishRun(runId, "Success")
-      runId
-    }
+    ledgerFrame().map(catalog.recordFunnel(pipelineName, StreamingBandGate.FunnelStages, _))
 
   /** Fold every leaf with id < `horizon` (band index AND ledger) into
-    * one consolidated negative segment each — the streaming stores'
-    * crash-atomic fold contract. */
+    * one consolidated negative segment each ([[LeafStore.fold]]). */
   def compact(horizon: Long): Unit = if (horizon > 0) {
-    foldLeaves(indexDir, horizon, Seq("corpus_id", "band_id"))
-    foldLeaves(ledgerDir, horizon, Seq("media_id", "ledger_batch_id"))
+    index.fold(horizon, -horizon, files = 1)(_.dropDuplicates("corpus_id", "band_id"))
+    ledgerStore.fold(horizon, -horizon, files = 1)(_.dropDuplicates("media_id", "ledger_batch_id"))
   }
 
   /** Committed band-index leaf ids (add batches ≥ 0, segments < 0). */
-  def leafCount(): Int = leaves().size
-
-  private def leaves(): List[(Long, Path)] = leavesOf(indexDir)
-  private def ledgerLeaves(): List[(Long, Path)] = leavesOf(ledgerDir)
-
-  private def leavesOf(dir: String): List[(Long, Path)] =
-    if (!Files.isDirectory(Paths.get(dir))) Nil
-    else {
-      val s = Files.list(Paths.get(dir))
-      try s.iterator().asScala.toList.flatMap { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("batch_id="))
-          scala.util.Try(name.stripPrefix("batch_id=").toLong).toOption.map(_ -> p)
-        else None
-      } finally s.close()
-    }
-
-  private def foldLeaves(dir: String, horizon: Long, keyCols: Seq[String]): Unit = {
-    val tmp = Paths.get(workDir, s".compact_tmp_${Paths.get(dir).getFileName}")
-    Fs.deleteRecursively(tmp)
-    val fold = leavesOf(dir).filter { case (id, _) => id < horizon }
-    if (fold.size < 2) return
-    spark.read.option("basePath", dir).parquet(fold.map(_._2.toString): _*)
-      .drop("batch_id")
-      .dropDuplicates(keyCols)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val taken = fold.map(_._1).toSet
-    val segId = Iterator.iterate(-horizon)(_ - 1L).dropWhile(taken.contains).next()
-    Files.move(tmp, Paths.get(dir, s"batch_id=$segId"), StandardCopyOption.ATOMIC_MOVE)
-    fold.foreach { case (_, p) => Fs.deleteRecursively(p) }
-  }
-
+  def leafCount(): Int = index.leaves().size
 }
 
 object StreamingBandGate {

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,9 +31,10 @@ import graft.util.Fs
   *
   * Every `compactEvery` batches the batch-scoped leaves older than the
   * replay horizon are folded into one consolidated segment (a fresh
-  * negative `batch_id`), so a long-running stream holds a bounded
-  * number of leaf directories instead of one per micro-batch — the same
-  * file-count cure the catalog applies to its NDJSON appends. Only
+  * negative `batch_id`, [[LeafStore.fold]]), so a long-running stream
+  * holds a bounded number of leaf directories instead of one per
+  * micro-batch — the same file-count cure the catalog applies to its
+  * NDJSON appends. Only
   * committed batches (id < the batch being processed) are folded, so a
   * replayed micro-batch still overwrites its own, un-folded leaves.
   *
@@ -96,10 +95,12 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
                            noveltyNgram: Int = 8,
                            ledger: Boolean = false) {
 
-  private val indexDir = s"$workDir/band_index"
-  private val admittedDir = s"$workDir/admitted"
-  private val gramDir = s"$workDir/gram_index"
-  private val ledgerDir = s"$workDir/ledger"
+  private val index = new LeafStore(spark, s"$workDir/band_index")
+  private val admittedStore = new LeafStore(spark, s"$workDir/admitted")
+  private val grams = new LeafStore(spark, s"$workDir/gram_index")
+  private val ledgerStore = new LeafStore(spark, s"$workDir/ledger")
+  private def admittedDir = admittedStore.dir
+  private def gramDir = grams.dir
 
   private def gramHashes(d: DataFrame): DataFrame =
     d.select(col("doc_id"), explode(array_distinct(
@@ -173,41 +174,13 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
   // marker rebuild above).
   if (noveltyGate.isDefined && Files.isDirectory(Paths.get(gramDir))
       && Files.isDirectory(Paths.get(admittedDir))) {
-    val gramIds = leaves(gramDir).map(_._1).toSet
-    leaves(admittedDir)
+    val gramIds = grams.ids().toSet
+    admittedStore.leaves()
       .filter { case (id, _) => id >= 0 && !gramIds.contains(id) }
       .foreach { case (id, p) =>
         Dedup.gramIndex(spark.read.parquet(p.toString), noveltyNgram)
-          .write.mode("overwrite").parquet(s"$gramDir/batch_id=$id")
+          .write.mode("overwrite").parquet(grams.leaf(id))
       }
-  }
-
-  // `exclude` skips ONE leaf id: [[processBatch]] passes its own batch
-  // id so a foreachBatch REPLAY of an already-committed batch (sink
-  // committed, checkpoint not) never probes its own earlier leaf —
-  // with the self-leaf visible, every previously-admitted doc would
-  // drop against its own index rows (novelty: own grams all "seen";
-  // LSH: own bands at sim 1.0), corrupting the rewritten ledger, and a
-  // TORN first leaf write would make the replay overwrite the leaf
-  // with only the not-yet-written docs — silent loss. Excluding it
-  // makes the replay's decisions, ledger, and leaf overwrites
-  // identical to the original run. A to-be-replayed leaf is never
-  // inside a consolidated segment: the in-stream compact folds only
-  // ids below the CURRENT batch, and a later batch existing implies
-  // this batch's checkpoint committed. (The batch_id partition column
-  // is not selected — it would collide with bandMatches' batch-side
-  // alias.)
-  private def readIndex(exclude: Long = Long.MinValue): Option[DataFrame] = {
-    val ls = leaves(indexDir).filter(_._1 != exclude)
-    if (ls.isEmpty) None
-    else Some(spark.read.parquet(ls.map(_._2.toString): _*)
-      .select(col("corpus_id"), col("band_id"), col("band_hash")))
-  }
-
-  private def readGramIndex(exclude: Long = Long.MinValue): Option[DataFrame] = {
-    val ls = leaves(gramDir).filter(_._1 != exclude)
-    if (ls.isEmpty) None
-    else Some(spark.read.parquet(ls.map(_._2.toString): _*).select(col("hv")))
   }
 
   /** The admitted corpus so far (empty before the first batch). Deduped
@@ -216,76 +189,30 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
     * not-yet-deleted original leaf.
     */
   def admitted(): Option[DataFrame] =
-    if (Files.isDirectory(Paths.get(admittedDir)))
-      Some(spark.read.parquet(admittedDir).dropDuplicates("doc_id"))
+    if (admittedStore.exists) Some(spark.read.parquet(admittedDir).dropDuplicates("doc_id"))
     else None
 
-  private def leaves(dir: String): List[(Long, Path)] =
-    if (!Files.isDirectory(Paths.get(dir))) Nil
-    else {
-      val s = Files.list(Paths.get(dir))
-      try s.iterator().asScala.toList.flatMap { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("batch_id="))
-          scala.util.Try(name.stripPrefix("batch_id=").toLong).toOption.map(_ -> p)
-        else None
-      } finally s.close()
-    }
-
-
-  /** Fold every leaf with id < `horizon` (batch leaves AND any previous
-    * consolidated segment, whose ids are negative) into a fresh segment.
-    *
-    * Crash-atomic by construction: the fold is written to a temp dir
-    * OUTSIDE the store (readers never see it), then moved — one atomic
-    * rename — into a segment name that does not exist yet (`-horizon`,
-    * or the next free negative id when a replayed boundary batch
-    * re-folds the same horizon). Only after the move do the folded
-    * source leaves get deleted, so EVERY crash point leaves the store
-    * holding a complete superset of the admitted corpus / band index:
-    * crash before the move leaves the old layout (plus an orphan temp
-    * dir, swept at the start of the next fold); crash mid-cleanup
-    * leaves the new segment plus stale leaves whose rows it already
-    * contains. Superset duplicates are removed by the `dropDuplicates`
-    * of the NEXT fold and never affect dedup decisions in between
-    * (band matches feed `left_anti` joins; `admitted()` dedups).
-    */
-  private def foldLeaves(dir: String, horizon: Long, keyCols: Seq[String]): Unit = {
-    val tmp = Paths.get(workDir, s".compact_tmp_${Paths.get(dir).getFileName}")
-    Fs.deleteRecursively(tmp) // sweep an orphan from any earlier crash, even if nothing folds
-    val fold = leaves(dir).filter { case (id, _) => id < horizon }
-    if (fold.size < 2) return
-    spark.read.parquet(fold.map(_._2.toString): _*)
-      .dropDuplicates(keyCols)
-      .coalesce(segmentFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // every candidate id is < horizon, so colliding names can only be in
-    // `fold` — checking those ids suffices to find a fresh one
-    val taken = fold.map(_._1).toSet
-    val segId = Iterator.iterate(-horizon)(_ - 1L).dropWhile(taken.contains).next()
-    Files.move(tmp, Paths.get(dir, s"batch_id=$segId"), StandardCopyOption.ATOMIC_MOVE)
-    fold.foreach { case (_, p) => Fs.deleteRecursively(p) }
-  }
-
-  /** Compact both stores up to `horizon` (exclusive). `horizon` must be
-    * positive (batch ids start at 0; consolidated segments are negative)
-    * and at or below the oldest batch that could still be replayed —
-    * `processBatch` auto-calls it with the current batch id, which
-    * Structured Streaming guarantees has all predecessors committed.
-    * Non-positive horizons are a no-op: the fresh-segment-id search
-    * starts at `-horizon`, so a `horizon <= 0` could collide a fold
-    * with a real batch leaf.
+  /** Fold every store's leaves below `horizon` (batch leaves AND any
+    * previous consolidated segment) into a fresh segment each — the
+    * [[LeafStore.fold]] contract, superset duplicates removed by key.
+    * `horizon` must be positive (batch ids start at 0; consolidated
+    * segments are negative) and at or below the oldest batch that could
+    * still be replayed — `processBatch` auto-calls it with the current
+    * batch id, which Structured Streaming guarantees has all
+    * predecessors committed. Non-positive horizons are a no-op: the
+    * fresh-segment-id search starts at `-horizon`, so a `horizon <= 0`
+    * could collide a fold with a real batch leaf.
     */
   def compact(horizon: Long): Unit = if (horizon > 0) {
-    foldLeaves(indexDir, horizon, Seq("corpus_id", "band_id", "band_hash"))
-    foldLeaves(admittedDir, horizon, Seq("doc_id"))
+    def fold(s: LeafStore, keys: String*): Unit =
+      s.fold(horizon, -horizon, segmentFiles)(_.dropDuplicates(keys))
+    fold(index, "corpus_id", "band_id", "band_hash")
+    fold(admittedStore, "doc_id")
     // fold the gram store whenever it EXISTS (not only when the gate is
     // currently on): a stream restarted with the gate off would
     // otherwise leave the old index's leaves unfolded forever
-    if (Files.isDirectory(Paths.get(gramDir)))
-      foldLeaves(gramDir, horizon, Seq("hv"))
-    if (Files.isDirectory(Paths.get(ledgerDir)))
-      foldLeaves(ledgerDir, horizon, Seq("ledger_batch_id", "doc_id"))
+    if (grams.exists) fold(grams, "hv")
+    if (ledgerStore.exists) fold(ledgerStore, "ledger_batch_id", "doc_id")
   }
 
   /** The per-batch disposition ledger (None until the first ledgered
@@ -297,36 +224,17 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
   def ledgerFrame(): Option[DataFrame] =
     StreamingDedupIngest.readLedger(spark, workDir)
 
-  /** Roll the per-doc disposition ledger up into the run catalog — the
-    * closing of the observability loop: batch pipelines record their
-    * step rows-affected in the catalog, and a ledgered streaming
-    * ingest records its funnel the SAME way, as one catalog run whose
-    * steps are the funnel stages in pipeline order with
-    * `rows_affected` = docs disposed at that stage (drops per gate,
-    * survivors at 'admitted'). `GET /runs/:id` then serves the ingest
-    * funnel next to batch step rows with no new contract. None when
-    * no ledger exists (ingest ran with `ledger = false`).
-    *
-    * The rollup aggregates the (compaction-folded, replay-idempotent)
-    * ledger once per call — call it at a reporting cadence, not per
-    * batch; each call records one run snapshot of cumulative counts.
-    * The collect is |stages| rows (≤ 7), never doc-grain.
+  /** Roll the per-doc disposition ledger up into the run catalog
+    * ([[graft.catalog.RunCatalog.recordFunnel]] over the funnel
+    * stages), the way batch pipelines record their step rows-affected.
+    * None when no ledger exists (ingest ran with `ledger = false`).
     */
   def recordToCatalog(catalog: graft.catalog.RunCatalog,
                       pipelineName: String = "streaming-ingest"): Option[String] =
-    ledgerFrame().map { led =>
-      val counts = led.groupBy(col("stage")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val runId = catalog.startRunWithSteps(pipelineName, StreamingDedupIngest.FunnelStages)
-      StreamingDedupIngest.FunnelStages.zipWithIndex.foreach { case (st, i) =>
-        catalog.updateStepNamed(runId, i + 1, st, "Success", counts.getOrElse(st, 0L))
-      }
-      catalog.finishRun(runId, "Success")
-      runId
-    }
+    ledgerFrame().map(catalog.recordFunnel(pipelineName, StreamingDedupIngest.FunnelStages, _))
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) compact(batchId)
+    if (LeafStore.due(batchId, compactEvery)) compact(batchId)
     if (batch.isEmpty) return
     // Dedup's internal cache()s must be released on EVERY exit path —
     // an all-duplicate batch that returned early used to leak one
@@ -378,8 +286,8 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
       // any single admitted doc). Cost ∝ batch grams ⋈ index; the
       // 100 TB corpus is never re-read. Docs too short to gram pass.
       val novelD = noveltyGate.fold(decontD) { maxSeenPct =>
-        readGramIndex(exclude = batchId).fold(decontD) { idx =>
-          val stale = Dedup.incrementalNovelty(idx, decontD, noveltyNgram)
+        grams.read(exclude = batchId).fold(decontD) { idx =>
+          val stale = Dedup.incrementalNovelty(idx.select(col("hv")), decontD, noveltyNgram)
             .filter(col("n_seen") * 100 > col("n_grams") * maxSeenPct)
             .select(col("doc_id"))
           decontD.join(stale, Seq("doc_id"), "left_anti")
@@ -391,8 +299,11 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
       val intraDrops = Dedup.lshCandidatePairs(sig, "doc_id")
         .filter(col("est_sim") >= simThreshold)
         .select(col("id_b").as("doc_id")).distinct()
-      val vsIndex = readIndex(exclude = batchId) match {
-        case Some(index) => Dedup.bandMatches(index, sig, "doc_id")
+      // the batch_id partition column is not selected: it would collide
+      // with bandMatches' batch-side alias
+      val vsIndex = index.read(exclude = batchId) match {
+        case Some(idx) => Dedup.bandMatches(
+            idx.select(col("corpus_id"), col("band_id"), col("band_hash")), sig, "doc_id")
           .select(col("batch_id").as("doc_id"))
         case None => spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
       }
@@ -425,21 +336,21 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
           // leaves into consolidated segments whose PARTITION id is a
           // fresh negative — the data column keeps per-batch history
           .withColumn("ledger_batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$ledgerDir/batch_id=$batchId")
+          .write.mode("overwrite").parquet(ledgerStore.leaf(batchId))
       }
 
       if (admittedDocs.isEmpty) return
-      admittedDocs.write.mode("overwrite").parquet(s"$admittedDir/batch_id=$batchId")
+      admittedDocs.write.mode("overwrite").parquet(admittedStore.leaf(batchId))
       Dedup.bandKeys(sig.join(admittedDocs.select(col("doc_id")), Seq("doc_id"), "left_semi"), "doc_id")
         .withColumnRenamed("doc_id", "corpus_id")
-        .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
+        .write.mode("overwrite").parquet(index.leaf(batchId))
       // write grams while the gate is on — AND whenever the store
       // exists: a gate on→off→on sequence must not leave the off
       // period's admitted docs unindexed (their span-stitched
       // redundancy would silently pass the gate forever)
-      if (noveltyGate.isDefined || Files.isDirectory(Paths.get(gramDir))) {
+      if (noveltyGate.isDefined || grams.exists) {
         Dedup.gramIndex(admittedDocs, noveltyNgram)
-          .write.mode("overwrite").parquet(s"$gramDir/batch_id=$batchId")
+          .write.mode("overwrite").parquet(grams.leaf(batchId))
         // gate-on coverage is guaranteed: construction rebuilt or
         // backfilled any gap, and this write maintains it. (A gate-OFF
         // write must NOT mark — it cannot vouch for a legacy store's

@@ -59,8 +59,7 @@ class StreamingEmbedIngest(spark: SparkSession, workDir: String,
   def admitted(): DataFrame = store.codes()
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      store.compact(batchId)
+    if (LeafStore.due(batchId, compactEvery)) store.compact(batchId)
     if (batch.isEmpty) return
     graft.util.CacheScope.loan {
       val cents = store.centroidsFrame()
@@ -82,10 +81,7 @@ class StreamingEmbedIngest(spark: SparkSession, workDir: String,
         .join(intraDrops.select(col("id").as(idCol)), Seq(idCol), "left_anti")
       // batch-vs-store: self-exclusion OFF — a re-sent id must match
       // its own admitted twin instead of slipping back in. The batch's
-      // OWN prior leaf (a checkpoint-reset replay) is excluded, so the
-      // replay recomputes the original decisions and its add()
-      // overwrites the leaf identically — without it, a torn first
-      // write would shrink the leaf to the not-yet-written rows
+      // OWN prior leaf is excluded (the LeafStore.read replay contract)
       val vsStore =
         if (store.leafIds().forall(_ == batchId)) intraKept.limit(0).select(col(idCol))
         else store.probe(intraKept, idCol, vecCol, k = 1, nprobe = nprobe,

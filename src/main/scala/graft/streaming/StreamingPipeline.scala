@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.catalog.RunCatalog
 import graft.merge.MergeWriter
-import graft.ops.{Extract, Transform}
+import graft.ops.{Extract, Transform, Validation}
 
 /** Streaming twin of the 4-step pipeline (SURVEY.md §2.10 C7 and the
   * reference's planned-only event triggers): watch a landing
@@ -43,9 +43,9 @@ class StreamingPipeline(spark: SparkSession, catalog: RunCatalog, workDir: Strin
         .withColumn("raw_payload", to_json(struct(batch.columns.map(col): _*)))
         .withColumn("loaded_at", current_timestamp())
         .observe(obsL, count(lit(1)).as("n"))
-      val extracted = Extract.clean(Extract.extract(landing))
+      val extracted = Validation.clean(Extract.extract(landing))
         .observe(obsE, count(lit(1)).as("n"))
-      val transformed = Transform.clean(Transform.transform(extracted))
+      val transformed = Validation.clean(Transform.transform(extracted))
         .observe(obsT, count(lit(1)).as("n"))
       val affected = MergeWriter.merge(spark, targetDir,
         transformed.select(col("order_id"), col("customer_id"), col("amount"),

@@ -278,18 +278,74 @@ class StreamingSpec extends SparkSpec {
     assert(leafCount(s"$work/band_index") == 2)
   }
 
-  test("compaction crash superset (segment + leftover leaves) survives boundary-batch replay") {
-    import scala.jdk.CollectionConverters._
-    import java.nio.file.{Path, Paths, StandardCopyOption}
-    def doc(i: Int) = s"doc $i unique token alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i"
-    val work = Files.createTempDirectory("graft_sdx").toString
-    val ingest = new graft.streaming.StreamingDedupIngest(spark, work,
-      simThreshold = 0.5, compactEvery = 4)
-    def ls(dir: String): List[Path] = {
-      val s = Files.list(Paths.get(dir))
-      try s.iterator().asScala.toList.filter(_.getFileName.toString.startsWith("batch_id="))
-      finally s.close()
+  /** A streaming gate whose state lives in leaf stores folded every 4
+    * batches (`compactEvery = 4`): `offer(items, b)` runs batch `b`, an
+    * item `(id, of)` carrying item `of`'s content when `id == of` and a
+    * near-dup of it otherwise; `stores` are its leaf-store dirs under
+    * `work`. The crash-safety cases below run once per gate. */
+  private case class LeafGate(name: String, work: String, stores: Seq[String],
+                              offer: (Seq[(Long, Long)], Long) => Unit,
+                              admitted: () => Set[Long], compact: Long => Unit)
+
+  private def leafGates(): Seq[LeafGate] = {
+    import graft.multimodal.ImagePhash
+    def doc(k: Long) = s"doc $k unique token alpha$k beta$k gamma$k delta$k epsilon$k zeta$k eta$k"
+    def vec(k: Long) = Array.tabulate(8)(j => math.sin(k * 12.9898 + j * 78.233).toFloat)
+    val text = {
+      val work = Files.createTempDirectory("graft_leaf_text").toString
+      val g = new graft.streaming.StreamingDedupIngest(spark, work,
+        simThreshold = 0.5, compactEvery = 4)
+      LeafGate("text", work, Seq("band_index", "admitted"),
+        (items, b) => g.processBatch(items.map { case (id, of) =>
+          (id, if (id == of) doc(of) else doc(of).substring(doc(of).indexOf(' ') + 1))
+        }.toDF("doc_id", "text"), b),
+        () => g.admitted().get.select($"doc_id").as[Long].collect().toSet, g.compact)
     }
+    val image = {
+      val work = Files.createTempDirectory("graft_leaf_image").toString
+      val g = new graft.streaming.StreamingImageIngest(spark, work, compactEvery = 4)
+      // pattern of + 3: patterns 1 and 2 share an aHash; shifted, every
+      // pattern used here is > 6 bits from every other. The near-dup is
+      // the 2× resized twin.
+      LeafGate("image", work, Seq("image_band_index", "image_ledger"),
+        (items, b) => g.processBatch(items.map { case (id, of) =>
+          (id, if (id == of) ImagePhash.patternBmp(of + 3, 64, 48)
+               else ImagePhash.patternBmp(of + 3, 128, 96))
+        }.toDF("media_id", "payload"), b),
+        () => g.admitted().map(_.select("media_id").as[Long].collect().toSet)
+          .getOrElse(Set.empty), g.compact)
+    }
+    val vector = {
+      val work = Files.createTempDirectory("graft_leaf_vector").toString
+      val cents = Seq((0L, Array.tabulate(8)(j => if (j == 0) 1f else 0f)),
+        (1L, Array.tabulate(8)(j => if (j == 1) 1f else 0f))).toDF("id", "vec")
+      val g = new graft.streaming.StreamingEmbedIngest(spark, work, cents,
+        simThreshold = 0.999, nprobe = 2, compactEvery = 4)
+      // the near-dup is the scaled vector: identical SQ8 codes
+      LeafGate("vector", work, Seq("vector_index/codes"),
+        (items, b) => g.processBatch(items.map { case (id, of) =>
+          (id, if (id == of) vec(of) else vec(of).map(_ * 2f))
+        }.toDF("id", "vec"), b),
+        () => g.admitted().select($"id").as[Long].collect().toSet, g.store.compact)
+    }
+    Seq(text, image, vector)
+  }
+
+  private def batchLeaves(dir: String): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.toList.filter(_.getFileName.toString.startsWith("batch_id="))
+    finally s.close()
+  }
+
+  /** Where a store's fold writes before its atomic move. */
+  private def foldTmp(work: String, store: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(work, store)
+    p.resolveSibling(s".compact_tmp_${p.getFileName}")
+  }
+
+  test("compaction crash superset (segment + leftover leaves) survives boundary-batch replay") {
+    import java.nio.file.{Path, Paths, StandardCopyOption}
     def copyTree(from: Path, to: Path): Unit = {
       val s = Files.walk(from)
       try s.forEach { p =>
@@ -299,90 +355,77 @@ class StreamingSpec extends SparkSpec {
       } finally s.close()
     }
     val batches = (0 until 8).map(b => Seq(b * 10L + 1, b * 10L + 2))
-    batches.zipWithIndex.foreach { case (ids, bid) =>
-      ingest.processBatch(ids.map(i => (i, doc(i.toInt))).toDF("doc_id", "text"), bid.toLong)
+    for (g <- leafGates()) {
+      def admitted(): Set[Long] = g.admitted()
+      batches.zipWithIndex.foreach { case (ids, bid) => g.offer(ids.map(i => (i, i)), bid.toLong) }
+      // snapshot the pre-fold leaves (segment -4 + batches 4..7), then let
+      // batch 8 fold them into segment -8
+      val snap = Files.createTempDirectory("graft_leaf_snap")
+      for (store <- g.stores) {
+        Files.createDirectories(snap.resolve(store))
+        batchLeaves(s"${g.work}/$store").foreach(p =>
+          copyTree(p, snap.resolve(store).resolve(p.getFileName)))
+      }
+      g.offer(Seq((81L, 81L)), 8L)
+      val expected = batches.flatten.toSet + 81L
+      assert(admitted() == expected, g.name)
+      // simulate a crash between the segment rename and leaf cleanup: the
+      // fresh segment -8 AND the pre-fold leaves are all present
+      for (store <- g.stores) {
+        val s = Files.list(snap.resolve(store))
+        try s.forEach(p => copyTree(p, Paths.get(s"${g.work}/$store").resolve(p.getFileName)))
+        finally s.close()
+        assert(batchLeaves(s"${g.work}/$store").size == 7, s"${g.name} $store") // -8, -4, 4..7, 8
+      }
+      // superset window: admitted ids still deduped, decisions unaffected
+      assert(admitted() == expected, g.name)
+      // replay the boundary batch — re-folds horizon 8, whose fold set
+      // includes the path that IS the new target; pre-horizon items must
+      // survive and stay deduplicated
+      g.offer(Seq((81L, 81L)), 8L)
+      assert(admitted() == expected, g.name)
+      for (store <- g.stores)
+        assert(batchLeaves(s"${g.work}/$store").size == 2, s"${g.name} $store")
+      // near-dup of an item that lives only in the re-folded segment is still dropped
+      g.offer(Seq((900L, 1L), (901L, 901L)), 9L)
+      assert(admitted() == expected + 901L, g.name)
     }
-    // snapshot the pre-fold leaves (segment -4 + batches 4..7), then let
-    // batch 8 fold them into segment -8
-    val snap = Files.createTempDirectory("graft_sdx_snap")
-    for (store <- Seq("band_index", "admitted")) {
-      Files.createDirectories(snap.resolve(store))
-      ls(s"$work/$store").foreach(p => copyTree(p, snap.resolve(store).resolve(p.getFileName)))
-    }
-    ingest.processBatch(Seq((81L, doc(81))).toDF("doc_id", "text"), 8L)
-    val expected = batches.flatten.toSet + 81L
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected)
-    // simulate a crash between the segment rename and leaf cleanup: the
-    // fresh segment -8 AND the pre-fold leaves are all present
-    for (store <- Seq("band_index", "admitted")) {
-      val s = Files.list(snap.resolve(store))
-      try s.forEach(p => copyTree(p, Paths.get(s"$work/$store").resolve(p.getFileName)))
-      finally s.close()
-    }
-    assert(ls(s"$work/admitted").size == 7) // -8, -4, 4..7, 8
-    // superset window: admitted() still deduped, decisions unaffected
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected)
-    // replay the boundary batch — re-folds horizon 8, whose fold set
-    // includes the path that IS the new target; pre-horizon docs must
-    // survive and stay deduplicated
-    ingest.processBatch(Seq((81L, doc(81))).toDF("doc_id", "text"), 8L)
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected)
-    assert(ls(s"$work/band_index").size == 2)
-    assert(ls(s"$work/admitted").size == 2)
-    // near-dup of a doc that lives only in the re-folded segment is still dropped
-    val nearDup = doc(1).substring(doc(1).indexOf(' ') + 1)
-    ingest.processBatch(Seq((900L, nearDup), (901L, doc(901))).toDF("doc_id", "text"), 9L)
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected + 901L)
   }
 
   test("compaction crash before the segment move (orphan tmp) loses nothing and is swept") {
-    import scala.jdk.CollectionConverters._
-    import java.nio.file.{Path, Paths}
-    def doc(i: Int) = s"doc $i unique token alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i"
-    val work = Files.createTempDirectory("graft_sdo").toString
-    val ingest = new graft.streaming.StreamingDedupIngest(spark, work,
-      simThreshold = 0.5, compactEvery = 4)
-    def ls(dir: String): List[Path] = {
-      val s = Files.list(Paths.get(dir))
-      try s.iterator().asScala.toList.filter(_.getFileName.toString.startsWith("batch_id="))
-      finally s.close()
-    }
     val batches = (0 until 8).map(b => Seq(b * 10L + 1, b * 10L + 2))
-    batches.zipWithIndex.foreach { case (ids, bid) =>
-      ingest.processBatch(ids.map(i => (i, doc(i.toInt))).toDF("doc_id", "text"), bid.toLong)
+    for (g <- leafGates()) {
+      def admitted(): Set[Long] = g.admitted()
+      def leafCounts() = g.stores.map(store => batchLeaves(s"${g.work}/$store").size)
+      batches.zipWithIndex.foreach { case (ids, bid) => g.offer(ids.map(i => (i, i)), bid.toLong) }
+      // simulate a crash AFTER the fold was written to the temp dir but
+      // BEFORE the atomic move: plant orphan .compact_tmp_* dirs; the
+      // stores themselves are untouched, so nothing is lost
+      for (store <- g.stores) {
+        val orphan = foldTmp(g.work, store)
+        Files.createDirectories(orphan)
+        Files.writeString(orphan.resolve("junk.parquet"), "not parquet")
+      }
+      assert(admitted() == batches.flatten.toSet, g.name)
+      // the replayed boundary batch sweeps the orphans and folds normally
+      g.offer(Seq((81L, 81L)), 8L)
+      val expected = batches.flatten.toSet + 81L
+      assert(admitted() == expected, g.name)
+      for (store <- g.stores) assert(!Files.exists(foldTmp(g.work, store)), s"${g.name} $store")
+      assert(leafCounts().forall(_ == 2), s"${g.name} ${leafCounts()}") // fresh segment + batch 8
+      // replaying the boundary batch is still idempotent after the sweep:
+      // same admitted set, no extra fold segment, no fresh tmp dirs
+      g.offer(Seq((81L, 81L)), 8L)
+      assert(admitted() == expected, g.name)
+      for (store <- g.stores) assert(!Files.exists(foldTmp(g.work, store)), s"${g.name} $store")
+      assert(leafCounts().forall(_ == 2), s"${g.name} ${leafCounts()}")
+      // a non-positive horizon is a guarded no-op (negative fold-segment
+      // ids must never collide with real batch leaves)
+      g.compact(0L)
+      g.compact(-3L)
+      assert(leafCounts().forall(_ == 2), s"${g.name} ${leafCounts()}")
+      assert(admitted() == expected, g.name)
     }
-    // simulate a crash AFTER the fold was written to the temp dir but
-    // BEFORE the atomic move: plant orphan .compact_tmp_* dirs; the
-    // stores themselves are untouched, so nothing is lost
-    for (store <- Seq("band_index", "admitted")) {
-      val orphan = Paths.get(work, s".compact_tmp_$store")
-      Files.createDirectories(orphan)
-      Files.writeString(orphan.resolve("junk.parquet"), "not parquet")
-    }
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet ==
-      batches.flatten.toSet)
-    // the replayed boundary batch sweeps the orphans and folds normally
-    ingest.processBatch(Seq((81L, doc(81))).toDF("doc_id", "text"), 8L)
-    val expected = batches.flatten.toSet + 81L
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected)
-    for (store <- Seq("band_index", "admitted")) {
-      assert(!Files.exists(Paths.get(work, s".compact_tmp_$store")))
-      assert(ls(s"$work/$store").size == 2) // fresh segment + batch 8
-    }
-    // replaying the boundary batch is still idempotent after the sweep:
-    // same admitted set, no extra fold segment, no fresh tmp dirs
-    ingest.processBatch(Seq((81L, doc(81))).toDF("doc_id", "text"), 8L)
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected)
-    for (store <- Seq("band_index", "admitted")) {
-      assert(!Files.exists(Paths.get(work, s".compact_tmp_$store")))
-      assert(ls(s"$work/$store").size == 2)
-    }
-    // a non-positive horizon is a guarded no-op (negative fold-segment
-    // ids must never collide with real batch leaves)
-    ingest.compact(0L)
-    ingest.compact(-3L)
-    for (store <- Seq("band_index", "admitted")) assert(ls(s"$work/$store").size == 2)
-    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == expected)
   }
 
   test("streaming ingest with a quality gate drops low-quality docs before dedup") {
