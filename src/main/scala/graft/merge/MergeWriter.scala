@@ -36,6 +36,9 @@ import graft.util.NioLocalFileSystem
   * records its full snapshot schema in `_SCHEMA` (the columns it wrote
   * plus the previous version's, for additive evolution), so reads take
   * their schema from one small file instead of every parquet footer.
+  * That is the one on-disk layout every reader accepts; a target in an
+  * older layout fails loudly, naming `COMPACT '<dir>'` ([[compact]]),
+  * the one upgrade.
   *
   * Scale: the join shuffles the touched buckets and the update batch
   * by the key once; Catalyst broadcasts the update side automatically
@@ -61,54 +64,37 @@ object MergeWriter {
   }
 
   /** Bucket count fixed at first write; None before any merge. */
-  def numBuckets(targetDir: String): Option[Int] = bucketMeta(targetDir).map(_._1)
+  def numBuckets(targetDir: String): Option[Int] = bucketLayout(targetDir).map(_._1)
 
-  /** (bucket count, key columns) for the pruning rule; None = legacy. */
-  private[graft] def bucketLayout(targetDir: String): Option[(Int, Seq[String])] =
-    bucketMeta(targetDir)
-
-  /** Every snapshot version still on disk that [[readTargetAt]] can
-    * consistently serve, ascending: manifest-bearing directories (the
-    * data write precedes the manifest, so these are complete even if
-    * the _CURRENT swap never happened) and legacy self-contained
-    * directories at or below the current pointer. A bare `v<N>` with
-    * NO manifest above the pointer is a crash-orphaned partial merge —
-    * advertising it would serve partial data — and is excluded (the
-    * next successful merge overwrites it).
+  /** Every snapshot version on disk that [[readTargetAt]] serves,
+    * ascending: those in today's layout ([[inLayout]]). The manifest is
+    * written after the data, so such a version is complete even if the
+    * _CURRENT swap never happened. Fails, naming COMPACT, when the
+    * current version predates the layout.
     */
   def listVersions(targetDir: String): Seq[Int] = {
-    val dir = Paths.get(targetDir)
-    if (!Files.isDirectory(dir)) return Seq.empty
     val cur = currentVersion(targetDir)
-    val ls = Files.list(dir)
-    try ls.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.matches("v\\d+"))
-      .map(_.drop(1).toInt)
-      .filter(v => v <= cur || Files.exists(manifestFile(targetDir, v)))
-      .toSeq.sorted
-    finally ls.close()
+    if (cur >= 0) snapshot(targetDir, cur)
+    versionDirs(targetDir).filter(v => inLayout(targetDir, v))
   }
 
   /** Per-version metadata for the SQL `graft_target_versions` surface:
     * (version, is_current, buckets mapped by its manifest, of which
-    * held physically in its own directory). Legacy self-contained
-    * versions report (-1-bucket) counts of 1/1.
+    * held physically in its own directory). An emptied target's version
+    * maps no bucket: 0/0.
     */
   private[graft] def versionInfo(targetDir: String): Seq[(Int, Boolean, Int, Int)] = {
     val cur = currentVersion(targetDir)
     listVersions(targetDir).map { v =>
-      val m = manifest(targetDir, v)
-      val own = m.values.count(_.startsWith(s"v$v/") ) + m.values.count(_ == s"v$v")
-      (v, v == cur, m.size, own)
+      val m = manifestEntries(targetDir, v)
+      (v, v == cur, m.size, m.values.count(_.startsWith(s"v$v/")))
     }
   }
 
-  /** (bucket count, key columns) recorded at first merge. Composite
-    * keys are stored comma-joined — a single-key target written before
-    * composite support reads back identically (no comma, one key).
+  /** (bucket count, key columns) recorded at first merge (composite keys
+    * stored comma-joined); None before any merge.
     */
-  private def bucketMeta(targetDir: String): Option[(Int, Seq[String])] = {
+  private[graft] def bucketLayout(targetDir: String): Option[(Int, Seq[String])] = {
     val p = bucketsFile(targetDir)
     if (!Files.exists(p)) None
     else {
@@ -117,42 +103,67 @@ object MergeWriter {
     }
   }
 
-  /** bucket → path (relative to targetDir) for version `v`. Legacy
-    * (pre-manifest) versions are self-contained single directories,
-    * reported as bucket -1.
-    */
-  private def manifest(targetDir: String, v: Int): Map[Int, String] = {
-    val m = manifestFile(targetDir, v)
-    if (!Files.exists(m)) Map(-1 -> s"v$v")
-    else Files.readAllLines(m).iterator().asScala.filter(_.nonEmpty).map { line =>
+  /** The `v<N>` directories on disk, ascending, whatever their layout. */
+  private def versionDirs(targetDir: String): Seq[Int] = {
+    val dir = Paths.get(targetDir)
+    if (!Files.isDirectory(dir)) return Seq.empty
+    val ls = Files.list(dir)
+    try ls.iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(_.matches("v\\d+"))
+      .map(_.drop(1).toInt)
+      .toSeq.sorted
+    finally ls.close()
+  }
+
+  /** bucket → path (relative to targetDir) as version `v`'s manifest lists it. */
+  private def manifestEntries(targetDir: String, v: Int): Map[Int, String] =
+    Files.readAllLines(manifestFile(targetDir, v)).iterator().asScala.filter(_.nonEmpty).map { line =>
       val Array(b, rel) = line.split("\t", 2)
       b.toInt -> rel
     }.toMap
+
+  /** Whether version `v` is in today's layout: the target records
+    * `_BUCKETS`, and the version has a `_SCHEMA` and a `_MANIFEST` whose
+    * entries are all buckets >= 0.
+    */
+  private def inLayout(targetDir: String, v: Int): Boolean =
+    Files.exists(bucketsFile(targetDir)) && Files.exists(schemaFile(targetDir, v)) &&
+      Files.exists(manifestFile(targetDir, v)) && manifestEntries(targetDir, v).keys.forall(_ >= 0)
+
+  /** Version `v`'s bucket → path map and recorded snapshot schema. Only
+    * today's layout is read ([[inLayout]]); any other fails loudly,
+    * naming [[compact]], the one upgrade.
+    */
+  private def snapshot(targetDir: String, v: Int): (Map[Int, String], StructType) = {
+    if (!inLayout(targetDir, v)) throw new IllegalStateException(
+      s"merge target $targetDir: version $v predates the current on-disk layout " +
+        s"(_BUCKETS; per version a _MANIFEST of buckets >= 0 and a _SCHEMA); " +
+        s"run COMPACT '$targetDir' to upgrade it")
+    (manifestEntries(targetDir, v), schemaAt(targetDir, v))
   }
 
-  /** Version `v`'s recorded snapshot schema; None for a version written
-    * before schemas were recorded.
-    */
-  private def recordedSchema(targetDir: String, v: Int): Option[StructType] = {
-    val f = schemaFile(targetDir, v)
-    if (Files.exists(f)) Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
-    else None
-  }
+  private def schemaAt(targetDir: String, v: Int): StructType =
+    DataType.fromJson(Files.readString(schemaFile(targetDir, v))).asInstanceOf[StructType]
 
-  /** Files `rels` (relative to targetDir) of version `v`, read with the
-    * version's full snapshot schema — buckets written before an additive
-    * schema change read the newer columns as null. A version without a
-    * recorded schema unions its files' footers instead (`mergeSchema`,
-    * one inference job).
+  /** Files `rels` (relative to targetDir) read with a version's full
+    * snapshot schema — buckets written before an additive schema change
+    * read the newer columns as null. No files (an emptied target) is an
+    * empty frame of that schema.
     */
-  private def readVersion(spark: SparkSession, targetDir: String, v: Int,
-                          rels: Iterable[String]): DataFrame = {
-    val paths = rels.map(rel => s"$targetDir/$rel").toSeq.sorted
-    recordedSchema(targetDir, v) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
-  }
+  private def readFiles(spark: SparkSession, targetDir: String, rels: Iterable[String],
+                        schema: StructType): DataFrame =
+    if (rels.isEmpty) emptyFrame(spark, schema)
+    else spark.read.schema(schema).parquet(rels.map(rel => s"$targetDir/$rel").toSeq.sorted: _*)
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** Whether `version` is on disk; a bare dir above the pointer without
+    * a manifest is a crash-orphaned partial merge, not a version. */
+  private def hasVersion(targetDir: String, version: Int): Boolean =
+    version >= 0 && Files.isDirectory(Paths.get(targetDir, s"v$version")) &&
+      (version <= currentVersion(targetDir) || Files.exists(manifestFile(targetDir, version)))
 
   /** Read the current target snapshot; None when no version exists. */
   def readTarget(spark: SparkSession, targetDir: String): Option[DataFrame] =
@@ -163,11 +174,12 @@ object MergeWriter {
     * is immutable once written, so this is a consistent point-in-time
     * view regardless of later merges.
     */
-  def readTargetAt(spark: SparkSession, targetDir: String, version: Int): Option[DataFrame] = {
-    if (version < 0 || !Files.exists(manifestFile(targetDir, version))
-      && !Files.isDirectory(Paths.get(targetDir, s"v$version"))) None
-    else Some(readVersion(spark, targetDir, version, manifest(targetDir, version).values))
-  }
+  def readTargetAt(spark: SparkSession, targetDir: String, version: Int): Option[DataFrame] =
+    if (!hasVersion(targetDir, version)) None
+    else {
+      val (m, schema) = snapshot(targetDir, version)
+      Some(readFiles(spark, targetDir, m.values, schema))
+    }
 
   /** Bucket of one ALREADY-TYPED (catalyst-internal) key tuple under
     * this target's layout — the SAME expression the writer buckets by
@@ -209,15 +221,15 @@ object MergeWriter {
     * into the parquet scan); null keys match nothing, as in SQL.
     *
     * The pruned read is forced to the FULL snapshot schema
-    * (`schemaHint`, else the version's `_SCHEMA`, else a mergeSchema
-    * pass over every file) so additive schema evolution cannot make the
-    * result schema vary with which buckets the keys happen to hit —
-    * files predating an added column read it as null.
+    * (`schemaHint`, else the version's `_SCHEMA`) so additive schema
+    * evolution cannot make the result schema vary with which buckets
+    * the keys happen to hit — files predating an added column read it
+    * as null.
     *
-    * None when there is no such version, the target is legacy
-    * (pre-bucket-metadata), or the key type does not survive the
-    * string round trip (see [[stringRoundTrippable]]) — fall back to
-    * [[readTarget]] + a typed filter in those cases.
+    * None when there is no such version, the target has a composite key,
+    * or the key type does not survive the string round trip (see
+    * [[stringRoundTrippable]]) — fall back to [[readTarget]] + a typed
+    * filter in those cases.
     */
   def readTargetKeys(spark: SparkSession, targetDir: String, keys: Seq[Any],
                      version: Int = -1,
@@ -226,9 +238,8 @@ object MergeWriter {
     // the single-key surface stays single-key: against a composite
     // target it reports None (a bare key cannot address a key tuple)
     bucketLayout(targetDir) match {
-      case Some((_, ks)) if ks.size == 1 =>
-        readTargetTuples(spark, targetDir, keys.map(Seq(_)), version, schemaHint)
-      case _ => None
+      case Some((_, ks)) if ks.size > 1 => None
+      case _ => readTargetTuples(spark, targetDir, keys.map(Seq(_)), version, schemaHint)
     }
 
   /** Composite form of [[readTargetKeys]]: each element of `tuples` is
@@ -243,61 +254,58 @@ object MergeWriter {
                        schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[DataFrame] = {
     val cur = if (version >= 0) version else currentVersion(targetDir)
-    if (cur < 0 || !Files.exists(manifestFile(targetDir, cur))) return None
-    bucketMeta(targetDir).flatMap { case (nB, keyCols) =>
-      val m = manifest(targetDir, cur)
-      val schema = schemaHint.orElse(recordedSchema(targetDir, cur))
-        .getOrElse(readVersion(spark, targetDir, cur, m.values).schema)
-      // resolve the key columns case-insensitively, like the rest of the
-      // engine: _BUCKETS may record the ON-clause spelling while the
-      // parquet column carries the source frame's
-      val keyFields = keyCols.map(kc =>
-        schema.fields.find(_.name.equalsIgnoreCase(kc)).getOrElse(return None))
-      if (!keyFields.forall(f => stringRoundTrippable(f.dataType))) return None
-      // one cast per component, shared by the filter literal AND the
-      // bucket hash, so the hashed tuple is provably the one compared;
-      // tuples with a component that fails the cast (or was null) can
-      // match nothing — drop them. EvalMode.TRY, explicitly: Spark 4
-      // defaults ANSI on, and an ANSI cast would THROW on a malformed
-      // key instead of returning the documented empty result.
-      val internalTuples = tuples.filter(_.size == keyCols.size).flatMap { tup =>
-        val cast = tup.zip(keyFields).map { case (k, f) =>
-          if (k == null) null
-          else {
-            import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-            Cast(Literal(
-              org.apache.spark.unsafe.types.UTF8String.fromString(String.valueOf(k)),
-              org.apache.spark.sql.types.StringType), f.dataType, Some("UTC"),
-              EvalMode.TRY).eval(null)
-          }
+    if (!hasVersion(targetDir, cur)) return None
+    val (m, recorded) = snapshot(targetDir, cur)
+    val (nB, keyCols) = bucketLayout(targetDir).get
+    val schema = schemaHint.getOrElse(recorded)
+    // resolve the key columns case-insensitively, like the rest of the
+    // engine: _BUCKETS may record the ON-clause spelling while the
+    // parquet column carries the source frame's
+    val keyFields = keyCols.map(kc =>
+      schema.fields.find(_.name.equalsIgnoreCase(kc)).getOrElse(return None))
+    if (!keyFields.forall(f => stringRoundTrippable(f.dataType))) return None
+    // one cast per component, shared by the filter literal AND the
+    // bucket hash, so the hashed tuple is provably the one compared;
+    // tuples with a component that fails the cast (or was null) can
+    // match nothing — drop them. EvalMode.TRY, explicitly: Spark 4
+    // defaults ANSI on, and an ANSI cast would THROW on a malformed
+    // key instead of returning the documented empty result.
+    val internalTuples = tuples.filter(_.size == keyCols.size).flatMap { tup =>
+      val cast = tup.zip(keyFields).map { case (k, f) =>
+        if (k == null) null
+        else {
+          import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+          Cast(Literal(
+            org.apache.spark.unsafe.types.UTF8String.fromString(String.valueOf(k)),
+            org.apache.spark.sql.types.StringType), f.dataType, Some("UTC"),
+            EvalMode.TRY).eval(null)
         }
-        if (cast.contains(null)) None else Some(cast)
       }
-      // a wanted bucket can be absent from the manifest (never held a
-      // row) — then those tuples simply have no rows to read
-      val wanted = internalTuples
-        .map(vs => bucketOf(vs.zip(keyFields.map(_.dataType)), nB)).toSet
-      val pruned = m.filter { case (b, _) => b == -1 || wanted.contains(b) }
-        .values.map(rel => s"$targetDir/$rel").toSeq.sorted
-      if (internalTuples.isEmpty || pruned.isEmpty)
-        // provably empty: same schema, zero I/O — no point listing a
-        // huge target's files just to filter(false) over them
-        return Some(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-      def typedLit(v: Any, f: org.apache.spark.sql.types.StructField) =
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          org.apache.spark.sql.catalyst.expressions.Literal(v, f.dataType))
-      // single key: IN-list (pushes as one In filter); composite: OR
-      // over tuples of the per-column conjunction (pushes as Or(And))
-      val cond =
-        if (keyFields.size == 1)
-          col(keyFields.head.name).isin(internalTuples.map(t => typedLit(t.head, keyFields.head)): _*)
-        else internalTuples.map { vs =>
-          vs.zip(keyFields).map { case (v, f) => col(f.name) === typedLit(v, f) }
-            .reduce(_ && _)
-        }.reduce(_ || _)
-      Some(spark.read.schema(schema).parquet(pruned: _*).filter(cond))
+      if (cast.contains(null)) None else Some(cast)
     }
+    // a wanted bucket can be absent from the manifest (never held a
+    // row) — then those tuples simply have no rows to read
+    val wanted = internalTuples
+      .map(vs => bucketOf(vs.zip(keyFields.map(_.dataType)), nB)).toSet
+    val pruned = m.filter { case (b, _) => wanted.contains(b) }
+      .values.map(rel => s"$targetDir/$rel").toSeq.sorted
+    if (internalTuples.isEmpty || pruned.isEmpty)
+      // provably empty: same schema, zero I/O — no point listing a
+      // huge target's files just to filter(false) over them
+      return Some(emptyFrame(spark, schema))
+    def typedLit(v: Any, f: org.apache.spark.sql.types.StructField) =
+      org.apache.spark.sql.graftbridge.ColumnBridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal(v, f.dataType))
+    // single key: IN-list (pushes as one In filter); composite: OR
+    // over tuples of the per-column conjunction (pushes as Or(And))
+    val cond =
+      if (keyFields.size == 1)
+        col(keyFields.head.name).isin(internalTuples.map(t => typedLit(t.head, keyFields.head)): _*)
+      else internalTuples.map { vs =>
+        vs.zip(keyFields).map { case (v, f) => col(f.name) === typedLit(v, f) }
+          .reduce(_ && _)
+      }.reduce(_ || _)
+    Some(spark.read.schema(schema).parquet(pruned: _*).filter(cond))
   }
 
   /** Upsert `updates` into the target by `keyCol`. `orderCol` breaks
@@ -477,7 +485,14 @@ object MergeWriter {
                           deleteMatchedOnly: Boolean,
                           syncUpdateFirst: Boolean,
                           matchedUpdateFirst: Boolean): Long = {
-    val nB = bucketMeta(targetDir) match {
+    val cur = currentVersion(targetDir)
+    val next = cur + 1
+    // the current version's bucket map and snapshot schema; a target in
+    // an older layout fails here, naming COMPACT
+    val (oldManifest, prior) =
+      if (cur < 0) (Map.empty[Int, String], None)
+      else { val (m, schema) = snapshot(targetDir, cur); (m, Some(schema)) }
+    val nB = bucketLayout(targetDir) match {
       case Some((b, stored)) =>
         // a different key set would hash rows into buckets the stored
         // layout never wrote — corrupting every later lookup silently.
@@ -551,25 +566,17 @@ object MergeWriter {
       .mapPartitions((it: Iterator[Int]) => it.toSet.iterator)(Encoders.scalaInt)
       .collect().toSet
 
-    val cur = currentVersion(targetDir)
-    val next = cur + 1
-    val oldManifest = if (cur < 0) Map.empty[Int, String] else manifest(targetDir, cur)
-    val legacy = oldManifest.contains(-1)
 
     // full-snapshot sync must examine every target row (any bucket may
     // hold keys absent from the batch), so every manifest bucket is
     // touched — the merge degrades to O(|target|) by definition
     val syncUpdate = syncUpdateCols.isDefined
     val touched =
-      if (syncDelete || syncUpdate) batchTouched ++ oldManifest.keys.filter(_ >= 0)
+      if (syncDelete || syncUpdate) batchTouched ++ oldManifest.keys
       else batchTouched
 
-    // old rows the merge must look at: touched buckets only (a legacy
-    // self-contained snapshot has no bucket layout — read and rewrite
-    // all of it once, migrating to the bucketed form)
-    val oldRels =
-      if (legacy) oldManifest.values.toSeq
-      else oldManifest.filter { case (b, _) => touched.contains(b) }.values.toSeq.distinct
+    // old rows the merge must look at: touched buckets only
+    val oldRels = oldManifest.filter { case (b, _) => touched.contains(b) }.values.toSeq.distinct
 
     // the @@ROWCOUNT-style action count rides the write job: rows that
     // actually insert, update, or delete (an unmatched tombstone takes
@@ -606,10 +613,9 @@ object MergeWriter {
       } else {
         // read with the snapshot schema: touched buckets written before
         // an additive schema change read the newer columns as null
-        val target0 = readVersion(spark, targetDir, cur, oldRels)
+        val target0 = readFiles(spark, targetDir, oldRels, prior.get)
         val oldCols = target0.columns
-        val targetB = if (oldCols.contains("_bucket")) target0
-          else target0.withColumn("_bucket", keyHash)
+        val targetB = target0.withColumn("_bucket", keyHash)
         // the sync-delete scope condition, the sync-update SET
         // expressions, and the sync-update condition are all over the
         // TARGET columns (the only side that exists for a
@@ -662,7 +668,7 @@ object MergeWriter {
         // null for pre-existing rows; a column only in the target is
         // carried forward untouched
         val tData = oldCols.filterNot(c =>
-          keySet.contains(c) || c == "migrated_at" || c == "_bucket" ||
+          keySet.contains(c) || c == "migrated_at" ||
             c == "_gdel" || c == "_gupd" || c == "_gins" || c == "_gsyncdel" ||
             c == "_gsupcond" || c.startsWith("_gsup_"))
         val allData0 = (dataCols ++ tData.filterNot(dataCols.contains)).toSeq
@@ -781,18 +787,14 @@ object MergeWriter {
             (tPresent || coalesce(col("u._gins"), lit(true))) &&
             (if (syncDelete) !syncDrops else lit(true)))
           .select(outCols: _*)
-        // legacy migration keeps every row; bucketed merge only carries
-        // rows of touched buckets (untouched buckets stay where they are)
-        if (legacy) joined else joined.filter(col("_bucket").isin(touched.toSeq: _*))
+        // only rows of touched buckets are rewritten (untouched buckets
+        // stay where they are)
+        joined.filter(col("_bucket").isin(touched.toSeq: _*))
       }
 
     // the new version's schema also keeps the columns that only the
     // carried (untouched) buckets hold
-    val prior = if (cur < 0) None
-      else Some(recordedSchema(targetDir, cur)
-        .getOrElse(readVersion(spark, targetDir, cur, oldManifest.values).schema))
-    val written = writeBuckets(merged, targetDir, next, keyCols,
-      if (legacy) nB else touched.size, prior)
+    val written = writeBuckets(merged, targetDir, next, keyCols, touched.size, prior)
     // resolve AFTER the write job that carried the action observation.
     // Fallback (observation machinery unavailable, e.g. inside
     // foreachBatch): the deduped batch size — an upper bound that only
@@ -806,31 +808,24 @@ object MergeWriter {
     // write (every one of its rows deleted — the parquet writer emits
     // no dir for an empty partition) must NOT carry forward: the old
     // file still holds the deleted rows. It simply leaves the manifest.
-    val carried =
-      if (legacy) Map.empty[Int, String]
-      else oldManifest.filter { case (b, _) =>
-        b >= 0 && !written.contains(b) && !touched.contains(b) }
-    val entries =
-      if (written.isEmpty && carried.isEmpty) {
-        // the target is now EMPTY (deletes removed every row): an
-        // entry-less manifest would read back as "no files" and fail
-        // schema inference — write one schema-bearing empty file
-        // instead, mapped as a legacy self-contained version (the next
-        // merge migrates it back to the bucketed layout)
-        merged.drop("_bucket").coalesce(1)
-          .write.mode("overwrite").parquet(s"$targetDir/v$next/data")
-        Seq(-1 -> s"v$next/data")
-      } else (carried ++ written.map(b => b -> s"v$next/data/_bucket=$b")).toSeq.sorted
-    Files.writeString(manifestFile(targetDir, next),
-      entries.map { case (b, rel) => s"$b\t$rel" }.mkString("", "\n", "\n"))
+    // A merge that deletes every row leaves an entry-less manifest: the
+    // version reads as an empty frame of its recorded schema.
+    val carried = oldManifest.filter { case (b, _) => !written.contains(b) && !touched.contains(b) }
+    publish(targetDir, next, carried ++ written.map(b => b -> s"v$next/data/_bucket=$b"))
+    affected
+  }
 
-    // atomic pointer swap: write-tmp + ATOMIC_MOVE rename
-    val tmp = Paths.get(targetDir, s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
+  /** Write version `v`'s manifest, then swap `_CURRENT` to it
+    * atomically (write-tmp + ATOMIC_MOVE rename): a crash before the
+    * swap leaves the previous version current.
+    */
+  private def publish(targetDir: String, v: Int, entries: Map[Int, String]): Unit = {
+    Files.writeString(manifestFile(targetDir, v),
+      entries.toSeq.sorted.map { case (b, rel) => s"$b\t$rel" }.mkString("", "\n", "\n"))
+    val tmp = Paths.get(targetDir, s"_CURRENT.tmp$v")
+    Files.writeString(tmp, v.toString)
     Files.move(tmp, pointerFile(targetDir),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-
-    affected
   }
 
   /** Write `rows` (which carry `_bucket`) as the bucket directories of
@@ -882,10 +877,14 @@ object MergeWriter {
       finally ls.close()
     }
 
-  /** Rewrite every bucket into one self-contained version (releases
-    * the cross-version references a long merge chain accumulates, so
-    * vacuum can reclaim old versions). Run periodically, like any
-    * compaction job.
+  /** Rewrite the current version into one self-contained version of
+    * today's layout: every bucket rewritten key-sorted, one file each,
+    * with its `_SCHEMA`. It releases the cross-version references a long
+    * merge chain accumulates, so vacuum can reclaim old versions (run it
+    * periodically, like any compaction job), and it is the one upgrade
+    * of a target written in an older layout — the only reader of one.
+    * A target without `_BUCKETS` records no key to bucket by and is
+    * refused.
     */
   def compact(spark: SparkSession, targetDir: String): Unit = lockFor(targetDir).synchronized {
     if (currentVersion(targetDir) < 0) return
@@ -896,25 +895,32 @@ object MergeWriter {
   private def compactLocked(spark: SparkSession, targetDir: String): Unit = {
     val cur = currentVersion(targetDir)
     if (cur < 0) return
-    val (nB, keyCols) = bucketMeta(targetDir).getOrElse(return)
-    val keyed = readTarget(spark, targetDir).get
-      .withColumn("_bucket", pmod(hash(keyCols.map(col): _*), lit(nB)))
+    val (nB, keyCols) = bucketLayout(targetDir).getOrElse(throw new IllegalStateException(
+      s"COMPACT: merge target $targetDir has no _BUCKETS, so no recorded key to bucket " +
+        "its rows by; it cannot be upgraded in place — merge its rows into a new target"))
+    // the upgrade read: a legacy current version holds the files its
+    // manifest maps (bucket -1: one self-contained dir) or, with no
+    // manifest, its bare v<N> dir; with no _SCHEMA, the files' footers
+    // decide (one mergeSchema inference job)
+    val rels =
+      if (Files.exists(manifestFile(targetDir, cur))) manifestEntries(targetDir, cur).values
+      else Seq(s"v$cur")
+    val snap =
+      if (Files.exists(schemaFile(targetDir, cur))) readFiles(spark, targetDir, rels, schemaAt(targetDir, cur))
+      else spark.read.option("mergeSchema", "true").parquet(rels.map(rel => s"$targetDir/$rel").toSeq: _*)
+    val keyed = snap.withColumn("_bucket", pmod(hash(keyCols.map(col): _*), lit(nB)))
     val next = cur + 1
     // same one-file-per-bucket, key-sorted layout as the merge write path
     // (the full snapshot is read, so its columns are already all there)
     val written = writeBuckets(keyed, targetDir, next, keyCols, nB, None)
-    Files.writeString(manifestFile(targetDir, next),
-      written.toSeq.sorted.map(b => s"$b\tv$next/data/_bucket=$b").mkString("", "\n", "\n"))
-    val tmp = Paths.get(targetDir, s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointerFile(targetDir),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    publish(targetDir, next, written.map(b => b -> s"v$next/data/_bucket=$b").toMap)
   }
 
   /** Retention: drop version directories that are (a) older than the
     * newest `keep` versions AND (b) not referenced by any kept
     * version's manifest (bucket entries may point across versions).
     * Never touches the current version; safe any time after a merge.
+    * Versions of an older layout are reclaimed alike once unreferenced.
     */
   def vacuum(targetDir: String, keep: Int = 2): Seq[Int] = lockFor(targetDir).synchronized {
     // keep = 0 would consider NO version referenced — including the one
@@ -929,9 +935,10 @@ object MergeWriter {
     val cur = currentVersion(targetDir)
     if (cur < 0) return Seq.empty
     val dir = Paths.get(targetDir)
-    val all = listVersions(targetDir)
+    val all = versionDirs(targetDir)
     val kept = all.filter(v => v > cur - keep)
-    val referenced = kept.flatMap(v => manifest(targetDir, v).values)
+    val referenced = kept.filter(v => Files.exists(manifestFile(targetDir, v)))
+      .flatMap(v => manifestEntries(targetDir, v).values)
       .flatMap(rel => "^v(\\d+)".r.findFirstMatchIn(rel).map(_.group(1).toInt)).toSet
     val removable = all.filter(v => v <= cur - keep && !referenced.contains(v))
     removable.foreach(v => graft.util.Fs.deleteRecursively(dir.resolve(s"v$v")))

@@ -277,19 +277,15 @@ object GraftTargetTvf {
     val df = MergeWriter.readTargetAt(spark, path, resolved)
       .getOrElse(throw new IllegalArgumentException(
         s"graft_target: no merge target (or no such version) at $path"))
-    // reads of a bucketed target stay DEFERRED ([[GraftTargetNode]]) so
-    // the optimizer can lower a point lookup to the pruned scan —
-    // current-snapshot AND time-travel alike (the node pins `resolved`,
-    // so the pruned lowering reads that version's manifest; a pinned
-    // version predating the bucket layout simply fails the pruned read
-    // and finalizes to the full scan). Legacy targets read plainly.
-    // The node wraps the ANALYZED relation — a leaf must expose
-    // resolved output attributes, the analyzer won't descend into it.
-    MergeWriter.bucketLayout(path) match {
-      case Some((_, keyCols)) =>
-        GraftTargetNode(path, keyCols, resolved, df.queryExecution.analyzed)
-      case None => df.queryExecution.logical
-    }
+    // the read stays DEFERRED ([[GraftTargetNode]]) so the optimizer
+    // can lower a point lookup to the pruned scan — current-snapshot AND
+    // time-travel alike (the node pins `resolved`, so the pruned
+    // lowering reads that version's manifest). The node wraps the
+    // ANALYZED relation — a leaf must expose resolved output
+    // attributes, the analyzer won't descend into it. A target the read
+    // above accepted records its key in _BUCKETS.
+    GraftTargetNode(path, MergeWriter.bucketLayout(path).get._2, resolved,
+      df.queryExecution.analyzed)
   }
 }
 
@@ -408,16 +404,14 @@ case class CompactStreamsCommand(workDir: String) extends LeafRunnableCommand {
     AttributeReference("leaves_before", LongType, nullable = false)(),
     AttributeReference("leaves_after", LongType, nullable = false)())
 
-  private val stores = Seq(
-    "band_index" -> "band_index", "admitted" -> "admitted",
-    "gram_index" -> "gram_index", "ledger" -> "ledger",
-    "vector_index" -> "vector_index/codes",
-    "image_band_index" -> "image_band_index", "image_ledger" -> "image_ledger",
-    "audio_band_index" -> "audio_band_index", "audio_ledger" -> "audio_ledger")
-
   override def run(session: SparkSession): Seq[Row] = {
-    def counts(): Map[String, Seq[Long]] = stores.flatMap { case (name, sub) =>
-      val store = new graft.streaming.LeafStore(session, s"$workDir/$sub")
+    // the vector codes live in the generation the store's _GEN pointer
+    // serves (vector_index/codes before any retrain)
+    val stores = Seq("band_index", "admitted", "gram_index", "ledger", "image_band_index",
+        "image_ledger", "audio_band_index", "audio_ledger").map(s => s -> s"$workDir/$s") :+
+      ("vector_index" -> new graft.sim.VectorIndexStore(session, s"$workDir/vector_index").codesDir)
+    def counts(): Map[String, Seq[Long]] = stores.flatMap { case (name, dir) =>
+      val store = new graft.streaming.LeafStore(session, dir)
       if (store.exists) Some(name -> store.ids()) else None
     }.toMap
     val before = counts()
@@ -734,12 +728,6 @@ object GraftTargetVersionsTvf {
   }
 }
 
-/** `graft_target_layout('<path>')` table-valued function — storage
-  * discoverability for the write side: the bucket count and key
-  * columns fixed at the target's first merge (what a caller must know
-  * to compose `MERGE INTO ... ON` / `graft_target_lookup` key tuples),
-  * plus the current version.
-  */
 /** `graft_profile('<path>'[, 'col1,col2,...'])` — column-level
   * profiling of any parquet table as a TVF: per column, rows / nulls /
   * exact distinct count / native-typed min-max (rendered as strings).
@@ -762,6 +750,12 @@ object GraftProfileTvf {
   }
 }
 
+/** `graft_target_layout('<path>')` table-valued function — storage
+  * discoverability for the write side: the bucket count and key
+  * columns fixed at the target's first merge (what a caller must know
+  * to compose `MERGE INTO ... ON` / `graft_target_lookup` key tuples),
+  * plus the current version.
+  */
 object GraftTargetLayoutTvf {
   def build(exprs: Seq[Expression]): LogicalPlan = {
     require(exprs.size == 1, "usage: graft_target_layout('<path>')")

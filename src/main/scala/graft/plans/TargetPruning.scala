@@ -10,8 +10,7 @@ import graft.merge.MergeWriter
 /** Deferred `graft_target('<path>')` scan: a leaf that remembers the
   * target path (and its bucket key columns) so the optimizer can still
   * choose HOW to read it. The TVF returns this node instead of the
-  * concrete parquet relation whenever the target has a bucket layout;
-  * the two injected rules below lower it:
+  * concrete parquet relation; the two injected rules below lower it:
   *
   *  - [[TargetPointLookupRule]] (operator-optimization fixed point):
   *    once filter pushdown has parked a `Filter` directly on the node,

@@ -71,7 +71,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
 
   private def genRoot(g: Long): String = if (g == 0L) dir else s"$dir/gen=$g"
   private def centroidsDir = s"${genRoot(currentGen)}/centroids"
-  private def codesDir = s"${genRoot(currentGen)}/codes"
+  private[graft] def codesDir = s"${genRoot(currentGen)}/codes"
   private def tombsDir = s"${genRoot(currentGen)}/tombstones"
   // the fold's temp dir sits in the store root whatever the generation
   private def codesStore =

@@ -64,16 +64,10 @@ import graft.util.Fs
   *   (`gram_index/batch_id=<n>` leaves, folded by the same compaction),
   *   NOT stream state; docs too short to gram pass. Applied between
   *   decontamination and dedup. Coverage is total once a gate-ON
-  *   construction has run: enabling the gate over a corpus ingested
-  *   without it backfills the whole index from the admitted store at
-  *   construction; once the store exists, every admitted batch writes
-  *   its grams even while the gate is OFF (so an on→off→on flip
-  *   leaves no unindexed gap); any positive admitted leaf still
-  *   missing its gram twin (a pre-gap-fix ingest) is re-indexed at
-  *   construction by leaf-id compare; and a store with no coverage
-  *   marker (predating the always-write rule — its gaps may already
-  *   be folded into consolidated segments, invisible to leaf
-  *   compares) is fully rebuilt from the admitted corpus once.
+  *   construction has run: it rebuilds a gram store that carries no
+  *   coverage marker (or does not exist) from the admitted store, and
+  *   from then on every admitted batch writes its grams even while the
+  *   gate is OFF, so an on→off→on flip leaves no unindexed gap.
   * @param ledger when true, every batch writes a per-doc disposition
   *   frame — (doc_id, stage-that-dropped-it | 'admitted') — to
   *   `ledger/batch_id=<n>`, the streaming twin of the batch funnel's
@@ -116,71 +110,25 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
     (graft.sketch.Bloom.sketch(evalH, col("hv"), items, decontNumBits), evalH)
   }
 
-  // First-enable backfill: turning the novelty gate on over a corpus
-  // ingested WITHOUT it (admitted docs exist, gram index doesn't) used
-  // to leave every previously admitted doc's grams out of the index —
-  // span-stitched redundancy against the older corpus silently passed
-  // the gate. Build the missing index from the admitted store once, at
-  // construction, into a consolidated-segment leaf (negative id, so a
-  // replayed batch 0 can't overwrite it).
-  // Coverage marker: records that the gram store was built (or
-  // rebuilt) under the always-write rule, so every admitted doc's
-  // grams are in the index. A store WITHOUT it predates the rule (or
-  // the marker), and its unindexed off-period batches may already be
-  // folded into a negative consolidated segment — invisible to any
-  // leaf-id compare — so the only sound repair is a full rebuild.
-  // Underscore-prefixed, so parquet readers of gramDir ignore it.
+  // Gram-index coverage, settled once at gate-on construction: the
+  // `_coverage_v1` marker (underscore-prefixed, so parquet readers of
+  // gramDir ignore it) vouches that every admitted doc's grams are in
+  // the index, and the always-write rule in processBatch keeps a marked
+  // store gap-free. A store without it — absent (the gate was never on)
+  // or written before the rule — is rebuilt from the admitted corpus:
+  // written to a temp dir, moved into place as the consolidated segment
+  // batch_id=-1 (negative, so a replayed batch 0 cannot overwrite it),
+  // then marked. A crash before the mark leaves an unmarked store,
+  // rebuilt again at the next gate-on construction.
   private val gramCoverageMarker = Paths.get(gramDir, "_coverage_v1")
-  private def touchCoverageMarker(): Unit =
-    if (!Files.exists(gramCoverageMarker)) {
-      try Files.createFile(gramCoverageMarker)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-  if (noveltyGate.isDefined && !Files.isDirectory(Paths.get(gramDir))
-      && Files.isDirectory(Paths.get(admittedDir))) {
-    val corpus = spark.read.parquet(admittedDir).dropDuplicates("doc_id")
-    Dedup.gramIndex(corpus, noveltyNgram)
-      .write.mode("overwrite").parquet(s"$gramDir/batch_id=-1")
-    touchCoverageMarker()
-  }
-  // Legacy rebuild: a gram store with no coverage marker may hide a
-  // pre-always-write gap that compaction already folded away (the
-  // off-period batches are no longer distinguishable leaves, so the
-  // leaf-id backfill below cannot see them). Rebuild the whole index
-  // from the admitted corpus ONCE, then mark. Crash windows self-heal:
-  // a crash after the delete leaves gramDir absent, and the absent-dir
-  // full backfill above rebuilds at the next construction.
-  if (noveltyGate.isDefined && Files.isDirectory(Paths.get(gramDir))
-      && !Files.exists(gramCoverageMarker)
-      && Files.isDirectory(Paths.get(admittedDir))) {
+  if (noveltyGate.isDefined && !Files.exists(gramCoverageMarker)) {
     val tmp = Paths.get(workDir, ".gram_rebuild_tmp")
     Fs.deleteRecursively(tmp)
-    Dedup.gramIndex(spark.read.parquet(admittedDir).dropDuplicates("doc_id"), noveltyNgram)
-      .write.mode("overwrite").parquet(tmp.toString)
+    admitted().foreach(Dedup.gramIndex(_, noveltyNgram).write.mode("overwrite").parquet(tmp.toString))
     Fs.deleteRecursively(Paths.get(gramDir))
     Files.createDirectories(Paths.get(gramDir))
-    Files.move(tmp, Paths.get(gramDir, "batch_id=-1"),
-      StandardCopyOption.ATOMIC_MOVE)
-    touchCoverageMarker()
-  }
-  // Gap backfill: a gate on→off→on sequence under the pre-r16 writer
-  // (grams written only while the gate was ON) left the off-period's
-  // admitted batches unindexed — their leaves exist in the admitted
-  // store but have no gram_index twin. Re-index exactly those leaves
-  // at construction (leaf-id compare, positive ids only — negative
-  // consolidated segments fold BOTH stores at the same horizon once
-  // the always-write rule holds, and a not-yet-folded legacy gap is
-  // exactly a positive leaf; the already-folded legacy case is the
-  // marker rebuild above).
-  if (noveltyGate.isDefined && Files.isDirectory(Paths.get(gramDir))
-      && Files.isDirectory(Paths.get(admittedDir))) {
-    val gramIds = grams.ids().toSet
-    admittedStore.leaves()
-      .filter { case (id, _) => id >= 0 && !gramIds.contains(id) }
-      .foreach { case (id, p) =>
-        Dedup.gramIndex(spark.read.parquet(p.toString), noveltyNgram)
-          .write.mode("overwrite").parquet(grams.leaf(id))
-      }
+    if (Files.isDirectory(tmp)) Files.move(tmp, Paths.get(grams.leaf(-1)), StandardCopyOption.ATOMIC_MOVE)
+    Files.createFile(gramCoverageMarker)
   }
 
   /** The admitted corpus so far (empty before the first batch). Deduped
@@ -344,19 +292,14 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
       Dedup.bandKeys(sig.join(admittedDocs.select(col("doc_id")), Seq("doc_id"), "left_semi"), "doc_id")
         .withColumnRenamed("doc_id", "corpus_id")
         .write.mode("overwrite").parquet(index.leaf(batchId))
-      // write grams while the gate is on — AND whenever the store
-      // exists: a gate on→off→on sequence must not leave the off
-      // period's admitted docs unindexed (their span-stitched
-      // redundancy would silently pass the gate forever)
-      if (noveltyGate.isDefined || grams.exists) {
+      // the always-write rule: grams are written whenever the store
+      // exists (a gate-on construction made it), gate on or off — a gate
+      // on→off→on sequence must not leave the off period's admitted docs
+      // unindexed (their span-stitched redundancy would silently pass
+      // the gate forever)
+      if (grams.exists)
         Dedup.gramIndex(admittedDocs, noveltyNgram)
           .write.mode("overwrite").parquet(grams.leaf(batchId))
-        // gate-on coverage is guaranteed: construction rebuilt or
-        // backfilled any gap, and this write maintains it. (A gate-OFF
-        // write must NOT mark — it cannot vouch for a legacy store's
-        // history, only the gate-on construction pass can.)
-        if (noveltyGate.isDefined) touchCoverageMarker()
-      }
     }
   }
 

@@ -185,13 +185,30 @@ class ExtensionsSpec extends SparkSpec {
     assert(empty.count() == 0)
     assert(empty.columns.contains("k") && empty.columns.contains("v"))
     assert(s2.sql(s"SELECT * FROM graft_target('$dir')").count() == 0)
+    val emptied = MergeWriter.currentVersion(dir)
     Seq((4L, "d")).toDF("k", "v").createOrReplaceTempView("del_reseed")
     s2.sql(s"MERGE INTO '$dir' USING del_reseed ON k").collect()
     assert(state() == Map(4L -> "d"))
 
+    // the emptied version maps no bucket: time travel to it reads empty
+    // with its columns, a pinned lookup finds nothing, and its versions
+    // row reports 0/0
+    val emptiedAt = MergeWriter.readTargetAt(s2, dir, emptied).get
+    assert(emptiedAt.count() == 0 && emptiedAt.columns.toSet.contains("k") &&
+      emptiedAt.columns.toSet.contains("v"))
+    assert(s2.sql(s"SELECT * FROM graft_target('$dir', $emptied)").count() == 0)
+    assert(s2.sql(s"SELECT * FROM graft_target_lookup_at('$dir', $emptied, 1, 4)").count() == 0)
+    assert(s2.sql(s"SELECT * FROM graft_target_versions('$dir') WHERE version = $emptied")
+      .as[(Int, Boolean, Int, Int)].collect().toSeq == Seq((emptied, false, 0, 0)))
+
     // time travel still sees the pre-delete snapshots (v0 = the seed)
     assert(MergeWriter.readTargetAt(s2, dir, 0).get
       .select($"k").as[Long].collect().toSet == Set(1L, 2L, 3L))
+    // the re-seed wrote a self-contained version: KEEP 1 reclaims every
+    // older one, the emptied version included
+    assert(s2.sql(s"VACUUM '$dir' KEEP 1").collect().head.getLong(0) == emptied + 1L)
+    assert(state() == Map(4L -> "d"))
+    assert(MergeWriter.readTargetAt(s2, dir, emptied).isEmpty)
 
     // a malformed WHEN blob still raises
     intercept[UnsupportedOperationException] {
@@ -1104,6 +1121,29 @@ class ExtensionsSpec extends SparkSpec {
     assert(ingest.ledgerFrame().get.count() == 8)
     // a dir with no streaming stores is refused, not silently empty
     intercept[Exception] { s2.sql(s"COMPACT STREAMS '${work}_nope'").collect() }
+  }
+
+  test("COMPACT STREAMS folds the vector index in the generation a retrain published") {
+    val work = java.nio.file.Files.createTempDirectory("graft_compact_streams_gen").toString
+    // an embedding gate alone: 2 batches, a retrain to generation 1,
+    // then 3 more batches — the retrained segment plus 3 batch leaves
+    val cents = Seq((0L, Array(1f, 0f)), (1L, Array(0f, 1f))).toDF("id", "vec")
+    val gate = new graft.streaming.StreamingEmbedIngest(spark, work, cents,
+      simThreshold = 0.999, nprobe = 1)
+    def vecs(b: Long) = Seq(b * 10 + 1, b * 10 + 2)
+      .map(i => (i, Array(math.cos(i * 0.1).toFloat, math.sin(i * 0.1).toFloat))).toDF("id", "vec")
+    for (b <- 0L to 1L) gate.processBatch(vecs(b), b)
+    assert(gate.store.retrain(vecs(0).union(vecs(1)), "id", "vec", k = 2) == 1L)
+    for (b <- 2L to 4L) gate.processBatch(vecs(b), b)
+    def probe() = gate.store.probe((0L to 4L).map(vecs).reduce(_ union _), "id", "vec",
+      k = 3, nprobe = 2).collect().map(_.toSeq).toSet
+    val before = probe()
+
+    val s2 = graft.plans.SiblingSession.withExtensions(spark, new graft.plans.GraftExtensions)
+    val res = s2.sql(s"COMPACT STREAMS '$work'").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(res == Map("vector_index" -> ((4L, 2L))), res.toString)
+    assert(probe() == before, "the fold changed probe results")
   }
 
   test("COMPACT VECTORS / VACUUM VECTORS maintain a standalone store via SQL") {

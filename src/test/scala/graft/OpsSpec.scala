@@ -208,14 +208,33 @@ class OpsSpec extends SparkSpec {
     (0 to 2).foreach(v => assert(Files.exists(Paths.get(dir, s"v$v", "_SCHEMA"))))
     check("recorded schemas")
 
-    // the layout written before schemas were recorded: footers decide
+    // the layout written before schemas were recorded: the readers and
+    // the writer refuse it loudly, naming the upgrade
     (0 to 2).foreach(v => Files.delete(Paths.get(dir, s"v$v", "_SCHEMA")))
-    check("no _SCHEMA files")
+    def refused(what: String)(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(s"COMPACT '$dir'"), s"$what: ${e.getMessage}")
+    }
+    refused("readTarget")(MergeWriter.readTarget(spark, dir))
+    refused("readTargetKeys")(MergeWriter.readTargetKeys(spark, dir, Seq(a.head)))
+    refused("merge")(upsert(Seq((a.head, "X", 1)).toDF("order_id", "customer_id", "_src_order")))
 
+    // COMPACT upgrades it: the current version reads back in full
     MergeWriter.compact(spark, dir)
     assert(Files.exists(Paths.get(dir, "v3", "_SCHEMA")), "compact records the schema")
     val compacted = MergeWriter.readTarget(spark, dir).get
     assert(compacted.columns.toSet == cols && rowsOf(compacted) == expected)
+    val keyed = MergeWriter.readTargetKeys(spark, dir, Seq(a.head, b.head)).get
+    assert(keyed.columns.toSet == cols && rowsOf(keyed) == expected.filter(e => Seq(a.head, b.head).contains(e._1)))
+    // the _SCHEMA-less versions below it stay refused
+    (0 to 2).foreach(v => refused(s"readTargetAt($v)")(MergeWriter.readTargetAt(spark, dir, v)))
+
+    // a target without _BUCKETS records no key to bucket by: readers
+    // refuse it, and so does the upgrade
+    Files.delete(Paths.get(dir, "_BUCKETS"))
+    refused("readTarget without _BUCKETS")(MergeWriter.readTarget(spark, dir))
+    val noKey = intercept[IllegalStateException](MergeWriter.compact(spark, dir))
+    assert(noKey.getMessage.contains("_BUCKETS"), noKey.getMessage)
   }
 
   test("merge vacuum never drops referenced versions; compact releases them") {

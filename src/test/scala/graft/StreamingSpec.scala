@@ -528,13 +528,16 @@ class StreamingSpec extends SparkSpec {
     assert(on2.admitted().get.select($"doc_id").as[Long].collect().toSet ==
       Set(1L, 2L, 11L))
     // legacy-gap repair: simulate a pre-fix store by deleting one gram
-    // leaf — re-construction with the gate on re-indexes exactly it
+    // leaf and the coverage marker (a pre-r16 store has none) —
+    // re-construction with the gate on rebuilds the whole index
     val leaf = java.nio.file.Paths.get(s"$work/gram_index/batch_id=1")
     assert(java.nio.file.Files.isDirectory(leaf), "off-period batch wrote no gram leaf")
     graft.util.Fs.deleteRecursively(leaf)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$work/gram_index/_coverage_v1"))
     val on3 = new graft.streaming.StreamingDedupIngest(spark, work,
       simThreshold = 0.9, noveltyGate = Some(50))
-    assert(java.nio.file.Files.isDirectory(leaf), "gap leaf was not re-indexed")
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$work/gram_index/batch_id=-1")),
+      "gap was not rebuilt into batch_id=-1")
     on3.processBatch(Seq((20L, dB)).toDF("doc_id", "text"), 3L)
     assert(!on3.admitted().get.select($"doc_id").as[Long].collect().contains(20L))
   }
