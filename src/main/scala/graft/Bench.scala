@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.util.{CacheScope, Fs, Json, ShuffleMeter}
+import graft.util.{CacheScope, Fs, Json, SparkMeter}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -152,7 +152,7 @@ object Bench {
     * sample sat next to a deviant sentinel, and each query's shuffle
     * totals from the metered pass. */
   private[graft] final case class Tier(samples: Seq[(String, Seq[Option[Double]])], sentinel: Sentinel,
-                                       suspect: Seq[String], shuffle: Seq[(String, ShuffleMeter.Snap)]) {
+                                       suspect: Seq[String], shuffle: Seq[(String, SparkMeter.Shuffle)]) {
     /** Min over a query's samples, or -1 when any of them threw: a fast
       * failure's wall time would pass off a crash as a good number. */
     val times: Seq[(String, Double)] = samples.map { case (n, s) =>
@@ -169,12 +169,12 @@ object Bench {
   }
 
   /** The measurement sequence every tier shares: two timed passes over
-    * `names` on `dir` (the second also meters shuffle rows and bytes),
-    * each measurement bracketed by the sentinel, then one bounded retry
-    * of the queries whose both passes were suspect. `meter` is the run's
-    * one installed [[ShuffleMeter]]; `lookup` resolves query names (a
-    * test passes a fake). */
-  private[graft] def runTier(spark: SparkSession, dir: String, names: Seq[String], meter: ShuffleMeter,
+    * `names` on `dir` (the second also meters shuffle rows and bytes
+    * through [[SparkMeter]]), each measurement bracketed by the
+    * sentinel, then one bounded retry of the queries whose both passes
+    * were suspect. `lookup` resolves query names (a test passes a
+    * fake). */
+  private[graft] def runTier(spark: SparkSession, dir: String, names: Seq[String],
                              steadyDefault: Double = 1.0, lookup: Lookup = SparkEntry.queries): Tier = {
     def time(n: String) = timed(spark, lookup, dir, n)
     val sen = new Sentinel(() => time("q1_agg"), steadyDefault = steadyDefault)
@@ -183,16 +183,15 @@ object Bench {
     // signal, and both passes are emitted so a cross-round regression
     // is adjudicable from the JSON alone: both slow → real, one → noise
     val pass1 = names.map { n => val p = sen.mark(); n -> ((p, time(n))) }.toMap
-    // pass 2 also records shuffle rows/bytes: the meter's reset/snapshot
-    // quiescence polling sits OUTSIDE the timed window, and shuffle
-    // volume is a plan property — contention moves seconds, never rows —
-    // so one metered pass is the whole signal
-    val shuffle = Seq.newBuilder[(String, ShuffleMeter.Snap)]
+    // pass 2 also records shuffle rows/bytes: the meter's fence jobs
+    // sit OUTSIDE the timed window, and shuffle volume is a plan
+    // property — contention moves seconds, never rows — so one metered
+    // pass is the whole signal
+    val shuffle = Seq.newBuilder[(String, SparkMeter.Shuffle)]
     val pass2 = names.map { n =>
       val p = sen.mark()
-      meter.reset()
-      val dt = time(n)
-      shuffle += n -> meter.snapshot()
+      val (dt, w) = SparkMeter.measure(spark)(time(n))
+      shuffle += n -> w.shuffle
       n -> ((p, dt))
     }.toMap
     sen.close()
@@ -237,13 +236,12 @@ object Bench {
     def selected(tier: Seq[String]) = tier.filter(n => onlyQ.forall(_.contains(n)))
     val queries = SparkEntry.queries
     val names = selected(headline.filter(queries.contains))
-    val meter = ShuffleMeter.install(spark.sparkContext)
     // JVM/codegen warm-up on the smallest fixture beside the bench's
     // (sf0.001), so the timed passes measure steady-state throughput,
     // not JIT compilation
     val warmDir = Paths.get(sfDir).resolveSibling("sf0.001").toString
     names.foreach(n => timed(spark, queries, warmDir, n): Unit)
-    val head = runTier(spark, sfDir, names, meter, lookup = queries)
+    val head = runTier(spark, sfDir, names, lookup = queries)
 
     // Engine-level end-to-end numbers (SURVEY §8): the 4-step pipeline
     // over the reference's two large fixtures — the 100k-row CSV
@@ -289,9 +287,9 @@ object Bench {
         "passes" -> Json.obj(Seq("fixture_100k_sec" -> Json.arr(p100k), "file_1m_sec" -> Json.arr(p1m)))))
     }
 
-    val scale = scaleSmoke(spark, sfDir, meter, !sys.env.get("SPARK_GRAFT_SCALE").contains("0"),
+    val scale = scaleSmoke(spark, sfDir, !sys.env.get("SPARK_GRAFT_SCALE").contains("0"),
       "SPARK_GRAFT_SCALE_COPIES", 10, selected(scaleNames))
-    val scale100 = scaleSmoke(spark, sfDir, meter, sys.env.get("SPARK_GRAFT_SCALE100").contains("1"),
+    val scale100 = scaleSmoke(spark, sfDir, sys.env.get("SPARK_GRAFT_SCALE100").contains("1"),
       "SPARK_GRAFT_SCALE100_COPIES", 100, selected(scale100Names))
     val streaming = streamingSmoke(spark, sfDir)
 
@@ -360,14 +358,14 @@ object Bench {
     * out); `{"error":...}` when it throws — nothing thrown in here may
     * escape, the earlier tiers are already measured.
     */
-  private def scaleSmoke(spark: SparkSession, sfDir: String, meter: ShuffleMeter, enabled: Boolean,
+  private def scaleSmoke(spark: SparkSession, sfDir: String, enabled: Boolean,
                          copiesVar: String, copiesDefault: Int, names: Seq[String]): String = {
     // a malformed copies value falls back to the default
     val copies = sys.env.get(copiesVar)
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(copiesDefault)
     if (!enabled || copies < 1 || names.isEmpty) return "null"
     val dir = Files.createTempDirectory("graft_bench_scale")
-    try scaleJson(copies, scaleTier(spark, sfDir, dir.toString, copies, names, meter))
+    try scaleJson(copies, scaleTier(spark, sfDir, dir.toString, copies, names))
     catch {
       case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -379,8 +377,7 @@ object Bench {
   /** Generate the `copies`× dataset under `dir`, warm it, and run the
     * tier over it. */
   private[graft] def scaleTier(spark: SparkSession, sfDir: String, dir: String, copies: Int,
-                               names: Seq[String], meter: ShuffleMeter,
-                               lookup: Lookup = SparkEntry.queries): Tier = {
+                               names: Seq[String], lookup: Lookup = SparkEntry.queries): Tier = {
     writeScaled(spark, sfDir, dir, copies)
     // untimed warm pass first: the scaled parquet was JUST written, so
     // the first execution pays cold page-cache first-touch and
@@ -391,7 +388,7 @@ object Bench {
     // 10×: q1_agg over 100× lineitem takes ~5s on a CALM host, and a
     // steady calibrated for sf0.1 would flag the whole tier on data
     // size alone. copies ≤ 10 keeps the historical 1.0.
-    runTier(spark, dir, names, meter, steadyDefault = math.max(1.0, copies / 20.0), lookup)
+    runTier(spark, dir, names, steadyDefault = math.max(1.0, copies / 20.0), lookup)
   }
 
   /** The scaled dataset: facts copied `copies` times with per-copy key

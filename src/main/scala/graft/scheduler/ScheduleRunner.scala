@@ -6,6 +6,7 @@ import java.util.UUID
 import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Schedule store + due-scan loop (SURVEY.md §2.10 C6 — reference
   * `ScheduleRunner.java:26-58`: 60s poll for `Enabled AND NextRunAt <=
@@ -50,9 +51,9 @@ class ScheduleRunner(dir: String,
     if (Files.exists(file(id))) Some(load(file(id).toString)) else None
 
   def list(): Seq[Schedule] =
-    Files.list(Paths.get(dir)).iterator().asScala
+    Using.resource(Files.list(Paths.get(dir)))(_.iterator().asScala
       .filter(_.toString.endsWith(".properties"))
-      .map(p => load(p.toString)).toSeq.sortBy(_.name)
+      .map(p => load(p.toString)).toSeq.sortBy(_.name))
 
   // ---- due scan (C6) --------------------------------------------------
 

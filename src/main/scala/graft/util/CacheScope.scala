@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Scoped lifecycle for the engine's internal `cache()`s.
   *
@@ -29,12 +30,18 @@ object CacheScope {
 
   private val active = new ThreadLocal[scala.collection.mutable.ArrayBuffer[Dataset[_]]]
 
-  /** `.cache()` plus registration in the enclosing [[loan]], if any. */
-  def pin[T](ds: Dataset[T]): Dataset[T] = {
-    val scope = active.get()
-    if (scope != null) scope += ds
-    ds.cache()
-  }
+  /** `.cache()` plus registration in the enclosing [[loan]], if any.
+    * A frame whose plan is already cached — by the caller, or by an
+    * earlier pin — comes back as it is: neither cached again nor
+    * registered, because unpersisting an equal plan drops that other
+    * owner's cache. */
+  def pin[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.storageLevel != StorageLevel.NONE) ds
+    else {
+      val scope = active.get()
+      if (scope != null) scope += ds
+      ds.cache()
+    }
 
   /** Run `body`, then unpersist every frame [[pin]]ned inside it.
     * Nested loans release only their own pins. Returns `body`'s value;

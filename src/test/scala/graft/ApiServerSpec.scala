@@ -4,13 +4,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.catalog.RunCatalog
 import graft.http.ApiServer
 import graft.runner.PipelineRunner
+import graft.util.SparkMeter
 
 /** Drives the REST surface over a real socket: upload → trigger →
   * poll → logs → cancel/sweep.
@@ -342,32 +339,6 @@ class ApiServerSpec extends SparkSpec {
     } finally api.stop()
   }
 
-  /** Spark jobs started while `body` ran: a listener records every job
-    * start between two fence jobs (the listener bus delivers in order). */
-  private def jobsDuring(body: => Unit): Int = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    def fence(name: String): Unit = {
-      spark.sparkContext.setJobGroup(name, name)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains(name) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(groups.contains(name), s"listener never saw $name")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      fence("fence-before")
-      body
-      fence("fence-after")
-      val seen = groups.asScala.toSeq
-      seen.indexOf("fence-after") - seen.indexOf("fence-before") - 1
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** A catalog of `n` finished runs, one second apart, oldest first:
     * history rolled into a segment, the newest few runs still appends. */
   private def historicCatalog(work: String, n: Int): (RunCatalog, Seq[String]) = {
@@ -399,11 +370,11 @@ class ApiServerSpec extends SparkSpec {
       val id = ids(ids.size / 2)
       val paths = Seq("/runs", s"/runs/$id", s"/runs/$id/logs", s"/runs/$id/progress", s"/logs?runId=$id")
       val bodies = scala.collection.mutable.Map[String, String]()
-      val jobs = jobsDuring(paths.foreach { p =>
+      val jobs = SparkMeter.measure(spark)(paths.foreach { p =>
         val r = get(base + p)
         assert(r.statusCode() == 200, p)
         bodies(p) = r.body()
-      })
+      })._2.jobs.size
       assert(jobs == 0, s"$jobs Spark jobs for ${paths.size} GETs")
       assert(bodies(s"/runs/$id").contains("\"step_name\":\"Migrate\""))
       assert(bodies(s"/runs/$id/progress").contains("\"rowsTotal\":10"))

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import graft.util.{Fs, Json, ShuffleMeter}
+import graft.util.{Fs, Json}
 
 /** The bench's one tier runner at sf0.001: a query that throws is
   * reported as failed (never timed), the JSON keeps its key order, and
@@ -15,11 +15,6 @@ import graft.util.{Fs, Json, ShuffleMeter}
 class BenchSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
-
-  private def withMeter[A](body: ShuffleMeter => A): A = {
-    val meter = ShuffleMeter.install(spark.sparkContext)
-    try body(meter) finally spark.sparkContext.removeSparkListener(meter)
-  }
 
   private def keys(node: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
     node.fieldNames().asScala.toSeq
@@ -30,7 +25,7 @@ class BenchSpec extends SparkSpec {
       case n => SparkEntry.queries(n)
     }
     val names = Seq("q1_agg", "q_topn", "q_throws")
-    val tier = withMeter(Bench.runTier(spark, sf(), names, _, lookup = lookup))
+    val tier = Bench.runTier(spark, sf(), names, lookup = lookup)
     val times = tier.times.toMap
     assert(times("q_throws") == -1.0)
     assert(times("q1_agg") > 0 && times("q_topn") > 0)
@@ -56,7 +51,7 @@ class BenchSpec extends SparkSpec {
       case "q1_agg" => (_, _) => throw new IllegalStateException("planted sentinel failure")
       case n => SparkEntry.queries(n)
     }
-    val tier = withMeter(Bench.runTier(spark, sf(), Seq("q_topn"), _, lookup = lookup))
+    val tier = Bench.runTier(spark, sf(), Seq("q_topn"), lookup = lookup)
     assert(tier.times.toMap.apply("q_topn") > 0)
     assert(tier.sentinel.median == 0.0)
     assert(tier.sentinel.tierContaminated)
@@ -77,7 +72,7 @@ class BenchSpec extends SparkSpec {
         .foreach(p => Files.copy(p, fixture.resolve(p.getFileName)))
       finally ls.close()
       val names = Seq("q1_agg", "q_retrieval_metrics")
-      val tier = withMeter(Bench.scaleTier(spark, fixture.toString, scaled.toString, 1, names, _))
+      val tier = Bench.scaleTier(spark, fixture.toString, scaled.toString, 1, names)
       val times = tier.times.toMap
       assert(times("q1_agg") > 0)
       assert(times("q_retrieval_metrics") == -1.0)

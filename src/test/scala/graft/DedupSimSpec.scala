@@ -289,6 +289,17 @@ class DedupSimSpec extends SparkSpec {
     assert(m >= n)
   }
 
+  test("a loan never releases a cache made outside it, even when an operator pins the same frame") {
+    import org.apache.spark.storage.StorageLevel
+    val corpus = graft.Tables.t(spark, sf(), "documents").select($"doc_id", $"text")
+    val sig = Dedup.minhashSignatures(corpus, "doc_id").cache()
+    try {
+      val pairs = graft.util.CacheScope.loan(Dedup.lshCandidatePairs(sig, "doc_id").count())
+      assert(pairs > 0)
+      assert(sig.storageLevel != StorageLevel.NONE, "the loan dropped the caller's cache")
+    } finally sig.unpersist()
+  }
+
   test("leakage split: planted near-dups land on the same side as their originals") {
     val split = SparkEntry.queries("q_leakage_split")(spark, sf())
       .select($"doc_id", $"split").as[(Long, String)].collect().toMap

@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-import graft.util.ShuffleMeter
+import graft.util.{CacheScope, SparkMeter}
 
 /** Measured shuffle accounting — the regression gate behind SURVEY
   * §9's scale claims. Plan-shape pins prove an operator KEEPS its
   * banded/broadcast shape, but a quadratic blowup that keeps its plan
   * shape (a band that stops pruning, a celebrity guard that stops
   * guarding) passes every pin; this spec runs the representative
-  * operators at sf0.001 AND sf0.01 (≈10× the input rows) under a
-  * SparkListener task-metrics meter and asserts the SHUFFLED ROW
+  * operators at sf0.001 AND sf0.01 (≈10× the input rows) inside
+  * [[graft.util.SparkMeter.measure]] and asserts the SHUFFLED ROW
   * growth stays linear-ish in the input growth — never quadratic.
   *
   * The bound: shuffle-rows growth ≤ 2.5× the measured input-rows
@@ -27,8 +27,6 @@ import graft.util.ShuffleMeter
   * on every `sbt test`.
   */
 class MetricsSpec extends SparkSpec {
-
-  private lazy val meter = ShuffleMeter.install(spark.sparkContext)
 
   /** (query, input table, small SF, big SF). The SF pair differs by
     * family because the generated fixtures do: documents is flat
@@ -47,13 +45,10 @@ class MetricsSpec extends SparkSpec {
   private def rowsOf(dir: String, table: String): Long =
     spark.read.parquet(s"$dir/$table.parquet").count()
 
-  private def shuffledRows(name: String, dir: String): Long = {
-    meter.reset()
-    graft.util.CacheScope.loan {
-      SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(): Unit
-    }
-    meter.snapshot().writeRows
-  }
+  private def shuffledRows(name: String, dir: String): Long =
+    SparkMeter.measure(spark) {
+      CacheScope.loan { SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(): Unit }
+    }._2.shuffle.writeRows
 
   test("shuffle-row growth across a ~10× SF step is linear-ish for every representative operator") {
     val report = cases.map { case (name, table, smallSf, bigSf) =>
@@ -88,11 +83,20 @@ class MetricsSpec extends SparkSpec {
     // (A single input slice would satisfy the aggregation's required
     // distribution outright and shuffle nothing — the meter must see a
     // real exchange to be calibrated.)
-    meter.reset()
-    spark.range(0, 1000, 1, 4).selectExpr("id % 10 AS k")
-      .groupBy(col("k")).count()
-      .queryExecution.toRdd.count(): Unit
-    val snap = meter.snapshot()
+    // run under a caller's job group: the body's jobs carry it, the
+    // fences' own group never shows, and the caller's stays set
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller", "caller")
+    val w = SparkMeter.measure(spark) {
+      spark.range(0, 1000, 1, 4).selectExpr("id % 10 AS k")
+        .groupBy(col("k")).count()
+        .queryExecution.toRdd.count()
+    }._2
+    val kept = sc.getLocalProperty("spark.jobGroup.id")
+    sc.clearJobGroup()
+    assert(kept == "caller")
+    assert(w.jobs.nonEmpty && w.jobs.forall(_.group.contains("caller")), w.jobs)
+    val snap = w.shuffle
     assert(snap.writeRows == 40L, s"expected exactly 40 shuffled partial rows, got $snap")
     assert(snap.readRows == 40L, s"read side disagreed: $snap")
     assert(snap.writeBytes > 0 && snap.readBytes > 0, snap.toString)

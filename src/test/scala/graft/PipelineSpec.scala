@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -12,6 +10,7 @@ import graft.merge.MergeWriter
 import graft.model.Schemas
 import graft.runner.PipelineRunner
 import graft.sources.Ingest
+import graft.util.SparkMeter
 
 /** Golden end-to-end runs over the reference fixture shapes
   * (FIXTURES.md §1-§3): CSV/JSON, messy headers, bad data, upsert
@@ -404,7 +403,6 @@ class PipelineSpec extends SparkSpec {
     s.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
 
   test("jobs per step stay within their ceilings on a clean file") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val work = Files.createTempDirectory("graft_pipe").toString
     val stepKey = "graft.test.step"
     // tag each job with the step the runner thread is in: local
@@ -418,40 +416,25 @@ class PipelineSpec extends SparkSpec {
       }
     }
     val runner = new PipelineRunner(spark, cat, work)
-    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = tags.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty(stepKey))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
-      val first = runner.run(writeFixture("jobs1.csv", sampleCsv))
-      // the steady state: two updates and one insert into a non-empty target
-      val second = runner.run(writeFixture("jobs2.csv",
-        """OrderId,CustomerId,Amount,OrderDate
-          |ORD-001,C9,10.00,2025-02-01
-          |ORD-003,C9,20.00,2025-02-02
-          |ORD-009,C9,30.00,2025-02-03
-          |""".stripMargin))
+      val ((first, second), window) = SparkMeter.measure(spark) {
+        (runner.run(writeFixture("jobs1.csv", sampleCsv)),
+          // the steady state: two updates and one insert into a non-empty target
+          runner.run(writeFixture("jobs2.csv",
+            """OrderId,CustomerId,Amount,OrderDate
+              |ORD-001,C9,10.00,2025-02-01
+              |ORD-003,C9,20.00,2025-02-02
+              |ORD-009,C9,30.00,2025-02-03
+              |""".stripMargin)))
+      }
       assert(first.status == "Success" && second.status == "Success")
-      // a fence job: the listener bus delivers in order, so once it is
-      // seen every job of both runs has been counted
-      spark.sparkContext.setLocalProperty(stepKey, "fence")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      spark.sparkContext.setLocalProperty(stepKey, null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!tags.contains("fence") && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(tags.contains("fence"), "listener never saw the fence job")
       for (r <- Seq(first, second)) {
-        val n = (1 to 4).map(step => tags.asScala.count(_ == s"${r.runId}/$step"))
+        val n = (1 to 4).map(step => window.jobs.count(_.properties.get(stepKey).contains(s"${r.runId}/$step")))
         val Seq(pull, extract, transform, migrate) = n
         assert(pull == 2 && extract == 1 && transform == 1 && migrate <= 6,
           s"jobs per step (pull, extract, transform, migrate) = ${n.mkString(", ")}")
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.sparkContext.setLocalProperty(stepKey, null)
-    }
+    } finally spark.sparkContext.setLocalProperty(stepKey, null)
   }
 
   test("stage reads are run-scoped: other runs' slices change neither rows nor schema") {

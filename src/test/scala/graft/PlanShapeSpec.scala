@@ -114,30 +114,18 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_span_mask materializes its postings once (cached, bounded stages)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val stages = graft.util.SparkMeter.measure(spark) {
       graft.util.CacheScope.loan {
         val df = SparkEntry.queries("q_span_mask")(spark, sf("sf0.001"))
         // the postings subtree must be replaced by the cache on reuse
         assert(df.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
         df.collect()
       }
-      // the listener bus is async — wait for the count to stabilize
-      var prev = -1; var cur = stages.get(); var waited = 0
-      while (cur != prev && waited < 10000) {
-        Thread.sleep(300); waited += 300; prev = cur; cur = stages.get()
-      }
-      info(s"q_span_mask ran $cur stages")
-      // pinned form measured at 19 stages; headroom for AQE variance,
-      // but a per-consumer postings recompute lands well above
-      assert(cur <= 24, s"q_span_mask ran $cur stages — postings recomputed?")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }._2.stages
+    info(s"q_span_mask ran $stages stages")
+    // pinned form measured at 19 stages; headroom for AQE variance,
+    // but a per-consumer postings recompute lands well above
+    assert(stages <= 24, s"q_span_mask ran $stages stages — postings recomputed?")
   }
 
   test("q_length_decile ranks without a single-partition window") {

@@ -32,6 +32,16 @@ class SchedulerProgressSpec extends SparkSpec {
 
     sr.delete(daily.scheduleId)
     assert(sr.list().size == 2)
+
+    // every 60 s tick and every GET /schedules lists the store: the
+    // listing must not hold its directory descriptor open
+    def openFds() = {
+      val ls = Files.list(java.nio.file.Paths.get("/proc/self/fd"))
+      try ls.count() finally ls.close()
+    }
+    val before = openFds()
+    (1 to 200).foreach(_ => sr.list())
+    assert(openFds() - before < 20, "list() leaks its directory listing")
   }
 
   test("schedule firing triggers a pipeline run end-to-end") {

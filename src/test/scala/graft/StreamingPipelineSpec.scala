@@ -6,6 +6,7 @@ import graft.catalog.RunCatalog
 import graft.merge.MergeWriter
 import graft.operators.Salting
 import graft.streaming.StreamingPipeline
+import graft.util.SparkMeter
 
 class StreamingPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -49,25 +50,14 @@ class StreamingPipelineSpec extends SparkSpec {
       ("S-3", "C3", "-5", "2024-01-03")) // rejected in Transform
       .toDF("order_id", "customer_id", "amount", "order_date")
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      pipe.processBatch(batch, 0L)
-      // listener delivery is async; wait for the count to go quiet
-      var (prev, cur) = (-1, jobs.get())
-      while (prev != cur) { Thread.sleep(300); prev = cur; cur = jobs.get() }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = SparkMeter.measure(spark)(pipe.processBatch(batch, 0L))._2.jobs.size
 
     // isEmpty + the merge's bucket-discovery pass (materializes the
     // update chain into cache; AQE splits its shuffle) + the bucket
     // write (reads the cache). ONE scan of the stage chain in total —
     // the pre-fusion shape ran three extra per-stage count actions
     // (8+ jobs) on top.
-    assert(jobs.get() <= 6, s"expected a fused single-scan batch, saw ${jobs.get()} jobs")
+    assert(jobs <= 6, s"expected a fused single-scan batch, saw $jobs jobs")
 
     val target = MergeWriter.readTarget(spark, s"$work/target_orders").get
     assert(target.count() == 2)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.Streams
+import graft.util.SparkMeter
 
 /** Structured Streaming semantics driven synchronously via
   * MemoryStream + processAllAvailable.
@@ -236,10 +237,13 @@ class StreamingSpec extends SparkSpec {
     ingest.processBatch(Seq(
       (1L, d1), (2L, d2), (3L, d1.substring(d1.indexOf(' ') + 1))).toDF("doc_id", "text"), 0L)
     assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L))
-    // batch 1: near-dup of d2 (vs index) is dropped, novel doc admitted
+    // batch 1: near-dup of d2 (vs index) is dropped, novel doc admitted;
+    // a steady batch (neither the first nor a fold) within its job ceiling
     val d3 = "a completely different document about spark catalyst and tungsten"
-    ingest.processBatch(Seq(
-      (10L, d2.substring(d2.indexOf(' ') + 1)), (11L, d3)).toDF("doc_id", "text"), 1L)
+    val jobs = SparkMeter.measure(spark)(ingest.processBatch(Seq(
+      (10L, d2.substring(d2.indexOf(' ') + 1)), (11L, d3)).toDF("doc_id", "text"), 1L))._2.jobs.size
+    info(s"steady micro-batch ran $jobs jobs")
+    assert(jobs <= 21, s"a steady micro-batch ran $jobs jobs, above its ceiling of 21")
     assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L, 11L))
     // replaying batch 1 overwrites its own leaves — same result
     ingest.processBatch(Seq(
