@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.operators.Graphs
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -340,43 +341,10 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Transitive dedup clusters: connected components over a candidate
-    * pair list, by iterative min-label propagation — each round every
-    * node takes the smallest label among itself and its neighbors,
-    * until a fixpoint. Converges in O(component diameter) rounds; for
-    * near-dup graphs (short duplicate chains) that is 2-4 shuffles
-    * total. Each round is one equi-join + one groupBy, lineage is cut
-    * per round (`localCheckpoint`), and convergence is a driver-side
-    * count — no per-row driver work, so the loop scales with the
-    * cluster, not the corpus.
-    */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst_id"), col("dst") === col("dst_id"))
-        .select(col("src").as("id"), col("label"))
-      val next = labels.union(viaNeighbors)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .localCheckpoint()
-      changed = next.as("n")
-        .join(labels.as("p"), col("n.id") === col("p.id"))
-        .filter(col("n.label") < col("p.label")).count()
-      labels = next
-    }
-    labels.select(col("id"), col("label").as("cluster_id"))
-  }
-
   /** Resolve each near-dup-dropped doc's audit pointer BOTH ways: the
     * direct minimum colliding candidate (what min-id-wins actually
     * compared it against — may itself be dropped in a chain A<B<C)
-    * and the transitive cluster keeper via [[connectedComponents]]
+    * and the transitive cluster keeper via [[Graphs.connectedComponents]]
     * (the component minimum, which min-id-wins never drops — the doc
     * that actually SURVIVES the stage). `direct_is_keeper` marks rows
     * where the two coincide; chains are exactly the rows where it is
@@ -386,7 +354,7 @@ object Dedup {
   def resolveDropTargets(pairs: DataFrame): DataFrame = {
     val direct = pairs.groupBy(col("id_b").as("doc_id"))
       .agg(min(col("id_a")).as("killed_by_direct"))
-    val comp = connectedComponents(pairs).withColumnRenamed("id", "doc_id")
+    val comp = Graphs.connectedComponents(pairs).withColumnRenamed("id", "doc_id")
     direct.join(comp, "doc_id")
       .select(col("doc_id"), col("killed_by_direct"),
         col("cluster_id").as("killed_by_resolved"),

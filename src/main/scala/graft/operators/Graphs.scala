@@ -3,11 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed graph analytics over edge frames — the companion to
-  * the dedup family's [[graft.dedup.Dedup.connectedComponents]]:
-  * exact triangle counting by the degree-ordered node-iterator
-  * (Schank/Wagner; the MapReduce classic from Suri/Vassilvitskii's
-  * "Counting Triangles and the Curse of the Last Reducer").
+/** Distributed graph analytics over edge frames: exact triangle
+  * counting by the degree-ordered node-iterator (Schank/Wagner; the
+  * MapReduce classic from Suri/Vassilvitskii's "Counting Triangles and
+  * the Curse of the Last Reducer"), label propagation, k-core, BFS,
+  * PageRank/HITS, and the engine's one connected-components operator —
+  * the dedup family's transitive clustering runs on it too.
   */
 object Graphs {
 
@@ -698,10 +699,8 @@ object Graphs {
   /** Connected components by the ALTERNATING large-star/small-star
     * algorithm (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14): provably O(log² n) rounds on ANY graph, where
-    * [[graft.dedup.Dedup.connectedComponents]]'s min-label propagation
-    * needs Ω(diameter) rounds — right for near-dup chains (tiny
-    * diameter), wrong for the real link graphs the LPA/k-core family
-    * invites, where a 10⁶-hop chain means 10⁶ shuffles. Each round:
+    * min-label propagation needs Ω(diameter) rounds — a 10⁶-hop chain
+    * would mean 10⁶ shuffles. Each round:
     *
     *  - large-star: every node connects its LARGER neighbors to the
     *    minimum of its closed neighborhood (keeps components intact,
@@ -712,18 +711,18 @@ object Graphs {
     * Both are one neighborhood aggregation (min per node — map-side
     * combinable) + one equi-join + dedup; lineage cut per round; the
     * fixpoint is a star forest whose centers are the component minima.
-    * Convergence is an exact frame compare (count + one-sided anti
-    * join, both control-grain scalars). `maxRounds` is a LOUD guard —
-    * at its default the algorithm handles components beyond any
-    * physical corpus (2^⌈√50⌉ ≫ 10¹⁸ nodes).
+    * Convergence costs no job of its own: two exact counters ride the
+    * round's two checkpoint jobs (see [[bigStarWithRounds]]). The loop
+    * fails loudly past [[MaxRounds]] rather than return a partial
+    * labeling.
     *
-    * Same I/O contract as `Dedup.connectedComponents`: `pairs` carries
-    * (id_a, id_b) undirected edges; returns (id, cluster_id) with
-    * cluster_id = the component's minimum member id — a drop-in
-    * replacement, equality spec-pinned in GraphsSpec.
+    * `pairs` carries (id_a, id_b) undirected edges and is read once;
+    * returns (id, cluster_id) for every node, cluster_id = the
+    * component's minimum member id (a node whose only edge is a
+    * self-loop labels itself).
     */
-  def connectedComponentsBigStar(pairs: DataFrame, maxRounds: Int = 50): DataFrame =
-    bigStarWithRounds(pairs, maxRounds)._1
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    bigStarWithRounds(pairs)._1
 
   /** INCREMENTAL component maintenance: fold a batch of new edges
     * into an existing (id, cluster_id) labeling WITHOUT recomputing
@@ -731,7 +730,7 @@ object Graphs {
     * index needs (its clusters grow batch by batch; re-clustering
     * 100 TB of accumulated pairs per micro-batch is not a plan).
     * The existing labels ARE a star forest (member → component min),
-    * so they re-enter [[connectedComponentsBigStar]] as edges next to
+    * so they re-enter [[connectedComponents]] as edges next to
     * the new pairs: the alternating rounds then run over
     * |labels| + |batch| rows — the accumulated PAIR SET (arbitrarily
     * larger than the label set) is read zero times. Equals the
@@ -740,28 +739,37 @@ object Graphs {
     * edge set that produced it (spec-pinned, and driver-gated via
     * `q_cc_incremental`'s full-closure oracle).
     */
-  def mergeComponents(labels: DataFrame, newPairs: DataFrame,
-                      maxRounds: Int = 50): DataFrame = {
-    val labelEdges = labels
-      .select(col("id").as("id_a"), col("cluster_id").as("id_b"))
-    connectedComponentsBigStar(
-      labelEdges.unionByName(
-        newPairs.select(col("id_a"), col("id_b"))), maxRounds)
-  }
+  def mergeComponents(labels: DataFrame, newPairs: DataFrame): DataFrame =
+    connectedComponents(labels.select(col("id").as("id_a"), col("cluster_id").as("id_b"))
+      .unionByName(newPairs.select(col("id_a"), col("id_b"))))
 
-  /** [[connectedComponentsBigStar]] plus the converged round count —
-    * the quantity the O(log²) claim is spec-pinned on. */
-  private[graft] def bigStarWithRounds(pairs: DataFrame,
-                                       maxRounds: Int = 50): (DataFrame, Int) = {
-    // canonical undirected edge set, self-loops dropped; nodes kept
-    // separately so isolated-in-the-making star centers never vanish
-    var edges = pairs
-      .select(least(col("id_a"), col("id_b")).as("u"),
-        greatest(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id"))
+  /** Round bound of [[connectedComponents]], a loud failure and never
+    * a partial labeling: the specs' 300-node path converges in 10
+    * rounds. */
+  private val MaxRounds = 50
+
+  /** [[connectedComponents]] plus the converged round count —
+    * the quantity the O(log²) claim is spec-pinned on.
+    *
+    * A round has converged when large-star rewired no edge (no
+    * neighbor row (u, v > u) with m(u) < u — it returned its input)
+    * and small-star met no node with two smaller neighbors (no row
+    * (u, v < u) with v != m(u) — it returned large-star's output).
+    * Both counts are exact and observed on the checkpoint jobs that
+    * build the round's frames; an explicit count of the same rows runs
+    * only if an observation never arrives.
+    */
+  private[graft] def bigStarWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+    // undirected edges (u ≤ v) without duplicates, self-loops dropped
+    def canonical(e: DataFrame): DataFrame =
+      e.select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+    // the one read of `pairs`; self-loops stay in it so a node whose
+    // only edge is a self-loop is still labelled, and large-star's
+    // v > u filter ignores them
+    val canon = pairs
+      .select(least(col("id_a"), col("id_b")).as("u"), greatest(col("id_a"), col("id_b")).as("v"))
       .distinct()
       .localCheckpoint()
 
@@ -773,54 +781,50 @@ object Graphs {
         .unionByName(e.select(col("v").as("u"), col("u").as("v")))
     def minOf(n: DataFrame): DataFrame =
       n.groupBy(col("u")).agg(min(least(col("v"), col("u"))).as("m"))
+    // checkpoint `step(rows)`, counting the `rows` where `hit` holds on
+    // that checkpoint's own job
+    def checkpointCounting(rows: DataFrame, hit: Column)(
+        step: DataFrame => DataFrame): (DataFrame, Long) = {
+      val obs = new org.apache.spark.sql.Observation()
+      val out = step(rows.observe(obs, count(when(hit, true)).as("n"))).localCheckpoint()
+      (out, graft.util.Metrics.long(obs, "n", rows.filter(hit).count()))
+    }
 
+    var edges = canon
     var rounds = 0
     var converged = false
-    // the convergence compare needs |edges| every round — count once up
-    // front and roll the previous round's |small| forward instead of
-    // re-counting the checkpointed edge frame a second time per round
-    var nEdges = edges.count()
-    while (!converged && rounds < maxRounds) {
+    while (!converged && rounds < MaxRounds) {
       // large-star: every edge {u,v}, u<v, rewires to (v, m(u)) — each
       // original edge is emitted exactly once, from its smaller
       // endpoint's perspective (Kiveris Lemma: preserves components)
       val n1 = nbrs(edges)
-      val large = n1.filter(col("v") > col("u"))
-        .join(minOf(n1), "u")
-        .select(least(col("v"), col("m")).as("u"),
-          greatest(col("v"), col("m")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
+      val (large, rewired) = checkpointCounting(
+          n1.filter(col("v") > col("u")).join(minOf(n1), "u"), col("m") < col("u")) {
+        r => canonical(r.select(col("v").as("a"), col("m").as("b")))
+      }
       // small-star: (v, m(u)) for every neighbor v < u, plus (u, m(u))
       val n2 = nbrs(large)
       val m2 = minOf(n2)
-      val small = n2.filter(col("v") < col("u"))
-        .join(m2, "u")
-        .select(col("v"), col("m"))
-        .unionByName(m2.select(col("u").as("v"), col("m")))
-        .select(least(col("v"), col("m")).as("u"),
-          greatest(col("v"), col("m")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-      val nSmall = small.count()
-      converged = nSmall == nEdges &&
-        small.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      nEdges = nSmall
+      val (small, spread) = checkpointCounting(
+          n2.filter(col("v") < col("u")).join(m2, "u"), col("v") =!= col("m")) {
+        r => canonical(r.select(col("v").as("a"), col("m").as("b"))
+          .unionByName(m2.select(col("u").as("a"), col("m").as("b"))))
+      }
+      converged = rewired == 0 && spread == 0
       edges = small
       rounds += 1
     }
-    require(converged, s"connectedComponentsBigStar did not converge in " +
-      s"$maxRounds rounds — O(log²) convergence makes this unreachable on " +
-      "any physical graph; the edge frame is likely being mutated mid-run")
+    require(converged, s"connectedComponents did not converge in $MaxRounds rounds — " +
+      "O(log²) convergence makes this unreachable on any physical graph; " +
+      "the edge frame is likely being mutated mid-run")
     // fixpoint = star forest: every edge is (center, member) with
-    // center the component min; centers label themselves
-    val labels = nbrs(edges).groupBy(col("u").as("id"))
-      .agg(min(col("v")).as("cluster_id"))
-      .filter(col("cluster_id") < col("id"))
-    (nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id")),
+    // center the component min; each node of `canon` also offers
+    // itself, so one min per node labels members, centers and
+    // self-loop-only nodes alike
+    val self = canon.select(explode(array(col("u"), col("v"))).as("u"))
+      .select(col("u"), col("u").as("v"))
+    (nbrs(edges).unionByName(self)
+      .groupBy(col("u").as("id")).agg(min(col("v")).as("cluster_id")),
       rounds)
   }
 }

@@ -413,13 +413,12 @@ object GraphOps {
         |FROM top t CROSS JOIN gini g ORDER BY t.rank""".stripMargin),
 
     // Connected components by the ALTERNATING big-star algorithm on a
-    // planted HIGH-DIAMETER graph — the case
-    // [[graft.dedup.Dedup.connectedComponents]]'s min-label loop is
-    // wrong for (labels crawl one hop per round): within-segment
+    // planted HIGH-DIAMETER graph — the case a min-label propagation
+    // loop is wrong for (labels crawl one hop per round): within-segment
     // doc-id paths (diameter 49 per 50-doc segment) bridged every
     // 1000 docs into ~100-node chains. The engine runs
-    // [[Graphs.connectedComponentsBigStar]] (O(log²) rounds,
-    // spec-pinned round count); the oracle replays the closure with a
+    // [[Graphs.connectedComponents]] (O(log²) rounds, spec-pinned
+    // round count); the oracle replays the closure with a
     // recursive CTE — component ids are exact integers, so the frames
     // hash-match bit-for-bit. Output mirrors q_dedup_clusters:
     // (doc_id, cluster_id, n_members).
@@ -433,7 +432,7 @@ object GraphOps {
         val e2 = docs.as("a").join(docs.as("b"),
             col("b.doc_id") === col("a.doc_id") + 250 && col("a.doc_id") % 1000 === 0)
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        val comp = Graphs.connectedComponentsBigStar(e1.unionByName(e2))
+        val comp = Graphs.connectedComponents(e1.unionByName(e2))
         comp.groupBy($"cluster_id").agg(count(lit(1)).as("n_members"))
           .join(comp, "cluster_id")
           .select($"id".as("doc_id"), $"cluster_id", $"n_members")
@@ -514,7 +513,7 @@ object GraphOps {
         val e2 = docs.as("a").join(docs.as("b"),
             col("b.doc_id") === col("a.doc_id") + 250 && col("a.doc_id") % 1000 === 0)
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        val batch1 = Graphs.connectedComponentsBigStar(e1)
+        val batch1 = Graphs.connectedComponents(e1)
         val comp = Graphs.mergeComponents(batch1, e2)
         comp.groupBy($"cluster_id").agg(count(lit(1)).as("n_members"))
           .join(comp, "cluster_id")

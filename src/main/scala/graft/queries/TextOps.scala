@@ -7,6 +7,7 @@ import graft.Tables.t
 import graft.curation.Curation
 import graft.dedup.Dedup
 import graft.functions.TextFns
+import graft.operators.Graphs
 
 /** Text-analysis + deduplication operator surface over the `documents`
   * table (the beyond-parity training-data ops), each with a DuckDB
@@ -574,7 +575,7 @@ object TextOps {
     // Duplicate-cluster size distribution — the dedup yield audit:
     // how much of the drop list comes from pairs vs. big families
     // (a heavy tail means templates/boilerplate, not true twins).
-    // Component sizes from the same O(diameter) propagation as
+    // Component sizes from the same connected components as
     // q_dedup_clusters, collapsed to a |sizes|-row histogram.
     q("q_cluster_sizes")(
       (s, d) => {
@@ -582,7 +583,7 @@ object TextOps {
         val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
-        Dedup.connectedComponents(pairs)
+        Graphs.connectedComponents(pairs)
           .groupBy($"cluster_id").agg(count(lit(1)).as("sz"))
           .groupBy($"sz".as("cluster_size")).agg(count(lit(1)).as("n_clusters"))
           .orderBy($"cluster_size")
@@ -693,7 +694,7 @@ object TextOps {
     // dropped in a chain A<B<C) and the transitive cluster keeper (the
     // component minimum — the doc that actually survives the stage),
     // with direct_is_keeper flagging where they coincide. Built from
-    // the same O(diameter) component propagation as q_dedup_clusters.
+    // the same connected components as q_dedup_clusters.
     q("q_neardup_resolution")(
       (s, d) => {
         import s.implicits._
@@ -999,16 +1000,17 @@ object TextOps {
         |ORDER BY id_a, id_b""".stripMargin),
 
     // Transitive dedup clusters: connected components over the LSH
-    // candidate pairs (est_sim ≥ 0.5). Spark side iterates min-label
-    // propagation to a fixpoint; the oracle closes the graph with a
-    // recursive CTE — both must land on identical cluster ids.
+    // candidate pairs (est_sim ≥ 0.5). Spark side runs the big-star
+    // rounds of [[Graphs.connectedComponents]] to a fixpoint; the
+    // oracle closes the graph with a recursive CTE — both must land on
+    // identical cluster ids.
     q("q_dedup_clusters")(
       (s, d) => {
         import s.implicits._
         val sig = Dedup.minhashSignatures(nearDupCorpus(s, d), "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
-        val comp = Dedup.connectedComponents(pairs)
+        val comp = Graphs.connectedComponents(pairs)
         comp.groupBy($"cluster_id").agg(count(lit(1)).as("n_members"))
           .join(comp, "cluster_id")
           .select($"id".as("doc_id"), $"cluster_id", $"n_members")
@@ -1048,7 +1050,7 @@ object TextOps {
         val sig = Dedup.minhashSignatures(corpus, "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
-        val comp = Dedup.connectedComponents(pairs)
+        val comp = Graphs.connectedComponents(pairs)
         comp.join(corpus.select($"doc_id".as("id"), length($"text").as("n_len")), "id")
           .groupBy($"cluster_id")
           .agg(min_by(struct($"id", $"n_len"), struct((-$"n_len").as("o1"), $"id")).as("r"),
@@ -1120,7 +1122,7 @@ object TextOps {
         val sig = Dedup.minhashSignatures(corpus, "doc_id", k = K)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", K, rowsPerBand = 2)
           .filter($"est_sim" >= 0.5)
-        val comp = Dedup.connectedComponents(pairs)
+        val comp = Graphs.connectedComponents(pairs)
         corpus.select($"doc_id")
           .join(comp.select($"id".as("doc_id"), $"cluster_id"), Seq("doc_id"), "left")
           .select($"doc_id", coalesce($"cluster_id", $"doc_id").as("cluster_id"))

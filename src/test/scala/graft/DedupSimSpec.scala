@@ -101,7 +101,7 @@ class DedupSimSpec extends SparkSpec {
   test("connected components: chains close transitively, separate pairs stay apart") {
     // a-b, b-c, c-d is one cluster labelled by its min id; e-f another.
     val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = graft.operators.Graphs.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
     assert(Seq(1L, 2L, 3L, 4L).forall(comp(_) == 1L))
     assert(comp(10L) == 10L && comp(11L) == 10L)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.curation.Sampling
 import graft.dedup.Dedup
@@ -484,34 +486,127 @@ class SamplingFusionSpec extends SparkSpec {
     assert(back == 0L)
   }
 
-  test("connectedComponentsBigStar: == min-label CC everywhere; rounds << diameter on a long path") {
+  /** Driver-side reference for the CC operator: union-find over the
+    * pair list, every node mapped to its component's minimum id (a
+    * union always hangs the larger root under the smaller). */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.map(_._1).distinct.length == rows.length, "a node got two labels")
+    rows.toMap
+  }
+
+  /** Random pair lists: paths over shuffled ids, stars, dense small-id
+    * multigraphs and self-loop-only nodes, 1-4 of them side by side
+    * (several components, or one where they share ids), then some
+    * pairs reversed and some repeated. */
+  private val pairListGen: Gen[Seq[(Long, Long)]] = {
+    val node = Gen.choose(0L, 5000L)
+    val path = Gen.choose(2, 40).flatMap(Gen.listOfN(_, node))
+      .map(ids => ids.zip(ids.tail))
+    val star = for {
+      c <- node
+      leaves <- Gen.choose(1, 25).flatMap(Gen.listOfN(_, node))
+    } yield leaves.map(c -> _)
+    val dense = Gen.choose(1, 30)
+      .flatMap(Gen.listOfN(_, Gen.zip(Gen.choose(0L, 40L), Gen.choose(0L, 40L))))
+    val loops = Gen.choose(1, 3).flatMap(Gen.listOfN(_, node)).map(_.map(x => x -> x))
+    for {
+      parts <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.oneOf(path, star, dense, loops)))
+      edges = parts.flatten
+      flips <- Gen.listOfN(edges.size, Gen.oneOf(false, true))
+      repeats <- Gen.someOf(edges)
+    } yield edges.zip(flips).map { case (e, f) => if (f) e.swap else e } ++ repeats
+  }
+
+  private def pairListSample(seed: Long): Seq[(Long, Long)] =
+    pairListGen.apply(Gen.Parameters.default, Seed(seed)).get
+
+  test("connectedComponents: == union-find everywhere; rounds << diameter on a long path") {
     import graft.operators.Graphs
+    import graft.util.SparkMeter
     val spark2 = spark; import spark2.implicits._
     // a 300-node path with ids increasing along it — the adversarial
     // case for min-label propagation (labels crawl one hop per round,
     // Ω(n) rounds); the alternating algorithm must land in O(log²)
     val path = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (labels, rounds) = Graphs.bigStarWithRounds(path)
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val ((got, rounds), window) = SparkMeter.measure(spark) {
+      val (labels, rounds) = Graphs.bigStarWithRounds(path)
+      (labels.collect().map(r => (r.getLong(0), r.getLong(1))), rounds)
+    }
     assert(got.length == 300 && got.forall(_._2 == 0L),
       s"path did not contract to component 0: ${got.filter(_._2 != 0L).take(5).toSeq}")
     assert(rounds <= 12, s"expected O(log²) rounds on a 300-path, got $rounds")
+    // job cost: convergence rides the rounds' own checkpoint jobs, so
+    // a round costs only the jobs that build its two frames
+    val jobs = window.jobs.size
+    assert(jobs <= 110, s"300-path CC ran $jobs jobs in $rounds rounds")
+    assert(jobs <= 10 * rounds, s"300-path CC ran $jobs jobs in $rounds rounds")
     // hand case: two components + a self-loop-only node stays its own
     // singleton (the self-loop is dropped, the node is not)
     val hand = Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L)).toDF("id_a", "id_b")
-    assert(Graphs.connectedComponentsBigStar(hand).collect()
+    assert(Graphs.connectedComponents(hand).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L), (5L, 5L)))
-    // drop-in equality with the min-label operator on a pseudo-random
-    // multigraph (dups + both orientations in the input)
+    // a pseudo-random multigraph (dups + both orientations in the input)
     val rand = (0L until 200L).map(i => (i, (i * i * 31L + 7L) % 200L))
       .filter { case (a, b) => a != b }
-    val messy = (rand ++ rand.map(_.swap) ++ rand.take(40)).toDF("id_a", "id_b")
-    val viaBigStar = Graphs.connectedComponentsBigStar(messy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaMinLabel = graft.dedup.Dedup.connectedComponents(messy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaBigStar == viaMinLabel, "big-star diverged from min-label CC")
+    val messy = rand ++ rand.map(_.swap) ++ rand.take(40)
+    assert(labelsOf(Graphs.connectedComponents(messy.toDF("id_a", "id_b"))) ==
+      unionFind(messy), "big-star diverged from union-find")
+  }
+
+  test("connectedComponents == union-find on random pair lists, and on the empty frame") {
+    import graft.operators.Graphs
+    val spark2 = spark; import spark2.implicits._
+    for (seed <- 1L to 6L) {
+      val pairs = pairListSample(7000L + seed)
+      assert(labelsOf(Graphs.connectedComponents(pairs.toDF("id_a", "id_b"))) ==
+        unionFind(pairs), s"seed $seed: ${pairs.take(12)}")
+    }
+    assert(Graphs.connectedComponents(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+      .collect().isEmpty)
+  }
+
+  test("mergeComponents over a random two-batch split == the from-scratch clustering") {
+    import graft.operators.Graphs
+    val spark2 = spark; import spark2.implicits._
+    for (seed <- 1L to 4L) {
+      val pairs = pairListSample(8000L + seed)
+      val rng = new scala.util.Random(seed)
+      val (b1, b2) = pairs.partition(_ => rng.nextBoolean())
+      val merged = Graphs.mergeComponents(
+        Graphs.connectedComponents(b1.toDF("id_a", "id_b")), b2.toDF("id_a", "id_b"))
+      assert(labelsOf(merged) == labelsOf(Graphs.connectedComponents(pairs.toDF("id_a", "id_b"))),
+        s"seed $seed: ${b1.size} + ${b2.size} pairs")
+    }
+  }
+
+  test("connectedComponents reads its pair frame once") {
+    import graft.operators.Graphs
+    val spark2 = spark; import spark2.implicits._
+    // a counting source: every evaluation of the pair frame adds its
+    // rows to the accumulator, so an uncached upstream (the LSH pair
+    // plan of the dedup callers) running twice would show as 2×
+    val pairs = pairListSample(9001L)
+    val reads = spark.sparkContext.longAccumulator("pair rows read")
+    val counted = spark.sparkContext.parallelize(pairs, 4)
+      .map { p => reads.add(1); p }.toDF("id_a", "id_b")
+    assert(labelsOf(Graphs.connectedComponents(counted)) == unionFind(pairs))
+    assert(reads.value == pairs.size.toLong,
+      s"pair frame evaluated ${reads.value.toDouble / pairs.size}× (${pairs.size} rows)")
   }
 
   test("nodeTriangles: hand-computed per-node counts; triangle-free nodes report 0; global count unchanged") {
@@ -538,14 +633,14 @@ class SamplingFusionSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // batch 1: two chains and an isolated self-loop node
     val b1 = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 20L)).toDF("id_a", "id_b")
-    val l1 = Graphs.connectedComponentsBigStar(b1)
+    val l1 = Graphs.connectedComponents(b1)
     assert(cc(l1) == Set((1L, 1L), (2L, 1L), (3L, 1L),
       (10L, 10L), (11L, 10L), (20L, 20L)))
     // batch 2: a bridge merging the two chains, a brand-new pair, and
     // an edge touching the old singleton — folded against LABELS only
     val b2 = Seq((3L, 10L), (30L, 31L), (20L, 1L)).toDF("id_a", "id_b")
     val merged = cc(Graphs.mergeComponents(l1, b2))
-    val scratch = cc(Graphs.connectedComponentsBigStar(b1.unionByName(b2)))
+    val scratch = cc(Graphs.connectedComponents(b1.unionByName(b2)))
     assert(merged == scratch, "incremental fold diverged from from-scratch clustering")
     assert(merged == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 1L), (11L, 1L),
       (20L, 1L), (30L, 30L), (31L, 30L)))
