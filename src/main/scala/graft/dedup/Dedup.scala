@@ -90,21 +90,60 @@ object Dedup {
     sig.select(col(idCol) +: (0 until k).map(i => col("sig").getItem(i).as(f"mh$i%02d")): _*)
   }
 
+  /** The minhash column names mh00..mhNN of a k-permutation signature. */
+  def minhashCols(k: Int = 16): IndexedSeq[String] = (0 until k).map(i => f"mh$i%02d")
+
+  /** Every row of `df` with the [[minhashSignatures]] columns appended,
+    * null where the document is too short to shingle (the rows that
+    * operator drops) — one frame for a caller that keeps both.
+    */
+  def withMinhash(df: DataFrame, k: Int = 16, shingleN: Int = 3): DataFrame = {
+    val cols = df.columns.toIndexedSeq.map(col)
+    df.select(cols :+ TextFns.tokens(col("text")).as("_tk"): _*)
+      .select(cols :+ when(size(col("_tk")) >= shingleN,
+        TextFns.minhashSig(col("_tk"), shingleN, k)).as("_sig"): _*)
+      .select(cols ++ minhashCols(k).zipWithIndex.map { case (c, i) => col("_sig").getItem(i).as(c) }: _*)
+  }
+
   /** Band keys of a signature frame: one (id, band_id, band_hash) row
     * per band — the LSH index rows. At scale this is the materialized
     * index a corpus maintains; a new batch only computes ITS band keys
-    * and joins.
+    * and joins. `carry` columns ride along between the id and the band
+    * columns.
     */
   def bandKeys(sig: DataFrame, idCol: String,
-               k: Int = 16, rowsPerBand: Int = 2): DataFrame = {
+               k: Int = 16, rowsPerBand: Int = 2, carry: Seq[String] = Nil): DataFrame = {
     val nBands = k / rowsPerBand
     val bandCols = (0 until nBands).map { b =>
       val parts = (0 until rowsPerBand).map(r => col(f"mh${b * rowsPerBand + r}%02d"))
       struct(lit(b).as("band_id"), md5(concat_ws("_", parts: _*)).as("band_hash")).as(s"b$b")
     }
-    sig.select(col(idCol) +: bandCols: _*)
-      .select(col(idCol), explode(array((0 until nBands).map(b => col(s"b$b")): _*)).as("band"))
-      .select(col(idCol), col("band.band_id"), col("band.band_hash"))
+    val kept = (idCol +: carry).map(col)
+    sig.select(kept ++ bandCols: _*)
+      .select(kept :+ explode(array((0 until nBands).map(b => col(s"b$b")): _*)).as("band"): _*)
+      .select(kept :+ col("band.band_id") :+ col("band.band_hash"): _*)
+  }
+
+  /** The near-dup drop set of one batch in a single grouped pass: the
+    * ids `b` for which some `a < b` shares a band with `b` and agrees
+    * on at least `simThreshold` of the k minhashes — the `id_b` column
+    * of [[lshCandidatePairs]] filtered on `est_sim >= simThreshold`,
+    * without its self-join, its distinct and its two signature joins.
+    * `banded` is [[bandKeys]] output carrying [[minhashCols]]. One
+    * shuffle on the band key; each bucket of m rows is compared in
+    * place (m² work, the self-join's bound). An id comes back once per
+    * bucket that drops it.
+    */
+  def lshDrops(banded: DataFrame, idCol: String, simThreshold: Double,
+               k: Int = 16): DataFrame = {
+    val mh = minhashCols(k)
+    def estSim(a: Column, b: Column): Column =
+      mh.map(c => when(a(c) === b(c), 1).otherwise(0)).reduce(_ + _).cast("double") / k
+    banded.groupBy(col("band_id"), col("band_hash"))
+      .agg(collect_list(struct((idCol +: mh).map(col): _*)).as("m"))
+      .select(explode(filter(col("m"), b => exists(col("m"), a =>
+        a(idCol) < b(idCol) && estSim(a, b) >= simThreshold))).as("d"))
+      .select(col(s"d.$idCol").as(idCol))
   }
 
   /** Incremental dedup: band-match a new batch against an existing

@@ -75,7 +75,7 @@ class VectorIndexStore(spark: SparkSession, dir: String,
   private def tombsDir = s"${genRoot(currentGen)}/tombstones"
   // the fold's temp dir sits in the store root whatever the generation
   private def codesStore =
-    new LeafStore(spark, codesDir, Paths.get(dir, ".compact_tmp_codes"))
+    new LeafStore(spark, codesDir, tmp = Some(Paths.get(dir, ".compact_tmp_codes")))
   private def tombs = new LeafStore(spark, tombsDir)
 
   /** True once [[init]]/[[create]] has published the centroid frame. */

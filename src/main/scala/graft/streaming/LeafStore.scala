@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.util.Fs
+import graft.util.{Fs, NioLocalFileSystem}
 
 /** The on-disk contract every persistent streaming state store shares
   * ([[StreamingDedupIngest]]'s band, admitted, gram and ledger stores,
@@ -20,15 +20,25 @@ import graft.util.Fs
   *   - [[read]] can skip the replaying batch's own leaf;
   *   - [[fold]] consolidates leaves crash-atomically.
   *
-  * `tmp` is the fold's scratch dir, outside the store so readers never
-  * see it (default `<parent>/.compact_tmp_<store name>`).
+  * `schema` is the leaves' declared parquet schema (DDL, the
+  * `batch_id` partition column excluded); with it [[read]] and [[fold]]
+  * start no schema-inference job, without it the first leaf's footer
+  * decides. `tmp` is the fold's scratch dir, outside the store so
+  * readers never see it (default `<parent>/.compact_tmp_<store name>`).
   */
-final class LeafStore(spark: SparkSession, val dir: String, tmp: Path) {
+final class LeafStore(spark: SparkSession, val dir: String, schema: Option[String] = None,
+                      tmp: Option[Path] = None) {
 
-  def this(spark: SparkSession, dir: String) = this(spark, dir, {
+  private val scratch = tmp.getOrElse {
     val p = Paths.get(dir)
     p.resolveSibling(s".compact_tmp_${p.getFileName}")
-  })
+  }
+
+  // basePath: a leaf root is itself a partition dir (batch_id=N), and
+  // may hold partition children of its own (cell=C)
+  private def readLeaves(ls: List[(Long, Path)]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).option("basePath", dir)
+      .parquet(ls.map(_._2.toString): _*)
 
   def exists: Boolean = Files.isDirectory(Paths.get(dir))
 
@@ -69,8 +79,7 @@ final class LeafStore(spark: SparkSession, val dir: String, tmp: Path) {
     */
   def read(exclude: Long = Long.MinValue): Option[DataFrame] = {
     val ls = leaves().filter(_._1 != exclude)
-    if (ls.isEmpty) None
-    else Some(spark.read.option("basePath", dir).parquet(ls.map(_._2.toString): _*))
+    if (ls.isEmpty) None else Some(readLeaves(ls))
   }
 
   /** Fold every leaf with id < `below` (batch leaves AND earlier
@@ -94,18 +103,17 @@ final class LeafStore(spark: SparkSession, val dir: String, tmp: Path) {
     */
   def fold(below: Long, segStart: Long, files: Int, minSources: Int = 2,
            partitionBy: Seq[String] = Nil)(reduce: DataFrame => DataFrame): Unit = {
-    Fs.deleteRecursively(tmp) // sweep an orphan from any earlier crash, even if nothing folds
+    Fs.deleteRecursively(scratch) // sweep an orphan from any earlier crash, even if nothing folds
     val src = leaves().filter(_._1 < below)
     if (src.size < minSources) return
-    // basePath: a leaf root is itself a partition dir (batch_id=N), and
-    // may hold partition children of its own (cell=C)
-    reduce(spark.read.option("basePath", dir).parquet(src.map(_._2.toString): _*))
+    reduce(readLeaves(src))
       .drop("batch_id")
       .coalesce(files)
-      .write.partitionBy(partitionBy: _*).mode("overwrite").parquet(tmp.toString)
+      .write.options(NioLocalFileSystem.writeOptions)
+      .partitionBy(partitionBy: _*).mode("overwrite").parquet(scratch.toString)
     val taken = src.map(_._1).toSet
     val segId = Iterator.iterate(segStart)(_ - 1L).dropWhile(taken.contains).next()
-    Files.move(tmp, Paths.get(leaf(segId)), StandardCopyOption.ATOMIC_MOVE)
+    Files.move(scratch, Paths.get(leaf(segId)), StandardCopyOption.ATOMIC_MOVE)
     src.foreach { case (_, p) => Fs.deleteRecursively(p) }
   }
 }

@@ -62,8 +62,10 @@ abstract class StreamingBandGate(spark: SparkSession, workDir: String,
     */
   protected def hashBatch(batch: DataFrame): DataFrame
 
-  private lazy val index = new LeafStore(spark, s"$workDir/${prefix}_band_index")
-  private lazy val ledgerStore = new LeafStore(spark, s"$workDir/${prefix}_ledger")
+  private lazy val index = new LeafStore(spark, s"$workDir/${prefix}_band_index",
+    Some("corpus_id BIGINT, hv48 BIGINT, band_id INT, band_val BIGINT"))
+  private lazy val ledgerStore = new LeafStore(spark, s"$workDir/${prefix}_ledger",
+    Some("media_id BIGINT, stage STRING, admitted BOOLEAN, ledger_batch_id BIGINT"))
   private val bits = 48 / bands
   private val mask = (1L << bits) - 1
 

@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
-import graft.util.Fs
+import graft.util.{Fs, Metrics, NioLocalFileSystem}
 
 /** Continuous corpus ingestion with an optional quality gate and
   * near-dup filtering against ALL previously admitted documents — the
@@ -19,12 +19,17 @@ import graft.util.Fs
   * state store, but as a plain table it equi-joins each batch in
   * O(batch + collisions). Per batch:
   *
-  *   1. map-only minhash signatures for the batch;
-  *   2. within-batch near-dup drop (LSH banding, min-id-wins);
-  *   3. batch-vs-index band match → drop docs already represented;
-  *   4. append the survivors + their band keys, each to a
-  *      batch-scoped leaf (`batch_id=<n>`), so a replayed micro-batch
-  *      overwrites its own leaves — idempotent under restart.
+  *   1. one checkpoint of the gated batch with its map-only minhash
+  *      columns; the input count is observed on that job;
+  *   2. the batch's band keys, computed once, feed both a grouped
+  *      within-batch near-dup drop ([[graft.dedup.Dedup.lshDrops]]:
+  *      one shuffle on the band key, min-id-wins) and a semi-join
+  *      against the band index → drop docs already represented;
+  *   3. one checkpoint of the survivors, their count observed on it;
+  *   4. append the survivors + their band keys, map-only reads of that
+  *      checkpoint, each to a batch-scoped leaf (`batch_id=<n>`), so a
+  *      replayed micro-batch overwrites its own leaves — idempotent
+  *      under restart.
   *
   * Docs too short to shingle have no signature and are admitted
   * unconditionally (the same contract as the batch dedup family).
@@ -89,12 +94,16 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
                            noveltyNgram: Int = 8,
                            ledger: Boolean = false) {
 
-  private val index = new LeafStore(spark, s"$workDir/band_index")
-  private val admittedStore = new LeafStore(spark, s"$workDir/admitted")
-  private val grams = new LeafStore(spark, s"$workDir/gram_index")
-  private val ledgerStore = new LeafStore(spark, s"$workDir/ledger")
-  private def admittedDir = admittedStore.dir
+  private def store(name: String, schema: String) =
+    new LeafStore(spark, s"$workDir/$name", Some(schema))
+  private val index = store("band_index", "corpus_id BIGINT, band_id INT, band_hash STRING")
+  private val admittedStore = store("admitted", "doc_id BIGINT, text STRING")
+  private val grams = store("gram_index", "hv BIGINT")
+  private val ledgerStore = store("ledger",
+    "doc_id BIGINT, stage STRING, admitted BOOLEAN, ledger_batch_id BIGINT")
   private def gramDir = grams.dir
+  private def write(df: DataFrame, s: LeafStore, id: Long): Unit =
+    df.write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(s.leaf(id))
 
   private def gramHashes(d: DataFrame): DataFrame =
     d.select(col("doc_id"), explode(array_distinct(
@@ -124,7 +133,8 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
   if (noveltyGate.isDefined && !Files.exists(gramCoverageMarker)) {
     val tmp = Paths.get(workDir, ".gram_rebuild_tmp")
     Fs.deleteRecursively(tmp)
-    admitted().foreach(Dedup.gramIndex(_, noveltyNgram).write.mode("overwrite").parquet(tmp.toString))
+    admitted().foreach(Dedup.gramIndex(_, noveltyNgram)
+      .write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(tmp.toString))
     Fs.deleteRecursively(Paths.get(gramDir))
     Files.createDirectories(Paths.get(gramDir))
     if (Files.isDirectory(tmp)) Files.move(tmp, Paths.get(grams.leaf(-1)), StandardCopyOption.ATOMIC_MOVE)
@@ -136,9 +146,7 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
     * next fold, a doc can exist in both the consolidated segment and a
     * not-yet-deleted original leaf.
     */
-  def admitted(): Option[DataFrame] =
-    if (admittedStore.exists) Some(spark.read.parquet(admittedDir).dropDuplicates("doc_id"))
-    else None
+  def admitted(): Option[DataFrame] = admittedStore.read().map(_.dropDuplicates("doc_id"))
 
   /** Fold every store's leaves below `horizon` (batch leaves AND any
     * previous consolidated segment) into a fresh segment each — the
@@ -183,124 +191,123 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
 
   private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (LeafStore.due(batchId, compactEvery)) compact(batchId)
-    if (batch.isEmpty) return
-    // Dedup's internal cache()s must be released on EVERY exit path —
-    // an all-duplicate batch that returned early used to leak one
-    // cached signature frame per micro-batch on a long-running stream.
-    // The loan releases exactly this batch's pins, so a user's own
-    // cached frames in the same session survive (clearCache() didn't).
-    graft.util.CacheScope.loan {
-      // with the ledger on, each stage frame is checkpointed so the
-      // per-doc disposition diffs below read materialized results
-      // instead of re-running the gates; ledger off = zero overhead
-      // `prev` guard: a disabled gate's fold returns its input frame
-      // unchanged — re-checkpointing the identical frame would
-      // materialize the micro-batch once more per disabled gate
-      def ck(df: DataFrame, prev: DataFrame = null): DataFrame =
-        if (ledger && (df ne prev)) df.localCheckpoint() else df
-      val input = ck(batch.select(col("doc_id"), col("text")))
-      // quality gate first (map-only — cheapest drop wins), then pin
-      // the bounded batch so the multi-branch plan below reads the
-      // micro-batch source exactly once
-      val gated = ck(quality.fold(input)(cfg =>
-        graft.curation.Curation.qualityGate(input, cfg).drop("n_tokens")), input)
-      // classifier gate: micro-batch scored against the static
-      // offline-fitted model (broadcast joins — the stream-static
-      // shape); only allowed predicted labels proceed to dedup
-      val classed = ck(classGate.fold(gated) { case (model, allowed) =>
-        val keep = graft.classify.TextClassify.naiveBayesApply(gated, model)
-          .filter(col("pred_label").isInCollection(allowed))
+    // with the ledger on, each stage frame is checkpointed so the
+    // per-doc disposition diffs below read materialized results
+    // instead of re-running the gates; ledger off = zero overhead
+    // `prev` guard: a disabled gate's fold returns its input frame
+    // unchanged — re-checkpointing the identical frame would
+    // materialize the micro-batch once more per disabled gate
+    def ck(df: DataFrame, prev: DataFrame = null): DataFrame =
+      if (ledger && (df ne prev)) df.localCheckpoint() else df
+    // the input count rides the first job that reads the batch (the
+    // input checkpoint with the ledger on, the docs checkpoint
+    // without) instead of an isEmpty probe of its own
+    val offered = new Observation()
+    val input = ck(batch.select(col("doc_id"), col("text"))
+      .observe(offered, count(lit(1)).as("n")))
+    // quality gate first (map-only — cheapest drop wins), then pin
+    // the bounded batch so the multi-branch plan below reads the
+    // micro-batch source exactly once
+    val gated = ck(quality.fold(input)(cfg =>
+      graft.curation.Curation.qualityGate(input, cfg).drop("n_tokens")), input)
+    // classifier gate: micro-batch scored against the static
+    // offline-fitted model (broadcast joins — the stream-static
+    // shape); only allowed predicted labels proceed to dedup
+    val classed = ck(classGate.fold(gated) { case (model, allowed) =>
+      val keep = graft.classify.TextClassify.naiveBayesApply(gated, model)
+        .filter(col("pred_label").isInCollection(allowed))
+        .select(col("doc_id"))
+      gated.join(keep, Seq("doc_id"), "left_semi")
+    }, gated)
+    // decontamination gate: sketch-prefiltered probe of the static
+    // eval gram set; only sketch-positives reach the confirm join
+    val decontD = ck(decontState.fold(classed) { case (bf, evalH) =>
+      // confirm side broadcasts by default; flip the flag off when
+      // the eval hash relation itself is too big to broadcast (the
+      // candidate stream is sketch-bounded, so a shuffle join stays
+      // cheap)
+      val confirm = if (decontBroadcastConfirm) broadcast(evalH) else evalH
+      val contaminated = gramHashes(classed)
+        .filter(graft.sketch.Bloom.mightContain(bf, col("hv")))
+        .join(confirm, "hv")
+        .select(col("doc_id")).distinct()
+      classed.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+    }, classed)
+    // novelty gate: drop documents whose n-grams are mostly already
+    // in the admitted corpus's gram index — exact-substring-level
+    // redundancy control the LSH near-dup below can't see (a doc
+    // stitched from previously-admitted spans is NOT a near-dup of
+    // any single admitted doc). Cost ∝ batch grams ⋈ index; the
+    // 100 TB corpus is never re-read. Docs too short to gram pass.
+    val novelD = noveltyGate.fold(decontD) { maxSeenPct =>
+      grams.read(exclude = batchId).fold(decontD) { idx =>
+        val stale = Dedup.incrementalNovelty(idx.select(col("hv")), decontD, noveltyNgram)
+          .filter(col("n_seen") * 100 > col("n_grams") * maxSeenPct)
           .select(col("doc_id"))
-        gated.join(keep, Seq("doc_id"), "left_semi")
-      }, gated)
-      // decontamination gate: sketch-prefiltered probe of the static
-      // eval gram set; only sketch-positives reach the confirm join
-      val decontD = ck(decontState.fold(classed) { case (bf, evalH) =>
-        // confirm side broadcasts by default; flip the flag off when
-        // the eval hash relation itself is too big to broadcast (the
-        // candidate stream is sketch-bounded, so a shuffle join stays
-        // cheap)
-        val confirm = if (decontBroadcastConfirm) broadcast(evalH) else evalH
-        val contaminated = gramHashes(classed)
-          .filter(graft.sketch.Bloom.mightContain(bf, col("hv")))
-          .join(confirm, "hv")
-          .select(col("doc_id")).distinct()
-        classed.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
-      }, classed)
-      // novelty gate: drop documents whose n-grams are mostly already
-      // in the admitted corpus's gram index — exact-substring-level
-      // redundancy control the LSH near-dup below can't see (a doc
-      // stitched from previously-admitted spans is NOT a near-dup of
-      // any single admitted doc). Cost ∝ batch grams ⋈ index; the
-      // 100 TB corpus is never re-read. Docs too short to gram pass.
-      val novelD = noveltyGate.fold(decontD) { maxSeenPct =>
-        grams.read(exclude = batchId).fold(decontD) { idx =>
-          val stale = Dedup.incrementalNovelty(idx.select(col("hv")), decontD, noveltyNgram)
-            .filter(col("n_seen") * 100 > col("n_grams") * maxSeenPct)
-            .select(col("doc_id"))
-          decontD.join(stale, Seq("doc_id"), "left_anti")
-        }
+        decontD.join(stale, Seq("doc_id"), "left_anti")
       }
-      val docs = novelD.localCheckpoint()
-      val sig = Dedup.minhashSignatures(docs, "doc_id").localCheckpoint()
-
-      val intraDrops = Dedup.lshCandidatePairs(sig, "doc_id")
-        .filter(col("est_sim") >= simThreshold)
-        .select(col("id_b").as("doc_id")).distinct()
-      // the batch_id partition column is not selected: it would collide
-      // with bandMatches' batch-side alias
-      val vsIndex = index.read(exclude = batchId) match {
-        case Some(idx) => Dedup.bandMatches(
-            idx.select(col("corpus_id"), col("band_id"), col("band_hash")), sig, "doc_id")
-          .select(col("batch_id").as("doc_id"))
-        case None => spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
-      }
-      val admittedDocs = docs
-        .join(intraDrops, Seq("doc_id"), "left_anti")
-        .join(vsIndex, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-
-      // per-batch disposition ledger: one row per INPUT doc naming the
-      // stage that dropped it (or 'admitted') — the streaming twin of
-      // the batch funnel's q_funnel_report/q_funnel_ledger, written
-      // BEFORE the all-dropped early return so an empty batch result
-      // still leaves its audit trail. Batch-scoped leaf → idempotent
-      // under replay, folded by the same compaction as the stores.
-      if (ledger) {
-        def ids(df: DataFrame) = df.select(col("doc_id"))
-        def at(df: DataFrame, s: String) = ids(df).withColumn("stage", lit(s))
-        val intra = docs.join(intraDrops, Seq("doc_id"), "left_semi")
-        at(ids(input).except(ids(gated)), "quality")
-          .unionByName(at(ids(gated).except(ids(classed)), "classifier"))
-          .unionByName(at(ids(classed).except(ids(decontD)), "decontamination"))
-          .unionByName(at(ids(decontD).except(ids(docs)), "novelty"))
-          .unionByName(at(intra, "near_dup_intra"))
-          // a doc in BOTH drop sets counts once, at the intra stage
-          .unionByName(at(docs.join(intraDrops, Seq("doc_id"), "left_anti")
-            .join(vsIndex, Seq("doc_id"), "left_semi"), "near_dup_index"))
-          .unionByName(at(admittedDocs, "admitted"))
-          .withColumn("admitted", col("stage") === "admitted")
-          // the batch id rides as a DATA column too: compaction folds
-          // leaves into consolidated segments whose PARTITION id is a
-          // fresh negative — the data column keeps per-batch history
-          .withColumn("ledger_batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(ledgerStore.leaf(batchId))
-      }
-
-      if (admittedDocs.isEmpty) return
-      admittedDocs.write.mode("overwrite").parquet(admittedStore.leaf(batchId))
-      Dedup.bandKeys(sig.join(admittedDocs.select(col("doc_id")), Seq("doc_id"), "left_semi"), "doc_id")
-        .withColumnRenamed("doc_id", "corpus_id")
-        .write.mode("overwrite").parquet(index.leaf(batchId))
-      // the always-write rule: grams are written whenever the store
-      // exists (a gate-on construction made it), gate on or off — a gate
-      // on→off→on sequence must not leave the off period's admitted docs
-      // unindexed (their span-stitched redundancy would silently pass
-      // the gate forever)
-      if (grams.exists)
-        Dedup.gramIndex(admittedDocs, noveltyNgram)
-          .write.mode("overwrite").parquet(grams.leaf(batchId))
     }
+    // the one checkpoint of the gated docs: text plus minhash
+    // columns, null for a doc too short to shingle
+    val docs = Dedup.withMinhash(novelD).localCheckpoint()
+    // an empty batch leaves no leaf at all, not even a ledger leaf
+    if (Metrics.long(offered, "n", input.count()) == 0) return
+
+    // the batch's band keys, computed once: they feed both the
+    // within-batch drop pass and the index match
+    val mh = Dedup.minhashCols()
+    val banded = Dedup.bandKeys(docs.filter(col(mh.head).isNotNull), "doc_id", carry = mh)
+    val intraDrops = Dedup.lshDrops(banded, "doc_id", simThreshold)
+    // the batch_id partition column is not selected: only the band
+    // key takes part in the match
+    val vsIndex = index.read(exclude = batchId).map(idx => banded
+      .join(idx.select(col("band_id"), col("band_hash")), Seq("band_id", "band_hash"), "left_semi")
+      .select(col("doc_id")))
+    val kept = new Observation()
+    val admittedDocs = docs
+      .join(vsIndex.fold(intraDrops)(intraDrops.unionByName(_)), Seq("doc_id"), "left_anti")
+      .observe(kept, count(lit(1)).as("n"))
+      .localCheckpoint()
+
+    // per-batch disposition ledger: one row per INPUT doc naming the
+    // stage that dropped it (or 'admitted') — the streaming twin of
+    // the batch funnel's q_funnel_report/q_funnel_ledger, written
+    // BEFORE the all-dropped early return so an empty batch result
+    // still leaves its audit trail. Batch-scoped leaf → idempotent
+    // under replay, folded by the same compaction as the stores.
+    if (ledger) {
+      def ids(df: DataFrame) = df.select(col("doc_id"))
+      def at(df: DataFrame, s: String) = ids(df).withColumn("stage", lit(s))
+      val survived = docs.join(intraDrops, Seq("doc_id"), "left_anti")
+      val stages = Seq(
+        at(ids(input).except(ids(gated)), "quality"),
+        at(ids(gated).except(ids(classed)), "classifier"),
+        at(ids(classed).except(ids(decontD)), "decontamination"),
+        at(ids(decontD).except(ids(docs)), "novelty"),
+        at(docs.join(intraDrops, Seq("doc_id"), "left_semi"), "near_dup_intra")) ++
+        // a doc in BOTH drop sets counts once, at the intra stage
+        vsIndex.map(v => at(survived.join(v, Seq("doc_id"), "left_semi"), "near_dup_index")) :+
+        at(admittedDocs, "admitted")
+      write(stages.reduce(_.unionByName(_))
+        .withColumn("admitted", col("stage") === "admitted")
+        // the batch id rides as a DATA column too: compaction folds
+        // leaves into consolidated segments whose PARTITION id is a
+        // fresh negative — the data column keeps per-batch history
+        .withColumn("ledger_batch_id", lit(batchId)), ledgerStore, batchId)
+    }
+
+    if (Metrics.long(kept, "n", admittedDocs.count()) == 0) return
+    // both writes are map-only reads of the admitted checkpoint
+    write(admittedDocs.select(col("doc_id"), col("text")), admittedStore, batchId)
+    write(Dedup.bandKeys(admittedDocs.filter(col(mh.head).isNotNull), "doc_id")
+      .withColumnRenamed("doc_id", "corpus_id"), index, batchId)
+    // the always-write rule: grams are written whenever the store
+    // exists (a gate-on construction made it), gate on or off — a gate
+    // on→off→on sequence must not leave the off period's admitted docs
+    // unindexed (their span-stitched redundancy would silently pass
+    // the gate forever)
+    if (grams.exists)
+      write(Dedup.gramIndex(admittedDocs, noveltyNgram), grams, batchId)
   }
 
   /** Watch `watchDir` for JSONL document files (doc_id BIGINT, text). */

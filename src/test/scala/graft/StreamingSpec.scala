@@ -230,7 +230,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup ingest filters vs the persistent band index, idempotently") {
     val work = java.nio.file.Files.createTempDirectory("graft_sdi").toString
-    val ingest = new graft.streaming.StreamingDedupIngest(spark, work, simThreshold = 0.5)
+    val ingest = new graft.streaming.StreamingDedupIngest(spark, work, simThreshold = 0.5,
+      compactEvery = 2)
     val d1 = "the quick brown fox jumps over the lazy dog again and again"
     val d2 = "pack my box with five dozen liquor jugs for the long winter trip"
     // batch 0: two novel docs + an intra-batch near-dup of d1 (first word cut)
@@ -243,12 +244,20 @@ class StreamingSpec extends SparkSpec {
     val jobs = SparkMeter.measure(spark)(ingest.processBatch(Seq(
       (10L, d2.substring(d2.indexOf(' ') + 1)), (11L, d3)).toDF("doc_id", "text"), 1L))._2.jobs.size
     info(s"steady micro-batch ran $jobs jobs")
-    assert(jobs <= 21, s"a steady micro-batch ran $jobs jobs, above its ceiling of 21")
+    assert(jobs <= 9, s"a steady micro-batch ran $jobs jobs, above its ceiling of 9")
     assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L, 11L))
     // replaying batch 1 overwrites its own leaves — same result
     ingest.processBatch(Seq(
       (10L, d2.substring(d2.indexOf(' ') + 1)), (11L, d3)).toDF("doc_id", "text"), 1L)
     assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L, 11L))
+    // batch 2 folds batches 0 and 1 first (compactEvery = 2): a near-dup
+    // of the folded d3 is still dropped, within the compaction ceiling
+    val foldJobs = SparkMeter.measure(spark)(ingest.processBatch(Seq(
+      (20L, d3.substring(d3.indexOf(' ') + 1)), (21L, "an unrelated line of text on parquet footers and row groups"))
+      .toDF("doc_id", "text"), 2L))._2.jobs.size
+    info(s"compaction micro-batch ran $foldJobs jobs")
+    assert(foldJobs <= 13, s"a compaction micro-batch ran $foldJobs jobs, above its ceiling of 13")
+    assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L, 11L, 21L))
   }
 
   test("streaming ingest compaction bounds leaf dirs; folded docs still dedup; replay idempotent") {
@@ -579,6 +588,107 @@ class StreamingSpec extends SparkSpec {
     // (previous test) still owns the positive-leaf case
   }
 
+  /** The two batches of one ingest run: batch 0 (possibly empty)
+    * seeds the band index, batch 1 meets it. Texts come from a 40-word
+    * vocabulary, so band buckets collide often; the documents are base
+    * texts, exact repeats and 1-6-token edits of them (near-dups on
+    * both sides of either threshold) and 0-2-token documents too short
+    * to shingle, under distinct shuffled ids. */
+  private val dropBatchesGen: org.scalacheck.Gen[Seq[Seq[(Long, String)]]] = {
+    import org.scalacheck.Gen
+    val word = Gen.choose(0, 39).map(i => s"tok$i")
+    val text = Gen.choose(3, 24).flatMap(Gen.listOfN(_, word))
+    def variant(base: List[String]): Gen[List[String]] = for {
+      edits <- Gen.choose(0, 6)
+      at <- Gen.listOfN(edits, Gen.choose(0, base.size - 1))
+      ws <- Gen.listOfN(edits, word)
+    } yield at.zip(ws).foldLeft(base) { case (b, (i, w)) => b.updated(i, w) }
+    for {
+      bases <- Gen.choose(1, 10).flatMap(Gen.listOfN(_, text))
+      copies <- Gen.choose(0, 24).flatMap(Gen.listOfN(_, Gen.oneOf(bases).flatMap(variant)))
+      short <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.choose(0, 2).flatMap(Gen.listOfN(_, word))))
+      texts = (bases ++ copies ++ short).map(_.mkString(" "))
+      ids <- Gen.pick(texts.size, 1L to 5000L)
+      split <- Gen.choose(0, texts.size - 1)
+    } yield {
+      val rnd = new scala.util.Random(ids.sum)
+      val docs = rnd.shuffle(rnd.shuffle(ids.toSeq).zip(texts))
+      Seq(docs.take(split), docs.drop(split))
+    }
+  }
+
+  private case class DropCase(threshold: Double, gate: Boolean, ledger: Boolean)
+
+  /** The leaves one batch should write, by the pair-join formulation
+    * the grouped pass replaced: `lshCandidatePairs` with the `est_sim`
+    * filter within the batch, `bandMatches` against the index. Returns
+    * (admitted (doc_id, text) rows, band rows, ledger (doc_id, stage)
+    * rows). */
+  private def referenceLeaves(batch: Seq[(Long, String)], c: DropCase,
+                              index: Option[org.apache.spark.sql.DataFrame]) =
+    graft.util.CacheScope.loan {
+      import graft.dedup.Dedup
+      val input = batch.toDF("doc_id", "text")
+      val docs = if (!c.gate) input else graft.curation.Curation.qualityGate(input,
+        graft.curation.Curation.Config(minTokens = 3, minStopwords = 0)).drop("n_tokens")
+      val sig = Dedup.minhashSignatures(docs, "doc_id")
+      val intra = Dedup.lshCandidatePairs(sig, "doc_id").filter($"est_sim" >= c.threshold)
+        .select($"id_b".as("doc_id")).distinct()
+      val vsIndex = index.map(Dedup.bandMatches(_, sig, "doc_id").select($"batch_id".as("doc_id")))
+      val survived = docs.join(intra, Seq("doc_id"), "left_anti")
+      val admitted = vsIndex.fold(survived)(survived.join(_, Seq("doc_id"), "left_anti"))
+      val bands = Dedup.bandKeys(sig.join(admitted, Seq("doc_id"), "left_semi"), "doc_id")
+      def ids(df: org.apache.spark.sql.DataFrame) = df.select($"doc_id").as[Long].collect().toSet
+      val ledger = ids(input).diff(ids(docs)).map(_ -> "quality") ++
+        ids(docs.join(intra, Seq("doc_id"), "left_semi")).map(_ -> "near_dup_intra") ++
+        vsIndex.fold(Set.empty[Long])(v => ids(survived.join(v, Seq("doc_id"), "left_semi")))
+          .map(_ -> "near_dup_index") ++
+        ids(admitted).map(_ -> "admitted")
+      (admitted.as[(Long, String)].collect().toSet,
+        bands.as[(Long, Int, String)].collect().sorted.toSeq, ledger)
+    }
+
+  test("grouped near-dup pass == the pair-join formulation on random batches; an empty batch writes no leaf") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    def leaf(work: String, store: String, b: Int) = java.nio.file.Paths.get(s"$work/$store/batch_id=$b")
+    def read(work: String, store: String, b: Int) =
+      if (Files.isDirectory(leaf(work, store, b))) Some(spark.read.parquet(leaf(work, store, b).toString))
+      else None
+    val tally = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for (seed <- 1 to 8) {
+      val c = DropCase(if (seed % 2 == 0) 0.5 else 0.9, gate = seed % 4 >= 2, ledger = seed % 3 != 0)
+      val batches = dropBatchesGen.apply(Gen.Parameters.default, Seed(9100L + seed)).get
+      val work = Files.createTempDirectory("graft_sdeq").toString
+      val ingest = new graft.streaming.StreamingDedupIngest(spark, work, simThreshold = c.threshold,
+        quality = if (c.gate) Some(graft.curation.Curation.Config(minTokens = 3, minStopwords = 0)) else None,
+        ledger = c.ledger)
+      batches.zipWithIndex.foreach { case (batch, b) =>
+        val index = if (b == 0) None else read(work, "band_index", 0)
+        val (admitted, bands, ledger) = referenceLeaves(batch, c, index)
+        ledger.foreach { case (_, stage) => tally(stage) += 1 }
+        ingest.processBatch(batch.toDF("doc_id", "text"), b.toLong)
+        val ctx = s"seed $seed batch $b $c"
+        assert(read(work, "admitted", b).fold(Set.empty[(Long, String)])(
+          _.select($"doc_id", $"text").as[(Long, String)].collect().toSet) == admitted, ctx)
+        assert(read(work, "band_index", b).fold(Seq.empty[(Long, Int, String)])(
+          _.as[(Long, Int, String)].collect().sorted.toSeq) == bands, ctx)
+        val gotLedger = read(work, "ledger", b).map(
+          _.select($"doc_id", $"stage").as[(Long, String)].collect().toSet)
+        if (batch.isEmpty || !c.ledger) assert(gotLedger.isEmpty, ctx)
+        else assert(gotLedger.contains(ledger), ctx)
+      }
+    }
+    info(s"dispositions over the samples: ${tally.toSeq.sorted.mkString(", ")}")
+    assert(Seq("quality", "near_dup_intra", "near_dup_index", "admitted").forall(tally(_) > 0))
+    // an empty batch writes no leaf at all, ledger included
+    val work = Files.createTempDirectory("graft_sdeq_empty").toString
+    new graft.streaming.StreamingDedupIngest(spark, work, ledger = true,
+      quality = Some(graft.curation.Curation.Config(minTokens = 3, minStopwords = 0)))
+      .processBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"), 0L)
+    assert(Seq("band_index", "admitted", "ledger").forall(s => !Files.exists(leaf(work, s, 0))))
+  }
+
   test("ledger: one disposition row per input doc, stages attributed, empty-result batch still audited") {
     val work = java.nio.file.Files.createTempDirectory("graft_sled").toString
     val cfg = graft.curation.Curation.Config(minTokens = 3, minStopwords = 0)
@@ -592,6 +702,11 @@ class StreamingSpec extends SparkSpec {
     // batch 1: a replay of dA (vs-index drop) → zero admissions, yet
     // the ledger row must exist
     ingest.processBatch(Seq((10L, dA)).toDF("doc_id", "text"), 1L)
+    // batch 2: a non-empty batch the quality gate empties — nothing
+    // reaches dedup, yet its ledger leaf is written
+    ingest.processBatch(Seq((20L, "two tokens")).toDF("doc_id", "text"), 2L)
+    assert(Files.isDirectory(java.nio.file.Paths.get(s"$work/ledger/batch_id=2")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$work/admitted/batch_id=2")))
     val led = ingest.ledgerFrame().get
       .select($"batch_id", $"doc_id", $"stage", $"admitted")
       .as[(Long, Long, String, Boolean)].collect().toSet
@@ -599,10 +714,11 @@ class StreamingSpec extends SparkSpec {
       (0L, 1L, "admitted", true),
       (0L, 2L, "quality", false),
       (0L, 3L, "near_dup_intra", false),
-      (1L, 10L, "near_dup_index", false)))
+      (1L, 10L, "near_dup_index", false),
+      (2L, 20L, "quality", false)))
     // per-batch conservation: ledger rows == input docs == admitted + dropped
     val byBatch = led.groupBy(_._1).view.mapValues(_.size).toMap
-    assert(byBatch == Map(0L -> 3, 1L -> 1))
+    assert(byBatch == Map(0L -> 3, 1L -> 1, 2L -> 1))
     // the admitted store agrees with the ledger's admitted rows
     assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet ==
       led.filter(_._4).map(_._2))
@@ -619,7 +735,7 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.StreamingDedupIngest.FunnelStages)
     assert(steps.forall(_._3 == "Success"))
     val counts = steps.map(s => s._2 -> s._4).toMap
-    assert(counts == Map("quality" -> 1L, "classifier" -> 0L,
+    assert(counts == Map("quality" -> 2L, "classifier" -> 0L,
       "decontamination" -> 0L, "novelty" -> 0L, "near_dup_intra" -> 1L,
       "near_dup_index" -> 1L, "admitted" -> 1L), counts.toString)
     // an unledgered ingest has nothing to roll up
