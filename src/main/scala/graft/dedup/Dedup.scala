@@ -84,25 +84,41 @@ object Dedup {
     // too-short-to-shingle filter is the cheap token-count predicate
     // (≡ sig IS NOT NULL) — filtering on sig itself would push a full
     // signature recompute into the scan.
-    val sig = df
-      .filter(size(tokensCol) >= shingleN)
-      .select(col(idCol), TextFns.minhashSig(tokensCol, shingleN, k).as("sig"))
-    sig.select(col(idCol) +: (0 until k).map(i => col("sig").getItem(i).as(f"mh$i%02d")): _*)
+    val (shingles, signature) = signed(tokensCol, shingleN, k)
+    val sig = df.filter(shingles).select(col(idCol), signature.as("sig"))
+    sig.select(col(idCol) +: sigCols(col("sig"), k): _*)
   }
 
-  /** The minhash column names mh00..mhNN of a k-permutation signature. */
-  def minhashCols(k: Int = 16): IndexedSeq[String] = (0 until k).map(i => f"mh$i%02d")
+  // the signature the streaming ingest keeps beside each document:
+  // minhashSignatures' defaults, 16 permutations of 3-shingles
+  private val IngestK = 16
+  private val IngestShingleN = 3
 
-  /** Every row of `df` with the [[minhashSignatures]] columns appended,
-    * null where the document is too short to shingle (the rows that
-    * operator drops) — one frame for a caller that keeps both.
+  private def mhCol(i: Int): String = f"mh$i%02d"
+
+  /** The shingle test of a token array (a document too short to
+    * shingle has no signature) and its k-permutation signature. */
+  private def signed(tokens: Column, shingleN: Int, k: Int): (Column, Column) =
+    (size(tokens) >= shingleN, TextFns.minhashSig(tokens, shingleN, k))
+
+  /** The k columns mh00..mhNN of a signature array column. */
+  private def sigCols(sig: Column, k: Int): Seq[Column] =
+    (0 until k).map(i => sig.getItem(i).as(mhCol(i)))
+
+  /** The minhash columns [[withMinhash]] appends: mh00..mh15. */
+  val MinhashCols: IndexedSeq[String] = (0 until IngestK).map(mhCol)
+
+  /** Every row of `df` with the [[minhashSignatures]] columns appended
+    * (16 permutations of 3-shingles of its `text`), null where the
+    * document is too short to shingle (the rows that operator drops) —
+    * one frame for a caller that keeps both.
     */
-  def withMinhash(df: DataFrame, k: Int = 16, shingleN: Int = 3): DataFrame = {
+  def withMinhash(df: DataFrame): DataFrame = {
     val cols = df.columns.toIndexedSeq.map(col)
+    val (shingles, signature) = signed(col("_tk"), IngestShingleN, IngestK)
     df.select(cols :+ TextFns.tokens(col("text")).as("_tk"): _*)
-      .select(cols :+ when(size(col("_tk")) >= shingleN,
-        TextFns.minhashSig(col("_tk"), shingleN, k)).as("_sig"): _*)
-      .select(cols ++ minhashCols(k).zipWithIndex.map { case (c, i) => col("_sig").getItem(i).as(c) }: _*)
+      .select(cols :+ when(shingles, signature).as("_sig"): _*)
+      .select(cols ++ sigCols(col("_sig"), IngestK): _*)
   }
 
   /** Band keys of a signature frame: one (id, band_id, band_hash) row
@@ -115,7 +131,7 @@ object Dedup {
                k: Int = 16, rowsPerBand: Int = 2, carry: Seq[String] = Nil): DataFrame = {
     val nBands = k / rowsPerBand
     val bandCols = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(f"mh${b * rowsPerBand + r}%02d"))
+      val parts = (0 until rowsPerBand).map(r => col(mhCol(b * rowsPerBand + r)))
       struct(lit(b).as("band_id"), md5(concat_ws("_", parts: _*)).as("band_hash")).as(s"b$b")
     }
     val kept = (idCol +: carry).map(col)
@@ -126,21 +142,21 @@ object Dedup {
 
   /** The near-dup drop set of one batch in a single grouped pass: the
     * ids `b` for which some `a < b` shares a band with `b` and agrees
-    * on at least `simThreshold` of the k minhashes — the `id_b` column
+    * on at least `simThreshold` of the 16 minhashes — the `id_b` column
     * of [[lshCandidatePairs]] filtered on `est_sim >= simThreshold`,
     * without its self-join, its distinct and its two signature joins.
-    * `banded` is [[bandKeys]] output carrying [[minhashCols]]. One
-    * shuffle on the band key; each bucket of m rows is compared in
-    * place (m² work, the self-join's bound). An id comes back once per
-    * bucket that drops it.
+    * `banded` is [[bandKeys]] output carrying [[MinhashCols]] from a
+    * [[withMinhash]] frame. One shuffle on the band key; an id comes
+    * back once per bucket that drops it. Each bucket is collected into
+    * one row and compared in place (m² work, the self-join's bound), so
+    * a bucket must fit in memory: bounded for a micro-batch, not for a
+    * corpus, where [[lshCandidatePairs]]' `maxBandBucket` applies.
     */
-  def lshDrops(banded: DataFrame, idCol: String, simThreshold: Double,
-               k: Int = 16): DataFrame = {
-    val mh = minhashCols(k)
+  private[graft] def lshDrops(banded: DataFrame, idCol: String, simThreshold: Double): DataFrame = {
     def estSim(a: Column, b: Column): Column =
-      mh.map(c => when(a(c) === b(c), 1).otherwise(0)).reduce(_ + _).cast("double") / k
+      MinhashCols.map(c => when(a(c) === b(c), 1).otherwise(0)).reduce(_ + _).cast("double") / IngestK
     banded.groupBy(col("band_id"), col("band_hash"))
-      .agg(collect_list(struct((idCol +: mh).map(col): _*)).as("m"))
+      .agg(collect_list(struct((idCol +: MinhashCols).map(col): _*)).as("m"))
       .select(explode(filter(col("m"), b => exists(col("m"), a =>
         a(idCol) < b(idCol) && estSim(a, b) >= simThreshold))).as("d"))
       .select(col(s"d.$idCol").as(idCol))
@@ -216,7 +232,7 @@ object Dedup {
     val sa = sig.toDF(sig.columns.toIndexedSeq.map(c => if (c == idCol) "id_a" else s"a_$c"): _*)
     val sb = sig.toDF(sig.columns.toIndexedSeq.map(c => if (c == idCol) "id_b" else s"b_$c"): _*)
     val agree = (0 until k)
-      .map(i => when(col(f"a_mh$i%02d") === col(f"b_mh$i%02d"), 1).otherwise(0))
+      .map(i => when(col(s"a_${mhCol(i)}") === col(s"b_${mhCol(i)}"), 1).otherwise(0))
       .reduce(_ + _)
     cand.join(sa, "id_a").join(sb, "id_b")
       .select(col("id_a"), col("id_b"), (agree.cast("double") / k).as("est_sim"))

@@ -255,8 +255,8 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
 
     // the batch's band keys, computed once: they feed both the
     // within-batch drop pass and the index match
-    val mh = Dedup.minhashCols()
-    val banded = Dedup.bandKeys(docs.filter(col(mh.head).isNotNull), "doc_id", carry = mh)
+    val signed = col(Dedup.MinhashCols.head).isNotNull
+    val banded = Dedup.bandKeys(docs.filter(signed), "doc_id", carry = Dedup.MinhashCols)
     val intraDrops = Dedup.lshDrops(banded, "doc_id", simThreshold)
     // the batch_id partition column is not selected: only the band
     // key takes part in the match
@@ -297,9 +297,11 @@ class StreamingDedupIngest(spark: SparkSession, workDir: String,
     }
 
     if (Metrics.long(kept, "n", admittedDocs.count()) == 0) return
-    // both writes are map-only reads of the admitted checkpoint
-    write(admittedDocs.select(col("doc_id"), col("text")), admittedStore, batchId)
-    write(Dedup.bandKeys(admittedDocs.filter(col(mh.head).isNotNull), "doc_id")
+    // both writes are map-only reads of the admitted checkpoint; the
+    // admitted leaf is one file, not one per partition the drop pass's
+    // shuffle left on the checkpoint
+    write(admittedDocs.select(col("doc_id"), col("text")).coalesce(1), admittedStore, batchId)
+    write(Dedup.bandKeys(admittedDocs.filter(signed), "doc_id")
       .withColumnRenamed("doc_id", "corpus_id"), index, batchId)
     // the always-write rule: grams are written whenever the store
     // exists (a gate-on construction made it), gate on or off — a gate

@@ -6,10 +6,13 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.observedMetrics
 /** Non-blocking Observation resolution shared by the batch and
   * streaming runners.
   *
-  * Inside `foreachBatch` the observation machinery misbehaves (no
-  * listener event, or a schemaless metrics row that NPEs) — so poll
-  * briefly, treat ANY failure as absent, and let the caller fall back
-  * to an explicit count.
+  * An observation is normally complete when its action returns, also
+  * inside `foreachBatch`: on Spark 4.1 the text ingest's observed
+  * counts resolve there at once (StreamingSpec checks that its
+  * `start()` path runs no fallback count). Resolution still polls
+  * briefly and treats ANY failure (no metrics yet, or a schemaless
+  * metrics row that NPEs) as absent, so the caller's explicit count
+  * is the fallback.
   */
 object Metrics {
 

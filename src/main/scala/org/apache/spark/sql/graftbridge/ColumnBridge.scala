@@ -16,9 +16,8 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Non-blocking Observation read (`getOrEmpty` is private[spark]).
-    * Empty until the observed action's listener has fired — and it
-    * never fires for actions run inside foreachBatch, where callers
-    * must fall back to a count.
+    * Empty until the observed action has completed; callers fall back
+    * to a count when it stays empty ([[graft.util.Metrics]]).
     */
   def observedMetrics(o: org.apache.spark.sql.Observation): Map[String, Any] =
     o.getOrEmpty

@@ -260,6 +260,47 @@ class StreamingSpec extends SparkSpec {
     assert(ingest.admitted().get.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L, 11L, 21L))
   }
 
+  test("streaming dedup ingest run by start() costs the jobs of a direct processBatch call") {
+    // the input and admitted counts are observed on checkpoint jobs; an
+    // observation that never arrived under foreachBatch would cost a
+    // fallback count job there and show as an extra job per batch, and
+    // two lost observations (9 jobs) break the ceiling of 8
+    val watch = Files.createTempDirectory("graft_sdi_land")
+    val streamed = new graft.streaming.StreamingDedupIngest(spark,
+      Files.createTempDirectory("graft_sdi_stream").toString, simThreshold = 0.5)
+    val direct = new graft.streaming.StreamingDedupIngest(spark,
+      Files.createTempDirectory("graft_sdi_direct").toString, simThreshold = 0.5)
+    val d1 = "the quick brown fox jumps over the lazy dog again and again"
+    val d2 = "pack my box with five dozen liquor jugs for the long winter trip"
+    val d3 = "a completely different document about spark catalyst and tungsten"
+    val batches = Seq(
+      Seq(1L -> d1, 2L -> d2, 3L -> d1.substring(d1.indexOf(' ') + 1)),
+      Seq(10L -> d2.substring(d2.indexOf(' ') + 1), 11L -> d3))
+    batches.zipWithIndex.foreach { case (docs, b) =>
+      val file = watch.resolve(s"batch$b.json")
+      Files.writeString(file, docs.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }
+        .mkString("", "\n", "\n"))
+      def timed(body: => Unit) = {
+        val t0 = System.nanoTime()
+        val jobs = SparkMeter.measure(spark)(body)._2.jobs.size
+        (jobs, (System.nanoTime() - t0) / 1000000)
+      }
+      val (streamJobs, streamMs) = timed {
+        val q = streamed.start(watch.toString, availableNow = true)
+        assert(q.awaitTermination(120000), "the AvailableNow run did not finish")
+        assert(q.lastProgress.batchId == b)
+      }
+      val (directJobs, directMs) = timed(direct.processBatch(
+        spark.read.schema("doc_id BIGINT, text STRING").json(file.toString), b.toLong))
+      info(s"batch $b: start() $streamJobs jobs in $streamMs ms, processBatch $directJobs jobs in $directMs ms")
+      assert(streamJobs == directJobs, s"batch $b ran $streamJobs jobs under start(), $directJobs direct")
+      assert(streamJobs <= 8, s"batch $b ran $streamJobs jobs under start(), above its ceiling of 8")
+    }
+    val ids = Set(1L, 2L, 11L)
+    assert(streamed.admitted().get.select($"doc_id").as[Long].collect().toSet == ids)
+    assert(direct.admitted().get.select($"doc_id").as[Long].collect().toSet == ids)
+  }
+
   test("streaming ingest compaction bounds leaf dirs; folded docs still dedup; replay idempotent") {
     import scala.jdk.CollectionConverters._
     def doc(i: Int) = s"doc $i unique token alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i"
